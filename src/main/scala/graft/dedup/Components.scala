@@ -135,13 +135,17 @@ object Components {
     * lazy plan may execute more than once. Output is bit-equal to
     * [[connectedComponents]] — the union-find registers both endpoints
     * of every edge, so edge orientation/symmetry never changes the
-    * labeling. */
+    * labeling. `maxEdges` is trusted as an UPPER bound: an undercount
+    * routes a large graph through the single-task union-find (one
+    * straggler task holding every edge), so pass a measured count. */
   private[graft] def connectedComponentsBounded(pairs: DataFrame, a: String, b: String,
       maxEdges: Long, maxIter: Int = 20,
-      localThreshold: Long = LocalEdgeThreshold): DataFrame =
+      localThreshold: Long = LocalEdgeThreshold): DataFrame = {
+    require(maxEdges >= 0, s"maxEdges must be a non-negative edge-count bound, got $maxEdges")
     if (maxEdges <= localThreshold)
       localComponents(pairs.select(col(a).as("u"), col(b).as("v")))
     else connectedComponents(pairs, a, b, maxIter, localThreshold)
+  }
 
   /** (id, cluster_id) for every node in `pairs`; cluster_id = min
     * node id of the component. Deterministic. Graphs at or under

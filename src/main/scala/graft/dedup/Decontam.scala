@@ -104,16 +104,16 @@ object Decontam {
     }
     // contamination-bounded and consumed twice below (doc restriction
     // + final pair join) — checkpoint once so the screen never re-runs
-    val graded = graft.operators.Checkpoints.eager(graded0)
+    val (graded, gradedN) = graft.operators.Checkpoints.eagerCount(graded0)
     // MEASURED broadcast bound, not a boundedness argument: the graded
     // relation is usually contamination-sized, but with minHits=1 on a
     // contaminated corpus it can outgrow what the driver can hold as a
     // broadcast (guide §3.1/§5 — driver OOM is the failure mode). The
-    // count is one narrow scan of the just-materialized checkpoint;
+    // count comes free with the checkpoint's materializing job;
     // above the bound the grading joins below fall back to shuffle
     // joins (bit-equal results — join strategy never changes rows),
     // whose cost scales with the cluster instead of the driver heap.
-    val gradedFits = graded.count() <= maxBroadcastPairs
+    val gradedFits = gradedN <= maxBroadcastPairs
     def gradedHint(df: DataFrame): DataFrame = if (gradedFits) broadcast(df) else df
     // Per-DOC gram counting, once per flagged doc. The previous shape
     // joined each doc's gram ARRAY to its flagged pairs FIRST and

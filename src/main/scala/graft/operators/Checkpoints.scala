@@ -26,6 +26,11 @@ import org.apache.spark.sql.DataFrame
   * materialized: a checkpointed plan has no lineage to recompute
   * from, so re-executing a released DataFrame fails. That is the
   * contract: `releaseAll()` marks a query boundary.
+  *
+  * There is one way to materialize: [[eagerCount]] (checkpoint + the
+  * row count its own job yields, + an optional partitioning claim
+  * verified against the executed plan); [[eager]] is the same call
+  * without the count.
   */
 object Checkpoints {
   // WEAK keys: the registry is an eager-release accelerator, not an
@@ -40,15 +45,42 @@ object Checkpoints {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[RDD[_], java.lang.Boolean]())
 
-  /** Eager local checkpoint whose blocks are registered for release
-    * at the next query boundary. Drop-in for `df.localCheckpoint(true)`
-    * in library operators. */
-  def eager(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
-    org.apache.spark.sql.graft.CheckpointBlocks.rddOf(out)
-      .foreach(tracked.put(_, java.lang.Boolean.TRUE))
-    out
+  /** Materialize `df` as a local checkpoint whose blocks are
+    * registered for release at the next query boundary, and return it
+    * with its ROW COUNT. The count is free: the checkpoint is marked
+    * lazily and `count()` on its own RDD is the one job that
+    * materializes it — the same single job Spark's eager path runs,
+    * where a `Dataset.count()` on the checkpoint would plan a fresh
+    * aggregate over it and pay another (guide §1.2).
+    *
+    * `claim` names the keys that later joins / aggregates use. When
+    * the executed plan of `df` left its rows as exactly
+    * `HashPartitioning(claim, n)` — `repartition(n, claim)` below the
+    * checkpoint, or a plan that kept such a layout — the result
+    * carries that claim through the lineage cut
+    * ([[org.apache.spark.sql.graft.ClaimHashPartitioned]]), so keyed
+    * operators downstream do not re-exchange it. Any other layout
+    * (AQE-coalesced read, round-robin, other keys, a missing column)
+    * returns the plain checkpoint: the claim is read off the plan,
+    * never asserted. Nothing is repartitioned here — put
+    * `repartition(n, keys)` where it replaces an exchange the plan
+    * would insert anyway (below a distinct / aggregate on the same
+    * keys), never on top of one. */
+  def eagerCount(df: DataFrame, claim: Seq[String] = Nil): (DataFrame, Long) = {
+    val ck = df.localCheckpoint(eager = false)
+    val rdd = org.apache.spark.sql.graft.CheckpointBlocks.rddOf(ck)
+      .getOrElse(sys.error("a local checkpoint is not a LogicalRDD scan"))
+    tracked.put(rdd, java.lang.Boolean.TRUE)
+    val n = rdd.count()
+    val out =
+      if (claim.isEmpty) ck
+      else org.apache.spark.sql.graft.GraftPlans.claimIfHashPartitioned(ck, df, claim)
+    (out, n)
   }
+
+  /** [[eagerCount]] without the count — drop-in for
+    * `df.localCheckpoint(true)` in library operators. */
+  def eager(df: DataFrame, claim: Seq[String] = Nil): DataFrame = eagerCount(df, claim)._1
 
   // A tracked RDD can outlive its SparkContext (test harnesses stop
   // and rebuild sessions); the blocks died with the context, so
@@ -62,67 +94,6 @@ object Checkpoints {
       try r.unpersist(blocking = false)
       catch { case _: IllegalStateException => () }
     }
-
-  /** [[eager]] that also returns the checkpoint's ROW COUNT from the
-    * SAME materializing job: the checkpoint is marked lazily and the
-    * count() action materializes it — one driver-synchronous job where
-    * eager-then-count paid two. For loop bodies that checkpoint every
-    * round AND test convergence on the round's size (kCore, khop,
-    * ClusterLedger), that is one job per round saved (guide §1.2). */
-  def eagerCount(df: DataFrame): (DataFrame, Long) = {
-    val out = df.localCheckpoint(eager = false)
-    org.apache.spark.sql.graft.CheckpointBlocks.rddOf(out)
-      .foreach(tracked.put(_, java.lang.Boolean.TRUE))
-    val n = out.count()
-    (out, n)
-  }
-
-  /** [[eagerCount]] + [[eagerClaiming]]'s opportunistic partitioning
-    * claim, read AFTER the count materialized the checkpoint (the
-    * adaptive plan's final partitioning only exists post-execution). */
-  def eagerCountClaiming(df: DataFrame, keys: Seq[String]): (DataFrame, Long) = {
-    val (ck, n) = eagerCount(df)
-    (org.apache.spark.sql.graft.GraftPlans.claimIfHashPartitioned(ck, df, keys), n)
-  }
-
-  /** [[eager]] for a loop-INVARIANT relation that per-round joins /
-    * aggregates key on `keys`: physically hash-clusters the rows
-    * (`repartition(n, keys)`), checkpoints, and carries the
-    * partitioning claim through the lineage cut
-    * ([[org.apache.spark.sql.graft.ClaimHashPartitioned]]) — so each
-    * round's join exchanges only the other side, instead of
-    * re-exchanging this relation every round (guide §2.4; a bare
-    * checkpoint scan reports UnknownPartitioning and round 15 measured
-    * pre-partitioning WITHOUT the claim as a pure regression).
-    *
-    * `n` defaults to the session's shuffle-partition count — the same
-    * count EnsureRequirements gives the per-round exchanges, so the
-    * co-partitioned joins line up without extra exchanges on either
-    * side; scale-adaptive via `spark.sql.shuffle.partitions`, never a
-    * pinned constant. */
-  def eagerHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    eagerClaiming(df.repartition(n, keys.map(col): _*), keys)
-  }
-
-  /** [[eager]] + an OPPORTUNISTIC partitioning claim: checkpoint `df`
-    * exactly as given and claim `HashPartitioning(keys, n)` only if
-    * the executed plan's final output partitioning actually is that
-    * (read off the plan, never asserted blind — AQE-coalesced reads,
-    * round-robin layouts etc. simply keep the plain checkpoint).
-    *
-    * The zero-extra-exchange pattern: put `repartition(n, keys)`
-    * BELOW a distinct/aggregate whose grouping keys contain `keys` —
-    * hash(keys) satisfies that operator's ClusteredDistribution, so
-    * the repartition REPLACES the exchange the operator would have
-    * inserted anyway, and the claim then rides downstream joins /
-    * aggregates keyed on `keys` for free (guide §2.4; the round-15
-    * attempt ADDED the exchange on top and measured a regression). */
-  def eagerClaiming(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val ck = eager(df)
-    org.apache.spark.sql.graft.GraftPlans.claimIfHashPartitioned(ck, df, keys)
-  }
 
   /** Release the blocks behind a checkpoint produced by [[eager]]
     * right now — for loop intermediates superseded by the next

@@ -36,10 +36,11 @@ object GraphOps {
     val e = Checkpoints.eager(edges.select(col("src"), col("dst")).distinct())
     // claimed on id (one extra NODE-sized exchange, paid once): the
     // per-round left join back to the node list re-uses this layout
-    // instead of re-exchanging the node list every round (guide §2.4)
-    val nodes = Checkpoints.eagerHashPartitioned(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct(), Seq("id"))
-    val n = nodes.count()
+    // instead of re-exchanging the node list every round (guide §2.4);
+    // the node count rides the checkpoint's own materializing job
+    val (nodes, n) = Checkpoints.eagerCount(
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
+        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")), Seq("id"))
     require(n > 0, "graph has no nodes")
     val base = scale / n              // floor — mirrors integer // in the oracle
     val tele = (15L * base) / 100L
@@ -51,7 +52,7 @@ object GraphOps {
     // degree-aggregate exchange and the join back), and the claim
     // carries hash(src) through the checkpoint so no per-round join
     // ever re-exchanges the edge relation (guide §2.4)
-    val ed = Checkpoints.eagerClaiming(
+    val ed = Checkpoints.eager(
       e.repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
         .withColumn("d", count(lit(1)).over(Window.partitionBy("src"))),
       Seq("src"))
@@ -99,14 +100,15 @@ object GraphOps {
     val e = Checkpoints.eager(edges.select(col("src"), col("dst")).distinct())
     val nodes0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
     // claimed on id / src for the same per-round reuse as [[pageRank]]
-    val nodes = Checkpoints.eagerHashPartitioned(
+    val nodes = Checkpoints.eager(
       nodes0.join(seeds.select(col("id")).distinct().withColumn("__s", lit(1L)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed")), Seq("id"))
+        .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed"))
+        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")), Seq("id"))
     val ns = nodes.agg(sum("seed")).head().getLong(0)
     require(ns > 0, "no seed appears in the graph")
     val base = scale / ns
     val tele = (15L * base) / 100L
-    val ed = Checkpoints.eagerClaiming(
+    val ed = Checkpoints.eager(
       e.repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
         .withColumn("d", count(lit(1)).over(Window.partitionBy("src"))),
       Seq("src"))
@@ -148,7 +150,7 @@ object GraphOps {
     // claimed on src (the per-hop frontier join's key): the edge
     // relation is exchanged once here and never inside the hop loop.
     // Repartition below the dedup — one exchange for the whole build
-    val e = Checkpoints.eagerClaiming(
+    val e = Checkpoints.eager(
       edges.select(col("src"), col("dst"))
         .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
         .distinct(), Seq("src"))
@@ -213,7 +215,7 @@ object GraphOps {
     // The repartition sits BELOW the dedup: hash(src) satisfies the
     // distinct's ClusteredDistribution(src, dst), so this build has
     // exactly one exchange, same as the plain distinct had
-    val sym = Checkpoints.eagerClaiming(
+    val sym = Checkpoints.eager(
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
         .distinct(), Seq("src"))
@@ -273,13 +275,13 @@ object GraphOps {
     val e = Checkpoints.eager(
       edges.select(col("src"), col("dst"), col("w"))
         .groupBy("src", "dst").agg(sum("w").as("w")))
-    val nodes = Checkpoints.eagerHashPartitioned(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct(), Seq("id"))
-    val n = nodes.count()
+    val (nodes, n) = Checkpoints.eagerCount(
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
+        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")), Seq("id"))
     require(n > 0, "graph has no nodes")
     val base = scale / n
     val tele = (15L * base) / 100L
-    val ed = Checkpoints.eagerClaiming(
+    val ed = Checkpoints.eager(
       e.repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
         .withColumn("wsum", sum("w").over(Window.partitionBy("src"))),
       Seq("src"))
@@ -335,7 +337,7 @@ object GraphOps {
     // then satisfy the join's distribution from one up-front
     // clustering — the self-join of the oriented edge list (the big
     // fan-out step) runs with no exchange on either side
-    val oriented = Checkpoints.eagerClaiming(
+    val oriented = Checkpoints.eager(
       oriented0.repartition(pairs.sparkSession.sessionState.conf.numShufflePartitions, col("s")),
       Seq("s"))
     val wedges = oriented.as("e1").join(oriented.as("e2"),
@@ -379,10 +381,10 @@ object GraphOps {
     // keyed on `a`, so neither re-exchanges the edge frame — only the
     // second (b-keyed) semi-join moves edge rows, one exchange per
     // round instead of three (guide §2.4)
-    // eagerCountClaiming: the round's size check reads off the SAME
-    // job that materializes the checkpoint — one driver-synchronous
-    // job per round, not two (guide §1.2)
-    var (cur, n) = Checkpoints.eagerCountClaiming(
+    // eagerCount: the round's size check reads off the SAME job that
+    // materializes the checkpoint — one driver-synchronous job per
+    // round, not two (guide §1.2)
+    var (cur, n) = Checkpoints.eagerCount(
       e0.select(col("src").as("a"), col("dst").as("b"))
         .union(e0.select(col("dst").as("a"), col("src").as("b")))
         .repartition(edges.sparkSession.sessionState.conf.numShufflePartitions, col("a"))
@@ -398,7 +400,7 @@ object GraphOps {
       // keep cur's hash(a) layout and the claim rides through the
       // checkpoint for free; when a planner picks a b-keyed shuffle
       // instead, the claim simply does not fire
-      val (next, m) = Checkpoints.eagerCountClaiming(
+      val (next, m) = Checkpoints.eagerCount(
         cur.join(keep, Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
           .select("a", "b"), Seq("a"))

@@ -207,8 +207,7 @@ object IvfIndex {
   def rebalance(spark: SparkSession, table: String,
       overfullFactor: Int = 2, lloydIters: Int = 1): RebalanceStats = {
     require(overfullFactor >= 1 && lloydIters >= 1)
-    val eager = graft.operators.Checkpoints.eager _
-    val release = graft.operators.Checkpoints.release _
+    import graft.operators.Checkpoints.{eager, eagerCount, release}
     val gen = liveGen(spark, table)
     val cents = spark.table(centsTable(table, gen))
     val live = spark.table(cellsTable(table))
@@ -217,10 +216,9 @@ object IvfIndex {
     val tot = sizes.agg(sum("sz").cast("long"), count(lit(1))).collect().head
     val (total, nc) = (tot.getLong(0), tot.getLong(1))
     val target = math.max(1L, total / math.max(nc, 1L))
-    val over = eager(sizes
+    val (over, nOver) = eagerCount(sizes
       .filter(col("sz") * nc > lit(overfullFactor.toLong) * total)
       .withColumn("kc", least(expr(s"(sz + ${target}L - 1) div ${target}L"), col("sz"))))
-    val nOver = over.count()
     if (nOver == 0) {
       Seq(sizes, over).foreach(release)
       return RebalanceStats(0L, 0L, 0L)
@@ -268,7 +266,7 @@ object IvfIndex {
     // fresh global ids above everything the index has ever used
     val maxId = cents.agg(max(col("c_id")).cast("long")).collect().head.getLong(0)
     val idW = Window.orderBy(col("c_id"), col("sub")) // ≤ Σ kc rows — tiny
-    val newCents = eager(trained
+    val (newCents, newCellCount) = eagerCount(trained
       .withColumn("new_id", lit(maxId) + row_number().over(idW)))
     // 1. append the re-assigned members under the new ids (dead rows
     //    under the old id stay until the centroid drop below — a crash
@@ -295,7 +293,6 @@ object IvfIndex {
     val nextCents = eager(cents
       .join(broadcast(over.select("c_id")), Seq("c_id"), "left_anti")
       .unionByName(newCents.select(col("new_id").as("c_id"), col("ce"), col("cnrm"))))
-    val newCellCount = newCents.count()
     nextCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(centsTable(table, nextGen))
     writeMeta(spark, table, nextGen)

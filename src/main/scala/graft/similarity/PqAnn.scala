@@ -1,5 +1,6 @@
 package graft.similarity
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -199,7 +200,7 @@ object PqAnn {
     // them concurrently so the second chain's jobs back-fill the
     // cores the first one's straggler tails leave idle (guide §2.6:
     // overlap independent jobs). Results are the two builds verbatim.
-    val (coarse, cbs) = trainConcurrently(
+    val (coarse, cbs) = trainConcurrently(corpus.sparkSession.sparkContext)(
       IvfAnn.centroids(corpus, numCentroids, lloydIters),
       codebooks(corpus, m, subDim, pqK, pqIters))
     // inverted lists carry CODES, not vectors — the PQ memory story.
@@ -217,13 +218,31 @@ object PqAnn {
     * jobs the scheduler interleaves FIFO — the second chain's tasks
     * back-fill executor cores the first chain's stage tails leave
     * idle, guide §2.6). The caller must guarantee independence; any
-    * failure propagates. */
-  private[similarity] def trainConcurrently[A, B](a: => A, b: => B): (A, B) = {
+    * failure propagates. `b` runs on a pool thread with its jobs under
+    * a fresh job tag (the caller's job group is left alone); if `a`
+    * throws, `b`'s tagged jobs are cancelled until `b` has returned
+    * and `a`'s failure is rethrown — no job of either chain outlives
+    * the call, so a following `Checkpoints.releaseAll()` never frees
+    * blocks under a running plan. */
+  private[similarity] def trainConcurrently[A, B](sc: SparkContext)(a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fb = Future(b)
-    val ra = a
+    val tag = s"graft-train-${java.util.UUID.randomUUID()}"
+    val fb = Future {
+      sc.addJobTag(tag)
+      try b finally sc.removeJobTag(tag)
+    }
+    val ra = try a catch {
+      case t: Throwable =>
+        // re-cancel until b returns: a job b submits after one cancel
+        // is caught by the next
+        while (!fb.isCompleted) {
+          sc.cancelJobsWithTag(tag)
+          scala.util.Try(Await.ready(fb, 100.millis))
+        }
+        throw t
+    }
     (ra, Await.result(fb, Duration.Inf))
   }
 

@@ -107,7 +107,7 @@ object SemDedup {
     // join for a 1:1 self-alignment — TWICE, once per pair side
     // (guide §2.4). The coarse quantizer and the PQ codebooks are
     // independent Lloyd chains — trained concurrently (guide §2.6).
-    val (cents, cbs) = PqAnn.trainConcurrently(
+    val (cents, cbs) = PqAnn.trainConcurrently(corpus.sparkSession.sparkContext)(
       IvfAnn.centroids(corpus, numCentroids, lloydIters),
       PqAnn.codebooks(corpus, m, subDim, pqK, pqIters))
     val sharded = shardedAssignment(corpus, numCentroids, lloydIters, maxCellSize,

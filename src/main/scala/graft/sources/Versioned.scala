@@ -1018,6 +1018,19 @@ object Versioned {
     }
   }
 
+  /** Run a publish body with an `eager` that checkpoints and records
+    * each frame, and release every recorded checkpoint in `finally` —
+    * a publish that loses the commit race (throws) must not leak
+    * cached blocks in a long-lived retrying driver. */
+  private def withReleasedCheckpoints[A](body: (DataFrame => DataFrame) => A): A = {
+    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df =>
+      val e = graft.operators.Checkpoints.eager(df)
+      toRelease += e
+      e
+    } finally toRelease.foreach(graft.operators.Checkpoints.release)
+  }
+
   /** Key-level MERGE publish — apply a drop as upsert/delete WITHOUT
     * rewriting the table (the missing half of the table-format story
     * next to whole-table [[promote]]). The live version must be
@@ -1081,16 +1094,7 @@ object Versioned {
     keys.foreach(k => require(drop.columns.contains(k),
       s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
 
-    // every eager checkpoint registers here and releases in the
-    // finally — a publish that loses the commit race (throws) must not
-    // leak cached blocks in a long-lived retrying driver
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def eager(df: DataFrame): DataFrame = {
-      val e = graft.operators.Checkpoints.eager(df)
-      toRelease += e
-      e
-    }
-    try {
+    withReleasedCheckpoints { eager =>
     val d = eager(drop
       .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
       .withColumn("bkt", bktCol(keys, spec.numBuckets)))
@@ -1363,7 +1367,7 @@ object Versioned {
         MergeReport(merged = true, version, dirName, upserted, inserted, deletedN,
           touched, viol, None)
     }
-    } finally toRelease.foreach(graft.operators.Checkpoints.release)
+    }
   }
 
   /** MERGE-ON-READ publish — the O(drop) sibling of [[merge]]. A
@@ -1413,13 +1417,7 @@ object Versioned {
         s"(maxDeltaLayers = $maxDeltaLayers) — every read reconciles each layer; " +
         "fold them first (foldDeltas / merge / maintain)")
 
-    val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def eager(df: DataFrame): DataFrame = {
-      val e = graft.operators.Checkpoints.eager(df)
-      toRelease += e
-      e
-    }
-    try {
+    withReleasedCheckpoints { eager =>
     val d = eager(drop
       .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
       .withColumn("bkt", bktCol(keys, spec.numBuckets)))
@@ -1560,7 +1558,7 @@ object Versioned {
         PatchReport(patched = true, version, dirName, upserted, inserted, deletedN,
           spec.deltas.size + 1, viol, None)
     }
-    } finally toRelease.foreach(graft.operators.Checkpoints.release)
+    }
   }
 
   /** [[patch]] with bounded replay on a lost single-writer race —

@@ -76,7 +76,7 @@ object Search {
     // the whole probe below runs with ZERO further exchanges — one
     // restricted-postings exchange replaces the two 4-key join
     // exchanges and the two aggregate exchanges (guide §2.3/§2.4)
-    val toks = graft.operators.Checkpoints.eagerClaiming(
+    val toks = graft.operators.Checkpoints.eager(
       posts.join(broadcast(ph.select("t1", "t2").distinct()), Seq("t1", "t2"), "left_semi")
         .repartition(posts.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id")),
       Seq("doc_id"))

@@ -30,14 +30,15 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * satisfied ClusteredDistribution and exchanges only the other
   * (node-sized) side of each per-round join.
   *
-  * SAFETY CONTRACT: the claim is trusted, never verified. Callers
-  * must wrap ONLY a bare checkpoint scan of a frame that was
-  * physically `repartition(numPartitions, keys)`-ed immediately
-  * before the checkpoint (Spark's repartition-by-expression uses the
-  * same `HashPartitioning` the claim reports, and a local checkpoint
-  * is per-partition so the layout survives). A false claim silently
-  * drops join matches. [[graft.operators.Checkpoints.eagerHashPartitioned]]
-  * is the one sanctioned constructor.
+  * SAFETY CONTRACT: the node itself checks nothing — a false claim
+  * silently drops join matches — so it is only ever built AFTER the
+  * layout was read off an executed plan.
+  * [[GraftPlans.claimIfHashPartitioned]] is its one constructor: it
+  * wraps a checkpoint scan only when the checkpointed frame's final
+  * (post-AQE) physical plan reports exactly
+  * `HashPartitioning(keys, numPartitions)`, and a local checkpoint
+  * is per-partition, so the layout survives the cut. Library code
+  * reaches it through `graft.operators.Checkpoints.eager(df, claim)`.
   */
 case class ClaimHashPartitioned(
     keys: Seq[Expression],

@@ -260,15 +260,6 @@ object GraftPlans {
       GroupTopK(keys.map(toExpr), sortOrder, k, ds.logicalPlan))
   }
 
-  /** Wrap a checkpoint scan in a [[ClaimHashPartitioned]] node — see
-    * that node's safety contract; call only through
-    * [[graft.operators.Checkpoints]]' partitioned-checkpoint helpers. */
-  def claimHashPartitioned(df: DataFrame, keys: Seq[Column], numPartitions: Int): DataFrame = {
-    val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
-    Dataset.ofRows(ds.sparkSession,
-      ClaimHashPartitioned(keys.map(toExpr), numPartitions, ds.logicalPlan))
-  }
-
   /** Claim `ck` (a checkpoint of `orig`) hash-partitioned on `keys`
     * ONLY IF `orig`'s executed physical plan actually left its rows
     * laid out as a plain `HashPartitioning(keys, n)` — i.e. the claim
@@ -277,11 +268,13 @@ object GraftPlans {
     * read, different key, round-robin, …), so callers can claim
     * opportunistically: a plan that happens to preserve the layout
     * (e.g. broadcast semi-joins over an already-clustered frame) keeps
-    * its claim; one that re-partitioned simply loses it. MUST be
-    * called after `orig` was executed (an eager checkpoint does that)
-    * — under AQE the final plan only exists after execution. */
+    * its claim; one that re-partitioned simply loses it. This is the
+    * only constructor of a [[ClaimHashPartitioned]] node. MUST be
+    * called after `orig`'s plan ran — under AQE the final plan only
+    * exists after its shuffle stages executed, which a local
+    * checkpoint (lazy or eager) of `orig` has already done. */
   def claimIfHashPartitioned(ck: DataFrame, orig: DataFrame, keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, SinglePartition}
     val origOut = orig.queryExecution.analyzed.output
     val attrs = keys.map(k => origOut.find(a => orig.sparkSession.sessionState.conf.resolver(a.name, k)))
     if (attrs.exists(_.isEmpty)) return ck
@@ -293,6 +286,9 @@ object GraftPlans {
         Some(h.numPartitions)
       case c: PartitioningCollection =>
         c.partitionings.flatMap(matches(_)).headOption
+      // one partition holds every row, as HashPartitioning(keys, 1)
+      // would place them (Spark plans repartition(1, keys) this way)
+      case SinglePartition => Some(1)
       case _ => None
     }
     // AdaptiveSparkPlanExec reports UnknownPartitioning at the root;
@@ -302,8 +298,11 @@ object GraftPlans {
       case p => p
     }
     matches(plan.outputPartitioning) match {
-      case Some(n) => claimHashPartitioned(ck, keys.map(ck(_)), n)
-      case None    => ck
+      case Some(n) =>
+        val ds = ck.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
+        Dataset.ofRows(ds.sparkSession,
+          ClaimHashPartitioned(keys.map(k => toExpr(ck(k))), n, ds.logicalPlan))
+      case None => ck
     }
   }
 

@@ -238,6 +238,12 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  test("connectedComponentsBounded refuses a negative edge bound") {
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    intercept[IllegalArgumentException](
+      graft.dedup.Components.connectedComponentsBounded(pairs, "doc_a", "doc_b", maxEdges = -1L))
+  }
+
   test("componentSizes: histogram, member mass and exact shares") {
     import graft.dedup.Components
     // sizes: {1,2,3,4}=4, {10,11,12}=3, {20,21}=2, {30,31}=2 → 11 docs

@@ -575,6 +575,24 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(keyShuffles(p) === 1) // only the (doc, bench) pair count aggregate
   }
 
+  // Job budgets for the loop-shaped queries, whose per-round work
+  // hides behind checkpoints that exchange budgets cannot see into:
+  // every job the query starts while it is built (the checkpoint
+  // jobs of its rounds) and written to a noop sink, counted by job
+  // group. Measured at sf0.001 on the spec session (local[4], 4
+  // shuffle partitions).
+  private val jobBudgets: Map[String, Int] = Map("q_pagerank" -> 16, "q_kcore" -> 12)
+
+  test("loop-shaped queries stay within their job budget") {
+    val over = jobBudgets.toSeq.sortBy(_._1).flatMap { case (q, budget) =>
+      val (_, n) = JobCount(spark)(
+        SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save())
+      graft.operators.Checkpoints.releaseAll()
+      if (n > budget) Some(s"$q: $n jobs > budget $budget") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
   test("every heavy query stays within its shuffle budget") {
     val over = shuffleBudgets.toSeq.sortBy(_._1).flatMap { case (q, budget) =>
       val n = keyShuffles(plan(q))
