@@ -1,1640 +1,189 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.functions.{count, lit, pmod}
 
 import graft.operators.CoreOps._
-import graft.sources.PartitionedFiles
+import graft.sources.{PartitionedFiles, Versioned}
 
-/** Command-line surface mirroring the reference's `python -m shmr`
-  * (reference /root/reference/shmr/main.py): per-partition and
-  * all-partition operators over jsonl/csv/text files. Where shmr
+/** Command-line surface mirroring the reference's `python -m shmr`:
+  * per-partition and all-partition operators plus the LLM-data
+  * pipeline verbs over jsonl/csv/text/parquet/orc files. Where shmr
   * takes Python import paths (`--fn mymod.myfunc`), graft takes SQL
   * expressions (`--expr`, `--aggs`) — declarative, so the whole
   * pipeline plans through Catalyst instead of calling back into an
   * interpreter per record.
   *
-  * Usage:
   *   graft.Cli -i IN [-f json|csv|text|parquet|orc] [--schema DDL] CMD [args]
   *             [--outfile OUT] [--codec gzip|bzip2]
   *             [--names "part-{auto}"] [--delete-on-empty true]
+  *
   * Gzipped/bzip2'd inputs read transparently by extension (as in
   * shmr); `--codec` compresses the output; `--names` renames output
   * files to shmr's literal template (`*`/`{}`/`{auto}` → zero-padded
   * {auto:05d}, `{stem}` keeps the stem) and `--delete-on-empty`
   * drops record-less partitions, both per reference misc.py /
-  * partition_writer.py semantics.
-  * Commands:
-  *   partition.map        --expr "id, value*2 AS v2"
-  *   partition.filter     --expr "value > 10"
-  *   partition.flat_map   --expr "explode(split(text, ' ')) AS word, id"
-  *   partition.distinct   --expr "a, b"
-  *   partition.reduce     --aggs "sum(v) AS s, count(1) AS n"
-  *   partition.reduce_by_key --keys "k1, k2" --aggs "sum(v) AS s"
-  *   partition.split_by_key  --key "id" --num-partitions 8
-  *   partition.count      [--outfile stdout]
-  *   partition.head       --n 10 --order "v DESC, id"
-  *   partition.join       --with OTHER [--with-schema DDL] --key "id" --with-key "id" [--broadcast true]
-  *   partition.apply      --expr "assert_true(v >= 0)"
-  *   partitions.coalesce  --num-partitions 4
-  *   partitions.concat
-  *   partitions.reduce    --aggs "sum(v) AS s"
+  * partition_writer.py semantics. Side inputs (`--with`, `--bench`,
+  * ...) are read in the `-f` format with their own `--<key>-schema`.
   *
-  * LLM-pipeline verbs (the library operators a training-data pipeline
-  * runs most, exposed as shell commands — SURVEY.md §2.3/§2.5):
-  *   dedup-minhash  --text text --id doc_id [--shingle 3] [--bands 4]
-  *                  [--rows-per-band 2] [--emit keep|pairs|keep-best]
-  *                  [--order "length(text) DESC, doc_id"]
-  *       near-duplicate removal: MinHash-LSH candidate pairs →
-  *       connected components → keep the min-id representative per
-  *       cluster (--emit keep, default), the best row per cluster
-  *       under --order (--emit keep-best), or dump the candidate
-  *       pairs themselves (--emit pairs)
-  *   pack           --text text --id doc_id [--shard "doc_id % 8"] [--budget 2000]
-  *       token-budget packing: per shard, cumulative token counts cut
-  *       into batch_id groups — the batch/sequence packing step before
-  *       tokenizer sharding
-  *   split-assign   --key doc_id [--train 90] [--val 5]
-  *       deterministic hash split: adds a `split` column
-  *       (train/val/test) stable under reruns and row order
-  *   validate       [--not-null "a,b"] [--unique "a,b"] [--check "pred1;pred2"]
-  *       data-quality expectations: emits one (rule, violations) row
-  *       per rule — the pre-ingest gate run before a batch is
-  *       promoted (all rules evaluated in ONE pass over the data)
-  *   promote        --root PATH [validate opts] [--diff-key id --diff-content c
-  *                  [--max-changed-pm 50]]
-  *                  [--zones c1,c2] [--retry N] [--stale-ms MS]
-  *                  [--range-col C --lo N --hi N]
-  *                  [--action promote|promote-bucketed|merge|patch|fold-deltas|compact|rollback|
-  *                   vacuum|read-range|diff-versions|current|history|read-version]
-  *                  [--key doc_id --buckets 64] [--deleted COLUMN]
-  *                  [--to-version N] [--retain 2]
-  *       write-audit-publish versioned corpus: stage -i under --root,
-  *       gate on the validate suite + optional live-vs-staged churn
-  *       limit, atomically swap the manifest pointer on pass; a
-  *       refused promotion exits nonzero and leaves the live version
-  *       untouched. promote-bucketed publishes -i hash-bucketed on
-  *       --key so later drops can `merge`: -i upserts by key (rows
-  *       where --deleted evaluates true delete instead), rewriting
-  *       ONLY the touched buckets and publishing a new version whose
-  *       owner map points untouched buckets at their existing files
-  *       (--max-changed-pm bounds updates+deletes of live keys).
-  *       rollback PUBLISHES the target (--to-version N or one step
-  *       back) as a new version — history never rewrites; history
-  *       lists the manifest chain with retention flags; read-version
-  *       time-travels; vacuum GCs outside --retain (live + previous +
-  *       every directory a retained owner map references always kept)
-  *   decontam       --bench PATH --text text --id doc_id [--bench-text text]
-  *                  [--bench-id doc_id] [--n 3] [--min-hits 3] [--emit clean|flags]
-  *       benchmark decontamination: drop (or just flag, --emit flags)
-  *       corpus docs sharing n-grams with the eval set at PATH
-  *   boilerplate    --text text --id doc_id [--n 3] [--min-doc-freq 5]
-  *       corpus-frequency boilerplate scrub: delete token spans
-  *       covered by n-grams appearing in >= min-doc-freq documents
-  *   scrub-spans    --text text --id doc_id [--window 20] [--min-count 2]
-  *                  [--emit clean|spans]
-  *       exact substring dedup (Lee et al.): delete every duplicated
-  *       window-token span except its first occurrence and rebuild
-  *       the documents (--emit spans: report the maximal duplicated
-  *       spans per doc instead)
-  *   sample-tokens  --text text --id doc_id --group source --budget 1000000
-  *       deterministic token-budget sampling per group (md5-hash
-  *       order — uniform, rerun-stable, prefix-monotone in budget)
-  *   lm-score       --text text --id doc_id [--rare-max 100]
-  *       unigram-LM quality score (CCNet perplexity proxy): per-doc
-  *       mean corpus token frequency + rare-token count
-  *   semdedup       --vec embedding --id vec_id [--centroids 16]
-  *                  [--iters 2] [--tau 0.95] [--emit keep|flags]
-  *                  [--pq true [--margin 0.2] [--pq-m 8] [--pq-subdim 8]
-  *                   [--pq-k 64] [--pq-iters 2]]
-  *       SemDeDup semantic dedup over an embedding column: IVF
-  *       clustering, then id-ordered greedy keep-one within each
-  *       cell at cosine >= tau (--emit keep drops the duplicates;
-  *       --emit flags emits the per-vector verdict table); --pq
-  *       screens within-cell pairs on product-quantization codes
-  *       first, exact re-check at tau
-  *   embed          --text COL --id COL [--dim 64]
-  *       signed hashed bag-of-words projection: text → (vec_id, e,
-  *       nrm) integer-vector frame (the shape every vector verb eats)
-  *   knn            -i CORPUS --queries PATH --k N
-  *                  (--prepared true | --vec COL --id COL)
-  *       brute-force integer-cosine top-k neighbours per query row
-  *   bpe            --mode train --text COL [--max-types 100000]
-  *                  [--merges 16] --outfile PATH
-  *                  | --mode tokens --text COL --id COL
-  *                    --merges-table PATH [--max-types 100000]
-  *       trained BPE subword tokenizer: train writes the persistable
-  *       (rank, lft, rgt) merge table; tokens scores a corpus against
-  *       a stored table (per-doc word/subword counts)
-  *   cluster-ledger --mode append -i PAIRS --ledger PATH --a doc_a --b doc_b
-  *                  [--buckets 64] | --mode labels|vacuum --ledger PATH
-  *       persisted incremental connected components: append merges a
-  *       drop's near-dup pairs (drop-sized union-find, only affected
-  *       hash(id) buckets staged + atomic manifest swap), labels
-  *       dumps (id, cluster_id), vacuum GCs superseded append dirs
-  *   bloom-ledger   --mode append -i DROP --ledger PATH --drop-id ID
-  *                  --key EXPR [--bits 1048576] [--hashes 5]
-  *                  | --mode screen -i BATCH --ledger PATH --key EXPR
-  *                  | --mode novel -i BATCH --ledger PATH --corpus PATH
-  *                    --key EXPR [--corpus-key EXPR]
-  *       mergeable per-drop Bloom registers: append a drop's register
-  *       (idempotent), screen a batch with zero corpus access
-  *       (might_seen=false ⇒ certainly novel), or emit the exact
-  *       novel set (candidates confirmed against --corpus keys)
-  *   drift          --mode profile -i REF --bucket EXPR --outfile PROFILE
-  *                  | --mode report -i DROP --profile PROFILE --bucket EXPR
-  *       distribution-drift gate: build the reference bucket profile
-  *       once, then report each drop's per-bucket integer proportion
-  *       drift against the stored profile (reference never rescanned)
-  *   rrf            --id doc_id --signals "len=size(split(trim(text),'\s+'));ttr=..."
-  *                  [--k 60] [--scale 1000000]
-  *       reciprocal-rank-fusion quality ensemble: fuse any integer
-  *       signal expressions by rank (semicolon-separated name=expr
-  *       pairs) into (id, rrf_score, n_signals)
-  *   kmv-ledger     --mode append -i DROP --ledger PATH --drop-id ID
-  *                  --text COL [--k 256]
-  *                  | --mode overlap -i BATCH --ledger PATH --text COL
-  *       mergeable per-drop KMV registers: append a drop's bottom-k
-  *       sketch (idempotent), or report the incoming batch's overlap
-  *       vs the merged history — common/union/Jaccard estimates from
-  *       k-row summaries, zero corpus access
-  *   stats-ledger   --mode append -i DROP --ledger PATH --drop-id ID
-  *                  --group EXPR --key EXPR [--tokens EXPR | --text COL] [--p 12]
-  *                | --mode rollup -i LEDGER --outfile OUT [--p 12]
-  *       incremental corpus accounting: append one (group, n_docs,
-  *       total_tokens, HLL-register) summary row per group for this
-  *       drop (idempotent per drop id), or roll every drop summary up
-  *       into whole-corpus stats — additive sums + exact HLL merge,
-  *       never rescanning the corpus
-  *   centroid-classify --vec embedding --id vec_id --label label
-  *                  [--emit preds|confusion]
-  *       leave-one-out nearest-centroid label probe: per-vector
-  *       predictions, or the |labels|² confusion matrix
-  *   nb-classify    --text text --id doc_id --label lang [--buckets 256]
-  *                  [--scale-bits 40] [--hold-mod M] [--emit preds|confusion|keep]
-  *       trained Naive-Bayes classifier over hashed token features:
-  *       held-out scoring with --hold-mod, resubstitution otherwise;
-  *       --emit keep drops rows the trained model relabels
-  *   dsir           --target PATH --text text --id doc_id --k N
-  *                  [--target-text T] [--target-id I] [--buckets 512]
-  *                  [--scale-bits 40] [--emit keep|weights]
-  *       DSIR importance resampling: keep the k docs whose hashed
-  *       unigram+bigram distribution best matches the target sample
-  *       (--emit weights: every doc's integer importance weight)
-  *   unimax         --group lang --text text [--budget-num 8]
-  *                  [--budget-den 5] [--epochs-milli 2000]
-  *                  [--emit alloc|copies]
-  *       UniMax budget allocation: equal token shares per group under
-  *       the epoch cap, budget = total·num/den (--emit copies: the
-  *       per-document repeat counts a sequence writer consumes)
-  *   scrub-sentences --text text --id doc_id [--max-sent-tokens 8]
-  *                  [--emit clean|spans]
-  *       C4 three-sentence-span dedup: delete all but the first
-  *       occurrence of every duplicated 3-sentence span and rebuild
-  *       (--emit spans: report the duplicated span occurrences)
-  *   trending       --key EXPR --day EXPR
-  *       half-life-decayed activity counts per key: (k, total, score)
-  *       — recency-weighted trending vs all-time volume
-  *   quantile-norm  --group EXPR --score EXPR --id EXPR
-  *       within-group rank per-mille of a score column — equalize
-  *       heterogeneous sources before one threshold
-  *   skew           --group EXPR --key EXPR [--lanes 60]
-  *       AMS tug-of-war F2 skew report per group: (g, n, f2_est) —
-  *       hot-key detection in one scan, no per-key aggregate
-  *   trend          --group EXPR --x EXPR --y EXPR
-  *       per-group OLS drift report: slope/intercept plus the exact
-  *       integer Sxy/Sxx numerators (x centered on the group min)
-  *   balance        --group EXPR --value EXPR
-  *       corpus-balance audit: exact Gini per group in per-mille
-  *   stop-grams     --text COLUMN --id COLUMN [--n 3] [--cap 64|auto|unbounded]
-  *       DocFreqCap transparency report: the grams the cap drops from
-  *       the exact pair sweep, their df, and the C(df,2) work saved
-  *   coactive       --user EXPR --type EXPR --ts EXPR [--bucket-hours 3]
-  *                  [--blocks 4] [--top 25]
-  *       co-active pair mining from an event log via the bucketed
-  *       interval-overlap self-join; --blocks B = unbiased 1-in-B
-  *       pair sample (surviving pairs keep exact window counts),
-  *       --blocks 1 = the exact all-pairs sweep, bought knowingly
-  *   keywords       --text text [--iters 3] [--top 40]
-  *       weighted-TextRank keyword extraction over the token
-  *       co-occurrence graph: (token, pr, rank)
-  *   triplets       --vec embedding --id vec_id --label label
-  *                  [--anchor-mod 10] [--k 5]
-  *       contrastive triplet mining: per anchor the rank-1 same-label
-  *       positive + k nearest cross-label negatives, margin
-  *       violations flagged
-  *   phrase-search  --text text --id doc_id [--phrases PATH [--phrase-col phrase]]
-  *                  [--n 3] [--top 5]
-  *       exact phrase lookup: (phrase, doc_id, n_occurrences) rows,
-  *       overlapping occurrences counted; with no --phrases file the
-  *       corpus's own top n-gram phrases are used
-  *   datasheet      --text text --id doc_id [--source source] [--lang lang]
-  *                  [--gopher-min-words 50] [--gopher-max-words 100000]
-  *       per-source corpus datasheet: volume, language spread,
-  *       heuristic pass counts, exact-dup mass, vocabulary — the
-  *       release report row per source
-  *   kmv-overlap    --text text [--group source] [--k 256]
-  *       pairwise group overlap report from bottom-k theta sketches:
-  *       (group_a, group_b, common, union_n, est_overlap, est_union,
-  *       jacc_pm) — overlap/union/Jaccard estimated from k-row
-  *       summaries, no quadratic exact join
-  *   schema-check   --expect "id BIGINT, text STRING, ..."
-  *       schema-drift report vs the expected DDL: one row per column,
-  *       status ok|type_changed|missing|extra (metadata-only — no
-  *       data scanned; the pre-ingest producer-drift guard)
-  *   novel          --corpus PATH --text text --id doc_id [--shingle 3]
-  *                  [--bands 4] [--rows-per-band 2]
-  *       incremental corpus update: keep only input docs that are NOT
-  *       MinHash-LSH near-dups of the corpus at PATH (the
-  *       screen-every-new-crawl-drop verb)
-  *   diff           --old PATH --key doc_id --content text [--old-key K]
-  *                  [--old-content C] [--key-name id] [--emit rows|stats]
-  *       corpus snapshot diff: one (key, status) row per doc in either
-  *       version — added|removed|changed|unchanged by portable md5
-  *       content fingerprint (--emit stats: status counts only)
-  *   sample-weighted --key doc_id --weight n_chars --threshold 400
-  *       weighted Bernoulli sampling: keep rows with probability
-  *       min(1, weight/threshold), rerun-stable, zero shuffles
-  *   winnow         --text text --id doc_id [--k 5] [--w 4]
-  *       winnowing (MOSS) fingerprints: (doc_id, fp) rows; docs
-  *       sharing a substring of >= w+k-1 chars share a fingerprint
-  *   neighbors      --text text --id doc_id [--window 5] [--key-len 30]
-  *       sorted-neighborhood candidate pairs: sort by a normalized
-  *       prefix fingerprint, pair docs within the rank window
-  *   scd2           --key user_id --ts "unix_micros(ts)" [--order "..., event_id"]
-  *       SCD type-2 build: change log -> contiguous half-open validity
-  *       intervals (valid_from_us/valid_to_us/is_current) per key
-  *   shuffle        --key doc_id [--seed 42]
-  *       seeded deterministic corpus shuffle: adds a `shuffle_rank`
-  *       permutation column, reproducible per seed (the pre-sharding
-  *       shuffle-once-before-training step)
-  *   pack-sequences --text text --id doc_id [--shard "doc_id % 8"]
-  *                  [--budget 2000] [--sep $'\n']
-  *       materialized packed training sequences: one row per
-  *       (shard, batch) with member docs concatenated in id order
-  *   corpus         --text text --id doc_id [--min-tokens 30]
-  *                  [--rules gopher,c4,repetition [--gopher-min-words 50]
-  *                   [--gopher-max-words 100000] [--text-name text]]
-  *                  [--dedup exact|none] [--near minhash|minhash-best|simhash|winnow|none]
-  *                  [--lm-rare-max 100 [--lm-max-rare-ratio 0.5]]
-  *                  [--bg-rare-max 25 [--bg-max-rare-ratio 0.5]]
-  *                  [--ppl-rare-max 100 [--ppl-keep 1,2] [--lang lang]]
-  *                  [--decontam PATH [--decontam-text text] [--decontam-id doc_id]]
-  *                  [--source-cap N [--source SOURCE_COL]]
-  *                  [--temperature SOURCE_COL] [--split 90,5]
-  *                  [--emit docs|ledger]
-  *       the whole training-data prep chain as ONE verb (the Corpus
-  *       facade): heuristic rule batteries (--rules, applied in the
-  *       order given: Gopher document rules, C4 line rules with
-  *       in-place text rewrite, Gopher repetition battery) ->
-  *       quality floor -> exact dedup -> near dedup ->
-  *       LM-quality gate -> benchmark decontamination -> per-source
-  *       cap -> temperature mixture sampling -> split assignment;
-  *       every stage optional,
-  *       each delegating to the oracle-gated library operator.
-  *       --emit ledger audits the chain and writes the drop ledger
-  *       (doc_id, stage_idx, stage — which stage dropped each doc)
-  *       instead of the surviving documents
+  * Each verb is one [[Verb]] in [[verbs]]; the usage printed for a
+  * missing or unknown command is generated from that table.
   */
 object Cli {
 
-  private def fail(msg: String): Nothing = {
-    System.err.println(s"graft: $msg")
-    sys.exit(2)
-  }
+  /** A usage error: a missing, malformed or unknown option, command or
+    * format. `main` reports it as `graft: <msg>` and exits 2. */
+  final class CliError(msg: String) extends RuntimeException(msg)
 
-  def main(args: Array[String]): Unit = {
-    val (opts, cmds) = parse(args.toList)
-    val cmd = cmds.headOption.getOrElse(fail("missing command"))
-    // resolved lazily: catalog-table commands (index-compact) and the
-    // root-addressed promote actions take no -i input
-    lazy val in = opts.getOrElse("i", fail("missing -i INPUT"))
-    val fmt = opts.getOrElse("f", "json")
-    val spark = GraftSession.getOrCreate("graft-cli")
+  private def fail(msg: String): Nothing = throw new CliError(msg)
 
-    def read(): DataFrame = fmt match {
-      case "json"    => PartitionedFiles.readJsonl(spark, in, opts.get("schema"))
-      case "csv"     => PartitionedFiles.readCsv(spark, in, header = true, opts.get("schema"))
-      case "text"    => PartitionedFiles.readText(spark, in)
-      case "parquet" => PartitionedFiles.readParquet(spark, in)
-      case "orc"     => PartitionedFiles.readOrc(spark, in)
+  /** One verb: its one-line usage and its body. */
+  final case class Verb(usage: String, body: Ctx => Unit)
+
+  /** One invocation's options, session and the readers/writers over them. */
+  final class Ctx private[Cli] (val spark: SparkSession, val cmd: String, opts: Map[String, String]) {
+    private def flag(k: String) = if (k == "i") "-i" else s"--$k"
+
+    def fail(msg: String): Nothing = Cli.fail(msg)
+    def opt(k: String): Option[String] = opts.get(k)
+    def has(k: String): Boolean = opts.contains(k)
+    private def missing(k: String): Nothing = fail(s"$cmd: missing ${flag(k)}")
+    def req(k: String): String = opts.getOrElse(k, missing(k))
+    def str(k: String, default: String): String = opts.getOrElse(k, default)
+
+    private def typed[T](k: String, what: String, p: String => Option[T]): Option[T] =
+      opts.get(k).map(v => p(v).getOrElse(fail(s"$cmd: ${flag(k)} expects $what, got '$v'")))
+    def intOpt(k: String): Option[Int] = typed(k, "an integer", _.toIntOption)
+    def longOpt(k: String): Option[Long] = typed(k, "an integer", _.toLongOption)
+    def int(k: String): Int = intOpt(k).getOrElse(missing(k))
+    def int(k: String, default: Int): Int = intOpt(k).getOrElse(default)
+    def long(k: String): Long = longOpt(k).getOrElse(missing(k))
+    def long(k: String, default: Long): Long = longOpt(k).getOrElse(default)
+    def double(k: String, default: Double): Double =
+      typed(k, "a number", _.toDoubleOption).getOrElse(default)
+    def bool(k: String, default: Boolean = false): Boolean =
+      typed(k, "true or false", _.toBooleanOption).getOrElse(default)
+    def ints(k: String, default: String): Seq[Int] = {
+      val v = str(k, default)
+      v.split(",").toSeq.map(_.trim.toIntOption
+        .getOrElse(fail(s"$cmd: ${flag(k)} expects comma-separated integers, got '$v'")))
+    }
+    /** `--k` (`default` when absent) must be one of `allowed`. */
+    def oneOf(k: String, default: String)(allowed: String*): String = {
+      val v = str(k, default)
+      if (!allowed.contains(v)) fail(s"$cmd: ${flag(k)} must be ${allowed.mkString("|")}, got: $v")
+      v
+    }
+    def oneOf(k: String)(allowed: String*): String = oneOf(k, req(k))(allowed: _*)
+
+    def col(k: String): Column = F.col(req(k))
+    def expr(k: String): Column = F.expr(req(k))
+    def expr(k: String, default: String): Column = F.expr(str(k, default))
+    def exprList(k: String): Seq[Column] =
+      req(k).split(",(?![^()]*\\))").map(s => F.expr(s.trim)).toSeq
+
+    // --not-null "a,b" / --unique "a,b" / --check "pred1;pred2" →
+    // Validate.Check suite (shared by the validate and promote verbs)
+    def checks: Seq[graft.quality.Validate.Check] = {
+      import graft.quality.Validate._
+      val cs = Seq.newBuilder[Check]
+      opt("not-null").foreach(_.split(",").map(_.trim).filter(_.nonEmpty)
+        .foreach(c => cs += NotNull(s"not_null_$c", F.col(c))))
+      opt("unique").foreach { s =>
+        val u = s.split(",").map(_.trim).filter(_.nonEmpty)
+        cs += Unique("unique_" + u.mkString("_"), u.map(F.col).toSeq)
+      }
+      opt("check").foreach(_.split(";").map(_.trim).filter(_.nonEmpty).zipWithIndex
+        .foreach { case (e, i) => cs += Satisfies(s"check_$i", F.expr(e)) })
+      cs.result()
+    }
+
+    val fmt: String = str("f", "json")
+
+    private def read(path: String, schema: Option[String]): DataFrame = fmt match {
+      case "json"    => PartitionedFiles.readJsonl(spark, path, schema)
+      case "csv"     => PartitionedFiles.readCsv(spark, path, header = true, schema)
+      case "text"    => PartitionedFiles.readText(spark, path)
+      case "parquet" => PartitionedFiles.readParquet(spark, path)
+      case "orc"     => PartitionedFiles.readOrc(spark, path)
       case other     => fail(s"unknown format: $other (use json|csv|text|parquet|orc)")
     }
 
+    /** The `-i` input (resolved per call: catalog-table commands and
+      * the root-addressed promote actions take no `-i`). */
+    def input: DataFrame = read(req("i"), opt("schema"))
+
+    /** A second input named by `--key`, in the `-f` format. Text lines
+      * carry no columns to key or join on, so text is refused. */
+    def side(key: String): DataFrame =
+      if (fmt == "text") fail(s"$cmd: --$key unsupported for format: text")
+      else read(req(key), opt(s"$key-schema"))
+
+    def parquet(key: String): DataFrame = PartitionedFiles.readParquet(spark, req(key))
+
     def write(df: DataFrame, parts: Int = 1): Unit = {
-      val out = opts.getOrElse("outfile", fail(s"$cmd requires --outfile"))
+      val out = req("outfile")
       // shmr reads/writes .gz/.bz2 transparently by extension; Spark
       // reads them transparently too, and writes via --codec
-      val codec = opts.get("codec")
+      val codec = opt("codec")
       fmt match {
         case "json"    => PartitionedFiles.writeJsonl(df, out, parts, codec)
         case "csv"     => PartitionedFiles.writeCsv(df, out, parts, codec = codec)
         case "text"    => PartitionedFiles.writeText(df, out, parts, codec)
         case "parquet" => PartitionedFiles.writeParquet(df, out, parts, codec)
         case "orc"     => PartitionedFiles.writeOrc(df, out, parts, codec)
+        case other     => fail(s"unknown format: $other (use json|csv|text|parquet|orc)")
       }
       // shmr-literal output layout: --names applies the {auto:05d} /
       // {stem} file-name template (misc.py:24-47); --delete-on-empty
       // drops record-less partitions (partition_writer.py) first
-      val deleteEmpty = opts.get("delete-on-empty").exists(_.toBoolean)
-      if (opts.contains("names") || deleteEmpty)
-        PartitionedFiles.shmrLayout(out, opts.getOrElse("names", "part-{auto}"), deleteEmpty)
+      val deleteEmpty = bool("delete-on-empty")
+      if (has("names") || deleteEmpty)
+        PartitionedFiles.shmrLayout(out, str("names", "part-{auto}"), deleteEmpty)
     }
 
-    def exprList(key: String): Seq[Column] =
-      opts.getOrElse(key, fail(s"$cmd requires --$key")).split(",(?![^()]*\\))").map(s => expr(s.trim)).toSeq
-
-    // --not-null "a,b" / --unique "a,b" / --check "pred1;pred2" →
-    // Validate.Check suite (shared by the validate and promote verbs)
-    def parsedChecks(): Seq[graft.quality.Validate.Check] = {
-      import graft.quality.Validate._
-      val checks = Seq.newBuilder[Check]
-      opts.get("not-null").foreach(_.split(",").map(_.trim).filter(_.nonEmpty)
-        .foreach(c => checks += NotNull(s"not_null_$c", col(c))))
-      opts.get("unique").foreach { s =>
-        val cs = s.split(",").map(_.trim).filter(_.nonEmpty)
-        checks += Unique("unique_" + cs.mkString("_"), cs.map(col).toSeq)
-      }
-      opts.get("check").foreach(_.split(";").map(_.trim).filter(_.nonEmpty).zipWithIndex
-        .foreach { case (e, i) => checks += Satisfies(s"check_$i", expr(e)) })
-      checks.result()
+    /** Writes `(kind, name, value)` report rows. */
+    def report(rows: Seq[(String, String, String)]): Unit = {
+      import spark.implicits._
+      write(rows.toDF("kind", "name", "value"))
     }
+  }
 
-    try {
-      cmd match {
-        case "partition.map" | "partition.flat_map" | "partition.distinct" =>
-          val projected = read().mapRecords(exprList("expr"): _*)
-          // shmr distinct is BY KEY (partition.py:83 key_fn); with
-          // --key keep the least row by --order per key (deterministic,
-          // unlike file order); without, full-row distinct
-          write(cmd match {
-            case "partition.distinct" if opts.contains("key") =>
-              projected.distinctBy(exprList("key"), exprList("order"))
-            case "partition.distinct" => projected.distinct()
-            case _ => projected
-          })
-        case "partition.filter" =>
-          write(read().filterRecords(expr(opts.getOrElse("expr", fail("--expr required")))))
-        case "partition.reduce" =>
-          val aggs = exprList("aggs")
-          write(read().reduceRecords(aggs.head, aggs.tail: _*))
-        case "partition.reduce_by_key" =>
-          write(read().reduceByKey(exprList("keys"), exprList("aggs")))
-        case "partition.split_by_key" =>
-          val n = opts.getOrElse("num-partitions", fail("--num-partitions required")).toInt
-          val out = opts.getOrElse("outfile", fail("split_by_key requires --outfile"))
-          // bucket i → its own directory (shmr: bucket i → file i); a
-          // plain write() would repartition round-robin and mix buckets
-          PartitionedFiles.writeJsonlPartitionedBy(
-            read().splitByKey(expr(opts.getOrElse("key", fail("--key required"))), n), out, "bucket")
-        case "partition.count" =>
-          val n = read().countRecords()
-          opts.get("outfile") match {
-            case None | Some("stdout") => println(n)
-            case Some(path)            => java.nio.file.Files.writeString(java.nio.file.Paths.get(path), n.toString)
-          }
-        case "partition.head" =>
-          val n = opts.getOrElse("n", "10").toInt
-          write(read().headRecords(n, exprList("order"): _*))
-        case "partition.join" =>
-          // shmr partition.join: join this partition with another by
-          // extracted keys (partition.py:263). --with is the other
-          // partition; --key / --with-key are SQL key expressions.
-          val otherPath = opts.getOrElse("with", fail("--with OTHER_INPUT required"))
-          val other = fmt match {
-            case "json" => PartitionedFiles.readJsonl(spark, otherPath, opts.get("with-schema"))
-            case "csv"  => PartitionedFiles.readCsv(spark, otherPath, header = true, opts.get("with-schema"))
-            case "parquet" => PartitionedFiles.readParquet(spark, otherPath)
-            case "orc"  => PartitionedFiles.readOrc(spark, otherPath)
-            case o      => fail(s"partition.join unsupported for format: $o")
-          }
-          val left = read().withColumn("__jk", expr(opts.getOrElse("key", fail("--key required"))))
-          // compute the right key BEFORE de-colliding names (the key
-          // expression references original column names), then prefix
-          // right-side columns that collide with the left (shmr emits
-          // [left_record, right_record]; flat columns need distinct names)
-          var right = other.withColumn("__wjk", expr(opts.getOrElse("with-key", fail("--with-key required"))))
-          for (c <- other.columns if left.columns.contains(c))
-            right = right.withColumnRenamed(c, s"with_$c")
-          write(left.keyedJoin(right, col("__jk") === col("__wjk"),
-              broadcastRight = opts.get("broadcast").contains("true"))
-            .drop("__jk", "__wjk"))
-        case "partition.apply" =>
-          // shmr partition.apply streams fn over records for its side
-          // effects (partition.py:102); here: evaluate the expression
-          // over every record, discard results, report the row count
-          val n = read().mapRecords(expr(opts.getOrElse("expr", fail("--expr required")))).count()
-          println(n)
-        case "partitions.reduce" =>
-          // ListPartition.reduce (partitions.py:145): one global
-          // aggregate over ALL partitions of the glob
-          val aggs = exprList("aggs")
-          write(read().reduceRecords(aggs.head, aggs.tail: _*))
-        case "partitions.coalesce" =>
-          // shmr ListPartition.coalesce takes either a target partition
-          // count or records_per_partition (partitions.py:81)
-          val df = read()
-          val n = opts.get("num-partitions").map(_.toInt)
-            .orElse(opts.get("records-per-partition").map(rpp =>
-              math.max(1L, (df.count() + rpp.toLong - 1) / rpp.toLong).toInt))
-            .getOrElse(fail("--num-partitions or --records-per-partition required"))
-          write(df.repartitionRecords(n), parts = n)
-        case "partitions.concat" =>
-          write(read().coalescePartitions(1))
-        case "dedup-minhash" =>
-          val df = read()
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val pairs = graft.dedup.Dedup.minhashCandidatePairs(
-            df, text, id,
-            shingleN = opts.getOrElse("shingle", "3").toInt,
-            numBands = opts.getOrElse("bands", "4").toInt,
-            rowsPerBand = opts.getOrElse("rows-per-band", "2").toInt)
-          opts.getOrElse("emit", "keep") match {
-            case "pairs" => write(pairs)
-            case "keep"  => write(graft.dedup.Components.keepOnePerCluster(df, id, pairs, "doc_a", "doc_b"))
-            // keep the best row per cluster instead of the min-id one;
-            // --order is a SQL sort list (e.g. "length(text) DESC, doc_id")
-            // — give it an id tiebreak or the keeper is nondeterministic
-            case "keep-best" => write(graft.dedup.Components.keepBestPerCluster(
-              df, id, pairs, "doc_a", "doc_b", exprList("order")))
-            case o       => fail(s"--emit must be keep|pairs|keep-best, got: $o")
-          }
-        case "pack" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val shard = expr(opts.getOrElse("shard", s"pmod(${opts("id")}, 8)"))
-          write(graft.text.TextPrep.packByTokenBudget(
-            read().withColumn("__shard", shard), col("__shard"), Seq(id),
-            graft.text.TextAnalysis.tokenCount(text),
-            budget = opts.getOrElse("budget", "2000").toLong)
-            .withColumnRenamed("__shard", "shard"))
-        case "split-assign" =>
-          val key = expr(opts.getOrElse("key", fail("--key COLUMN required")))
-          write(read().withColumn("split", graft.text.TextPrep.splitAssign(
-            key,
-            trainPct = opts.getOrElse("train", "90").toInt,
-            valPct = opts.getOrElse("val", "5").toInt)))
-        case "decontam" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val benchPath = opts.getOrElse("bench", fail("--bench PATH required"))
-          val bench = fmt match {
-            case "json"    => PartitionedFiles.readJsonl(spark, benchPath, opts.get("bench-schema"))
-            case "csv"     => PartitionedFiles.readCsv(spark, benchPath, header = true, opts.get("bench-schema"))
-            case "parquet" => PartitionedFiles.readParquet(spark, benchPath)
-            case "orc"     => PartitionedFiles.readOrc(spark, benchPath)
-            case o         => fail(s"decontam unsupported for format: $o")
-          }
-          val bText = expr(opts.getOrElse("bench-text", opts("text")))
-          val bId = expr(opts.getOrElse("bench-id", opts("id")))
-          val n = opts.getOrElse("n", "3").toInt
-          val minHits = opts.getOrElse("min-hits", "3").toLong
-          val corpus = read()
-          opts.getOrElse("emit", "clean") match {
-            case "flags" => write(graft.dedup.Decontam.ngramContamination(
-              corpus, text, id, bench, bText, bId, n, minHits))
-            case "clean" => write(graft.dedup.Decontam.decontaminate(
-              corpus, text, id, bench, bText, bId, n, minHits))
-            case o => fail(s"--emit must be clean|flags, got: $o")
-          }
-        case "boilerplate" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          write(graft.text.TextPrep.removeFrequentGrams(read(), text, id,
-            n = opts.getOrElse("n", "3").toInt,
-            minDocFreq = opts.getOrElse("min-doc-freq", "5").toLong))
-        case "scrub-spans" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val w = opts.getOrElse("window", "20").toInt
-          val minCount = opts.getOrElse("min-count", "2").toLong
-          opts.getOrElse("emit", "clean") match {
-            case "clean" => write(graft.dedup.SubstringDedup
-              .scrubDuplicatedSpans(read(), text, id, w, minCount))
-            case "spans" => write(graft.dedup.SubstringDedup
-              .duplicatedSpans(read(), text, id, w, minCount))
-            case o => fail(s"--emit must be clean|spans, got: $o")
-          }
-        case "sample-tokens" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val group = expr(opts.getOrElse("group", fail("--group COLUMN required")))
-          write(graft.text.TextPrep.sampleByTokenBudget(read(), group, id,
-            graft.text.TextAnalysis.tokenCount(text),
-            budget = opts.getOrElse("budget", fail("--budget N required")).toLong))
-        case "lm-score" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          write(graft.text.TextAnalysis.lmScore(read(), text, id,
-            rareMax = opts.getOrElse("rare-max", "100").toLong))
-        case "semdedup" =>
-          val df = read()
-          val vecCol = opts.getOrElse("vec", fail("--vec COLUMN required"))
-          val idCol = opts.getOrElse("id", fail("--id COLUMN required"))
-          val corpus = graft.similarity.Similarity.prepareQuantized(
-            df, col(vecCol), col(idCol))
-          // default cap is CellCap.Auto (4× average cell) — scale-safe
-          // without tuning; --max-cell N pins it, --max-cell none opts out
-          val cap = opts.get("max-cell") match {
-            case None         => graft.similarity.CellCap.Auto
-            case Some("none") => graft.similarity.CellCap.Unbounded
-            case Some(v)      => graft.similarity.CellCap.Fixed(v.toInt)
-          }
-          val (centroids, iters, tau) = (opts.getOrElse("centroids", "16").toInt,
-            opts.getOrElse("iters", "2").toInt, opts.getOrElse("tau", "0.95").toDouble)
-          // --pq: score within-cell pairs on product-quantization codes
-          // first (broadcast SDC table), exact re-check at tau — same
-          // verdicts policy, pair join ships m ints per vector
-          val verdicts =
-            if (opts.get("pq").exists(_.toBoolean))
-              graft.similarity.SemDedup.semDedupPq(corpus, centroids, iters, tau,
-                margin = opts.getOrElse("margin", "0.2").toDouble,
-                m = opts.getOrElse("pq-m", "8").toInt,
-                subDim = opts.getOrElse("pq-subdim", "8").toInt,
-                pqK = opts.getOrElse("pq-k", "64").toInt,
-                pqIters = opts.getOrElse("pq-iters", "2").toInt,
-                maxCellSize = cap)
-            else graft.similarity.SemDedup.semDedup(corpus, centroids, iters, tau, cap)
-          opts.getOrElse("emit", "keep") match {
-            case "flags" => write(verdicts)
-            case "keep"  => write(df.join(
-              verdicts.filter(!col("is_dup")).select(col("vec_id").as("__keep")),
-              col(idCol) === col("__keep")).drop("__keep"))
-            case o => fail(s"--emit must be keep|flags, got: $o")
-          }
+  /** Runs one verb on the caller's session; never stops it, never exits.
+    * Usage errors raise [[CliError]]. */
+  def run(spark: SparkSession, args: Array[String]): Unit = invocation(args)(spark)
 
-        case "embed" =>
-          // text → integer vectors (signed hashed bag-of-words, native
-          // HashedBow): writes the (vec_id, e, nrm) frame every vector
-          // verb consumes — no external encoder anywhere
-          val textCol = col(opts.getOrElse("text", fail("--text COLUMN required")))
-          val idCol = col(opts.getOrElse("id", fail("--id COLUMN required")))
-          val dim = opts.getOrElse("dim", "64").toInt
-          write(graft.text.HashEmbed.embedDocuments(read(), textCol, idCol, dim))
+  def main(args: Array[String]): Unit = {
+    val code = exitCode {
+      val go = invocation(args) // usage errors surface before a session starts
+      val spark = GraftSession.getOrCreate("graft-cli")
+      try go(spark) finally spark.stop()
+    }
+    if (code != 0) sys.exit(code)
+  }
 
-        case "knn" =>
-          // brute-force integer-cosine top-k: -i is the corpus,
-          // --queries the query set. --prepared: both are (vec_id, e,
-          // nrm) frames (e.g. `embed` output); default: float vector
-          // frames quantized here via --vec/--id
-          val queriesPath = opts.getOrElse("queries", fail("--queries PATH required"))
-          val k = opts.getOrElse("k", "3").toInt
-          val qdf = PartitionedFiles.readParquet(spark, queriesPath)
-          val (corpus, queries) =
-            if (opts.get("prepared").exists(_.toBoolean)) (read(), qdf)
-            else {
-              val vecCol = col(opts.getOrElse("vec", fail("--vec COLUMN required")))
-              val idCol = col(opts.getOrElse("id", fail("--id COLUMN required")))
-              (graft.similarity.Similarity.prepareQuantized(read(), vecCol, idCol),
-                graft.similarity.Similarity.prepareQuantized(qdf, vecCol, idCol))
-            }
-          write(graft.similarity.Similarity.cosineTopK(corpus, queries, k))
+  /** `main`'s handler: 0, or 2 after printing a [[CliError]]. Anything
+    * else (a refused promotion, a failed job) propagates. */
+  private[graft] def exitCode(body: => Unit): Int =
+    try { body; 0 }
+    catch { case e: CliError => Console.err.println(s"graft: ${e.getMessage}"); 2 }
 
-        case "bpe" =>
-          // trained subword tokenizer as a persistable artifact:
-          // --mode train writes the (rank, lft, rgt) merge table;
-          // --mode tokens scores any corpus against a stored table
-          // (per-doc word + subword counts, OOV → per-char fallback)
-          val textCol = col(opts.getOrElse("text", fail("--text COLUMN required")))
-          opts.getOrElse("mode", "train") match {
-            case "train" =>
-              val maxTypes = opts.getOrElse("max-types", "100000").toInt
-              val numMerges = opts.getOrElse("merges", "16").toInt
-              val types = graft.text.Bpe.wordTypes(read(), textCol, maxTypes)
-              val merges = graft.text.Bpe.trainMerges(types, numMerges)
-              write(graft.text.Bpe.mergesDf(spark, merges))
-            case "tokens" =>
-              val idCol = col(opts.getOrElse("id", fail("--id COLUMN required")))
-              val mergesPath = opts.getOrElse("merges-table", fail("--merges-table PATH required"))
-              val merges = spark.read.parquet(mergesPath)
-                .orderBy("rank").collect()
-                .map(r => (r.getString(1), r.getString(2))).toSeq
-              val df = read()
-              val maxTypes = opts.getOrElse("max-types", "100000").toInt
-              val vocab = graft.text.Bpe.symbolize(
-                graft.text.Bpe.wordTypes(df, textCol, maxTypes), merges)
-              write(graft.text.Bpe.tokenCounts(df, textCol, Seq(idCol), vocab))
-            case o => fail(s"--mode must be train|tokens, got: $o")
-          }
+  private def invocation(args: Array[String]): SparkSession => Unit = {
+    val (opts, cmds) = parse(args.toList)
+    val cmd = cmds.headOption.getOrElse(fail(s"missing command\n$usage"))
+    val verb = verbs.getOrElse(cmd, fail(s"unknown command: $cmd\n$usage"))
+    spark => verb.body(new Ctx(spark, cmd, opts))
+  }
 
-        case "bloom-ledger" =>
-          // --mode append: OR-mergeable Bloom register of THIS drop's
-          //   keys into --ledger (idempotent per --drop-id);
-          // --mode screen: -i is the new batch — add `might_seen`
-          //   (false ⇒ certainly novel; zero corpus access);
-          // --mode novel: exact novelty — Bloom-certain novels skip
-          //   the join, candidates anti-join --corpus keys
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-          val (bits, hashes) = (opts.getOrElse("bits", (1 << 20).toString).toInt,
-            opts.getOrElse("hashes", "5").toInt)
-          opts.getOrElse("mode", "screen") match {
-            case "append" =>
-              val ledger = opts.getOrElse("ledger", fail("--ledger PATH required"))
-              val dropId = opts.getOrElse("drop-id", fail("--drop-id ID required"))
-              graft.sketch.BloomLedger.append(ledger,
-                graft.sketch.BloomLedger.dropSummary(read(), dropId, key, bits, hashes))
-            case "screen" =>
-              val ledger = opts.getOrElse("ledger", fail("--ledger PATH required"))
-              write(graft.sketch.BloomLedger.screen(read(), key,
-                graft.sketch.BloomLedger.mergedFrom(spark, ledger)))
-            case "novel" =>
-              val ledger = opts.getOrElse("ledger", fail("--ledger PATH required"))
-              val corpusPath = opts.getOrElse("corpus", fail("--corpus PATH required"))
-              val corpus = PartitionedFiles.readParquet(spark, corpusPath)
-              val corpusKey = opts.get("corpus-key").map(expr).getOrElse(key)
-              write(graft.sketch.BloomLedger.novelExact(corpus, corpusKey,
-                read(), key, graft.sketch.BloomLedger.mergedFrom(spark, ledger)))
-            case o => fail(s"--mode must be append|screen|novel, got: $o")
-          }
-
-        case "cluster-ledger" =>
-          // --mode append: merge -i's (--a, --b) near-dup pairs into
-          //   the persisted incremental CC ledger (drop-sized merge,
-          //   affected-bucket-only rewrite); emits the append stats;
-          // --mode labels: dump the current (id, cluster_id) labeling
-          import spark.implicits._
-          val ledger = opts.getOrElse("ledger", fail("--ledger PATH required"))
-          opts.getOrElse("mode", "labels") match {
-            case "append" =>
-              val a = opts.getOrElse("a", fail("--a COLUMN required"))
-              val b = opts.getOrElse("b", fail("--b COLUMN required"))
-              val st = graft.dedup.ClusterLedger.append(ledger, read(), a, b,
-                numBuckets = opts.getOrElse("buckets", "64").toInt)
-              write(Seq(
-                ("relabeled", st.relabeled.toString),
-                ("new_ids", st.newIds.toString),
-                ("rewritten_buckets", st.rewrittenBuckets.mkString(",")))
-                .toDF("stat", "value"))
-            case "labels" =>
-              write(graft.dedup.ClusterLedger.labels(spark, ledger))
-            case "vacuum" =>
-              // GC append directories no longer referenced by the
-              // owner-map manifest (superseded by later appends)
-              write(graft.dedup.ClusterLedger.vacuum(ledger).toDF("dropped"))
-            case o => fail(s"--mode must be append|labels|vacuum, got: $o")
-          }
-
-        case "drift" =>
-          val bucket = expr(opts.getOrElse("bucket", fail("--bucket EXPR required")))
-          opts.getOrElse("mode", "report") match {
-            case "profile" =>
-              val df = read()
-              write(df.select(bucket.cast("long").as("bucket"))
-                .groupBy("bucket").agg(count(lit(1)).as("n_ref")))
-            case "report" =>
-              val profile = PartitionedFiles.readParquet(spark,
-                opts.getOrElse("profile", fail("--profile PATH required")))
-              write(graft.operators.TableDiff.driftAgainstProfile(
-                profile, read(), bucket))
-            case o => fail(s"--mode must be profile|report, got: $o")
-          }
-        case "rrf" =>
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val sigs = opts.getOrElse("signals", fail("--signals name=expr;... required"))
-            .split(";").toSeq.map { p =>
-              val (n, e) = p.span(_ != '=')
-              if (e.isEmpty) fail(s"signal needs name=expr, got: $p")
-              n.trim -> expr(e.drop(1))
-            }
-          write(graft.quality.Ensemble.rrf(read(), id, sigs,
-            k = opts.getOrElse("k", "60").toLong,
-            scale = opts.getOrElse("scale", "1000000").toLong))
-        case "kmv-ledger" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val ledger = opts.getOrElse("ledger", fail("--ledger PATH required"))
-          opts.getOrElse("mode", "overlap") match {
-            case "append" =>
-              val dropId = opts.getOrElse("drop-id", fail("--drop-id ID required"))
-              graft.sketch.KmvLedger.append(ledger,
-                graft.sketch.KmvLedger.dropSummary(read(), dropId, text,
-                  opts.getOrElse("k", "256").toInt))
-            case "overlap" =>
-              write(graft.sketch.KmvLedger.overlapVsHistory(read(), text,
-                graft.sketch.KmvLedger.mergedFrom(spark, ledger)))
-            case o => fail(s"--mode must be append|overlap, got: $o")
-          }
-
-        case "stats-ledger" =>
-          // --mode append: summarize THIS drop (-i) into --ledger
-          //   (idempotent per --drop-id: dynamic partition overwrite);
-          // --mode rollup: -i IS the ledger — merge every drop summary
-          //   (additive stats sum, HLL registers element-max) and
-          //   write the whole-corpus stats to --outfile
-          val p = opts.getOrElse("p", "12").toInt
-          opts.getOrElse("mode", "append") match {
-            case "append" =>
-              val ledger = opts.getOrElse("ledger", fail("--ledger PATH required"))
-              val dropId = opts.getOrElse("drop-id", fail("--drop-id ID required"))
-              val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-              val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-              val tokens = opts.get("tokens").map(expr).getOrElse(
-                opts.get("text").map(t => graft.text.TextAnalysis.tokenCount(col(t)).cast("bigint"))
-                  .getOrElse(fail("--tokens EXPR (or --text COLUMN) required")))
-              graft.sketch.StatsLedger.append(ledger,
-                graft.sketch.StatsLedger.dropSummary(read(), dropId, group, key, tokens, p))
-            case "rollup" =>
-              write(graft.sketch.StatsLedger.merge(read(), p))
-            case o => fail(s"--mode must be append|rollup, got: $o")
-          }
-
-        case "centroid-classify" =>
-          // leave-one-out nearest-centroid label probe over an
-          // embedding column: --emit preds (per-vector verdicts) or
-          // confusion (the |labels|² bleed matrix)
-          val df = read()
-          val corpus = graft.similarity.Similarity.prepareQuantized(df,
-            col(opts.getOrElse("vec", fail("--vec COLUMN required"))),
-            col(opts.getOrElse("id", fail("--id COLUMN required"))),
-            col(opts.getOrElse("label", fail("--label COLUMN required"))).as("label"))
-          val preds = graft.similarity.Similarity.centroidClassify(corpus)
-          opts.getOrElse("emit", "preds") match {
-            case "preds" => write(preds)
-            case "confusion" => write(preds.groupBy(col("true_label"), col("pred_label"))
-              .agg(count(lit(1)).as("n")))
-            case o => fail(s"--emit must be preds|confusion, got: $o")
-          }
-
-        case "nb-classify" =>
-          // trained Naive-Bayes text classifier: --hold-mod M scores
-          // only the held-out doc_id ≡ 0 (mod M) slice (the eval
-          // shape); default is resubstitution over the whole corpus.
-          // --emit keep drops rows the trained model relabels (the
-          // Corpus.nbLabelFilter gate as a verb)
-          val df = read()
-          val (textCol, idCol, labelCol) = (
-            opts.getOrElse("text", fail("--text COLUMN required")),
-            opts.getOrElse("id", fail("--id COLUMN required")),
-            opts.getOrElse("label", fail("--label COLUMN required")))
-          val (buckets, scaleBits) = (opts.getOrElse("buckets", "256").toInt,
-            opts.getOrElse("scale-bits", "40").toInt)
-          val preds = opts.get("hold-mod") match {
-            case Some(m) => graft.quality.NaiveBayes.holdoutProbe(df,
-              col(textCol), col(idCol), col(labelCol), m.toInt, buckets, scaleBits)
-            case None => graft.quality.NaiveBayes.classify(
-              df, col(textCol), col(idCol), col(labelCol),
-              df, col(textCol), col(idCol), col(labelCol), buckets, scaleBits)
-          }
-          opts.getOrElse("emit", "preds") match {
-            case "preds" => write(preds)
-            case "confusion" => write(preds.groupBy(col("true_label"), col("pred_label"))
-              .agg(count(lit(1)).as("n")))
-            case "keep" => write(df.join(
-              preds.filter(col("correct") === 1).select(col("doc_id").as("__keep")),
-              col(idCol) === col("__keep")).drop("__keep"))
-            case o => fail(s"--emit must be preds|confusion|keep, got: $o")
-          }
-
-        case "scrub-sentences" =>
-          // C4 three-sentence-span dedup: --emit clean rebuilds the
-          // scrubbed docs (keep-first policy), --emit spans reports
-          // every duplicated 3-sentence span occurrence
-          val df = read()
-          val (textCol, idCol) = (opts.getOrElse("text", fail("--text COLUMN required")),
-            opts.getOrElse("id", fail("--id COLUMN required")))
-          val maxSent = opts.getOrElse("max-sent-tokens", "8").toInt
-          opts.getOrElse("emit", "clean") match {
-            case "clean" => write(graft.dedup.SentenceDedup
-              .scrubDuplicatedSentenceSpans(df, col(textCol), col(idCol), maxSent))
-            case "spans" => write(graft.dedup.SentenceDedup
-              .duplicatedSentenceSpans(df, col(textCol), col(idCol), maxSent))
-            case o => fail(s"--emit must be clean|spans, got: $o")
-          }
-        case "dsir" =>
-          // DSIR importance resampling against a target-domain sample
-          // (arXiv:2302.03169): --emit keep (default) writes the
-          // selected top-k rows; --emit weights writes (doc_id, iw)
-          // for every input doc
-          val textCol = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val idCol = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val targetPath = opts.getOrElse("target", fail("--target PATH required"))
-          val target = fmt match {
-            case "json"    => PartitionedFiles.readJsonl(spark, targetPath, opts.get("target-schema"))
-            case "csv"     => PartitionedFiles.readCsv(spark, targetPath, header = true, opts.get("target-schema"))
-            case "parquet" => PartitionedFiles.readParquet(spark, targetPath)
-            case "orc"     => PartitionedFiles.readOrc(spark, targetPath)
-            case o         => fail(s"dsir unsupported for format: $o")
-          }
-          val tText = expr(opts.getOrElse("target-text", opts.getOrElse("text", "text")))
-          val tId = expr(opts.getOrElse("target-id", opts.getOrElse("id", "id")))
-          val (buckets, scaleBits) = (opts.getOrElse("buckets", "512").toInt,
-            opts.getOrElse("scale-bits", "40").toInt)
-          val df = read()
-          opts.getOrElse("emit", "keep") match {
-            case "weights" =>
-              val ratios = graft.quality.Dsir.logRatios(target, tText, tId,
-                df, textCol, idCol, buckets, scaleBits)
-              write(graft.quality.Dsir.importanceWeights(df, textCol, idCol, ratios, buckets))
-            case "keep" =>
-              val k = opts.getOrElse("k", fail("--k N required for --emit keep")).toInt
-              val sel = graft.quality.Dsir.select(df, textCol, idCol,
-                target, tText, tId, k, buckets, scaleBits)
-                .select(col("doc_id").as("__dsir_keep"))
-              write(df.join(sel, idCol === col("__dsir_keep")).drop("__dsir_keep"))
-            case o => fail(s"unknown --emit: $o")
-          }
-
-        case "unimax" =>
-          // UniMax budget allocation (arXiv:2304.09151): --emit alloc
-          // (default) writes the per-group allocation table; --emit
-          // copies materializes per-document repeat counts
-          val group = expr(opts.getOrElse("group", fail("--group COLUMN required")))
-          val textCol = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val (num, den) = (opts.getOrElse("budget-num", "8").toLong,
-            opts.getOrElse("budget-den", "5").toLong)
-          val em = opts.getOrElse("epochs-milli", "2000").toLong
-          val df = read()
-          val alloc = graft.text.UniMax.allocateRelative(df, group, textCol, num, den, em)
-          opts.getOrElse("emit", "alloc") match {
-            case "alloc" => write(alloc)
-            case "copies" =>
-              val idCol = expr(opts.getOrElse("id", fail("--id COLUMN required for --emit copies")))
-              write(graft.text.UniMax.materializeCopies(df, group, textCol, idCol, alloc))
-            case o => fail(s"unknown --emit: $o")
-          }
-
-        case "novel" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val corpusPath = opts.getOrElse("corpus", fail("--corpus PATH required"))
-          val corpus = fmt match {
-            case "json"    => PartitionedFiles.readJsonl(spark, corpusPath, opts.get("corpus-schema"))
-            case "csv"     => PartitionedFiles.readCsv(spark, corpusPath, header = true, opts.get("corpus-schema"))
-            case "parquet" => PartitionedFiles.readParquet(spark, corpusPath)
-            case "orc"     => PartitionedFiles.readOrc(spark, corpusPath)
-            case o         => fail(s"novel unsupported for format: $o")
-          }
-          write(graft.dedup.Dedup.minhashNovel(corpus, read(), text, id,
-            shingleN = opts.getOrElse("shingle", "3").toInt,
-            numBands = opts.getOrElse("bands", "4").toInt,
-            rowsPerBand = opts.getOrElse("rows-per-band", "2").toInt))
-        case "diff" =>
-          // -i holds the NEW snapshot; --old the previous one. Same
-          // column names both sides unless --old-key/--old-content say
-          // otherwise.
-          val key = expr(opts.getOrElse("key", fail("--key COLUMN required")))
-          val content = expr(opts.getOrElse("content", fail("--content COLUMN required")))
-          val oldPath = opts.getOrElse("old", fail("--old PATH required"))
-          val old = fmt match {
-            case "json"    => PartitionedFiles.readJsonl(spark, oldPath, opts.get("old-schema"))
-            case "csv"     => PartitionedFiles.readCsv(spark, oldPath, header = true, opts.get("old-schema"))
-            case "parquet" => PartitionedFiles.readParquet(spark, oldPath)
-            case "orc"     => PartitionedFiles.readOrc(spark, oldPath)
-            case o         => fail(s"diff unsupported for format: $o")
-          }
-          val d = graft.operators.TableDiff.snapshotDiff(old, read(),
-            opts.get("old-key").map(expr).getOrElse(key), key,
-            opts.get("old-content").map(expr).getOrElse(content), content,
-            keyName = opts.getOrElse("key-name", "id"))
-          opts.getOrElse("emit", "rows") match {
-            case "rows"  => write(d)
-            case "stats" => write(graft.operators.TableDiff.snapshotDiffStats(d))
-            case o       => fail(s"--emit must be rows|stats, got: $o")
-          }
-        case "sample-weighted" =>
-          val key = expr(opts.getOrElse("key", fail("--key COLUMN required")))
-          val weight = expr(opts.getOrElse("weight", fail("--weight COLUMN required")))
-          write(read().filter(graft.text.TextPrep.weightedSample(
-            key, weight, opts.getOrElse("threshold", fail("--threshold N required")).toLong)))
-        case "winnow" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          write(graft.text.TextAnalysis.winnowFingerprints(read(), text, id,
-            k = opts.getOrElse("k", "5").toInt, w = opts.getOrElse("w", "4").toInt))
-        case "neighbors" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val keyLen = opts.getOrElse("key-len", "30").toInt
-          val key = substring(regexp_replace(lower(text.cast("string")), "[^a-z0-9]", ""), 1, keyLen)
-          write(graft.dedup.Dedup.sortedNeighborhoodPairs(read(), id, key,
-            window = opts.getOrElse("window", "5").toInt))
-        case "scd2" =>
-          val key = expr(opts.getOrElse("key", fail("--key COLUMN required")))
-          val ts = expr(opts.getOrElse("ts", fail("--ts EXPR required")))
-          val order = opts.get("order").map(_ => exprList("order"))
-            .getOrElse(Seq(expr(opts("ts"))))
-          write(graft.operators.TemporalJoins.scd2(read(), key, ts, order))
-        case "shuffle" =>
-          val key = expr(opts.getOrElse("key", fail("--key COLUMN required")))
-          write(graft.operators.Ordering.shuffleRank(read(), key,
-            seed = opts.getOrElse("seed", "42").toLong))
-        case "pack-sequences" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val shard = expr(opts.getOrElse("shard", "0"))
-          write(graft.text.TextPrep.packSequences(read(), shard, Seq(id), text,
-            graft.text.TextAnalysis.tokenCount(text),
-            budget = opts.getOrElse("budget", "2000").toLong,
-            sep = opts.getOrElse("sep", "\n")))
-        case "corpus" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          // --emit ledger: audit the chain and write the drop ledger
-          // (doc_id, stage_idx, stage) instead of the surviving docs
-          val emitLedger = opts.getOrElse("emit", "docs") match {
-            case "docs"   => false
-            case "ledger" => true
-            case o        => fail(s"--emit must be docs|ledger, got: $o")
-          }
-          var c = Corpus(read(), text, id)
-          if (emitLedger) c = c.audited
-          opts.get("rules").foreach(_.split(",").map(_.trim).filter(_.nonEmpty).foreach {
-            case "gopher" => c = c.gopherQualityFilter(
-              opts.getOrElse("gopher-min-words", "50").toInt,
-              opts.getOrElse("gopher-max-words", "100000").toInt)
-            case "c4"         => c = c.c4LineFilter(opts.getOrElse("text-name", "text"))
-            case "repetition" => c = c.repetitionFilter()
-            case o => fail(s"--rules entries must be gopher|c4|repetition, got: $o")
-          })
-          opts.get("min-tokens").foreach(m => c = c.qualityFilter(m.toInt))
-          opts.getOrElse("dedup", "exact") match {
-            case "exact" => c = c.exactDedup()
-            case "none"  =>
-            case o       => fail(s"--dedup must be exact|none, got: $o")
-          }
-          opts.getOrElse("near", "minhash") match {
-            case "minhash"      => c = c.nearDedup()
-            case "minhash-best" => c = c.nearDedupKeepBest()
-            case "simhash"      => c = c.nearDedupSimhash()
-            case "winnow"       => c = c.nearDedupWinnow()
-            case "none"         =>
-            case o => fail(s"--near must be minhash|minhash-best|simhash|winnow|none, got: $o")
-          }
-          opts.get("lm-rare-max").foreach(r => c = c.lmQualityFilter(
-            r.toLong, opts.getOrElse("lm-max-rare-ratio", "0.5").toDouble))
-          opts.get("bg-rare-max").foreach(r => c = c.bigramQualityFilter(
-            r.toLong, opts.getOrElse("bg-max-rare-ratio", "0.5").toDouble))
-          opts.get("ppl-rare-max").foreach { r =>
-            val keepSet = opts.getOrElse("ppl-keep", "1,2")
-              .split(",").map(_.trim.toInt).toSet
-            c = c.keepPplBuckets(col(opts.getOrElse("lang", "lang")), r.toLong, keepSet)
-          }
-          opts.get("decontam").foreach { p =>
-            val bench = fmt match {
-              case "json"    => PartitionedFiles.readJsonl(spark, p, opts.get("decontam-schema"))
-              case "csv"     => PartitionedFiles.readCsv(spark, p, header = true, opts.get("decontam-schema"))
-              case "parquet" => PartitionedFiles.readParquet(spark, p)
-              case "orc"     => PartitionedFiles.readOrc(spark, p)
-              case o         => fail(s"corpus --decontam unsupported for format: $o")
-            }
-            c = c.decontaminate(bench,
-              expr(opts.getOrElse("decontam-text", "text")),
-              expr(opts.getOrElse("decontam-id", "doc_id")))
-          }
-          opts.get("source-cap").foreach { s =>
-            c = c.capPerSource(
-              col(opts.getOrElse("source", "source")), s.toInt)
-          }
-          opts.get("temperature").foreach(s => c = c.temperatureSample(col(s)))
-          opts.get("split").foreach { s =>
-            val parts = s.split(",").map(_.trim.toInt)
-            if (parts.length != 2) fail("--split needs TRAIN,VAL percentages")
-            c = c.splitAssign(parts(0), parts(1))
-          }
-          write(if (emitLedger) c.dropLedger else c.df)
-        case "phrase-search" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val df = read()
-          val phrases = opts.get("phrases") match {
-            case Some(path) => fmt match {
-              case "json"    => PartitionedFiles.readJsonl(spark, path, opts.get("phrases-schema"))
-              case "csv"     => PartitionedFiles.readCsv(spark, path, header = true, opts.get("phrases-schema"))
-              case "parquet" => PartitionedFiles.readParquet(spark, path)
-              case "orc"     => PartitionedFiles.readOrc(spark, path)
-              case o         => fail(s"phrase-search unsupported for format: $o")
-            }
-            case None => graft.text.Search.topPhrases(df, text,
-              n = opts.getOrElse("n", "3").toInt, k = opts.getOrElse("top", "5").toInt)
-          }
-          write(graft.text.Search.phraseOccurrences(df, text, id,
-            phrases, expr(opts.getOrElse("phrase-col", "phrase")),
-            expr(opts.getOrElse("phrase-col", "phrase"))))
-        case "trending" =>
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-          val day = expr(opts.getOrElse("day", fail("--day EXPR required")))
-          write(graft.operators.Timeseries.TimeseriesOps(read())
-            .decayedCounts(key, day))
-        case "quantile-norm" =>
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val score = expr(opts.getOrElse("score", fail("--score EXPR required")))
-          val id = expr(opts.getOrElse("id", fail("--id EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read())
-            .quantileNormalize(group, score, id))
-        case "skew" =>
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-          write(graft.sketch.Sketches.amsF2(read(), group, key,
-            lanes = opts.getOrElse("lanes", "60").toInt))
-        case "trend" =>
-          // per-group OLS drift report (exact integer numerators)
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val x = expr(opts.getOrElse("x", fail("--x EXPR required")))
-          val y = expr(opts.getOrElse("y", fail("--y EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read()).groupOls(Seq(group), x, y))
-        case "balance" =>
-          // corpus-balance audit: exact Gini per group in per-mille
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val value = expr(opts.getOrElse("value", fail("--value EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read()).giniByGroup(Seq(group), value))
-        case "stop-grams" =>
-          // the DocFreqCap transparency report: which grams the cap
-          // drops from the exact pair sweep and the C(df,2) work saved
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val cap = opts.getOrElse("cap", "64") match {
-            case "auto" => graft.dedup.DocFreqCap.Auto
-            case "unbounded" => graft.dedup.DocFreqCap.Unbounded
-            case n => graft.dedup.DocFreqCap.Fixed(n.toLong)
-          }
-          write(graft.dedup.Dedup.stopGrams(read(), text, id,
-            n = opts.getOrElse("n", "3").toInt, cap = cap))
-        case "coactive" =>
-          // co-active pair mining over an event log. --blocks B is the
-          // 1-in-B unbiased pair-sample work dial; --blocks 1 buys the
-          // EXACT all-pairs sweep knowingly (quadratic in per-window
-          // actives — same plan shape, just no block pruning)
-          val user = expr(opts.getOrElse("user", fail("--user EXPR required")))
-          val etype = expr(opts.getOrElse("type", fail("--type EXPR required")))
-          val ts = expr(opts.getOrElse("ts", fail("--ts EXPR required")))
-          write(graft.operators.TemporalJoins.coActivePairs(read(), user, etype, ts,
-            bucketUs = opts.getOrElse("bucket-hours", "3").toLong * 3600000000L,
-            blocks = opts.getOrElse("blocks", "4").toInt,
-            topK = opts.getOrElse("top", "25").toInt))
-        case "keywords" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          write(graft.text.TextAnalysis.textRank(read(), text,
-            iters = opts.getOrElse("iters", "3").toInt,
-            topK = opts.getOrElse("top", "40").toInt))
-        case "triplets" =>
-          val vec = expr(opts.getOrElse("vec", fail("--vec COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val label = expr(opts.getOrElse("label", fail("--label COLUMN required")))
-          val corpus = graft.similarity.Similarity.prepareQuantized(read(), vec, id, label)
-          val anchors = corpus.filter(
-            pmod(col("vec_id"), lit(opts.getOrElse("anchor-mod", "10").toLong)) === 0)
-          write(graft.similarity.Similarity.mineTriplets(corpus, anchors,
-            k = opts.getOrElse("k", "5").toInt))
-        case "auc" =>
-          // exact grouped Mann–Whitney AUC over an integral score vs
-          // a boolean truth expression; NULL for one-class groups
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val score = expr(opts.getOrElse("score", fail("--score EXPR required (integral)")))
-          val positive = expr(opts.getOrElse("positive", fail("--positive BOOL-EXPR required")))
-          write(graft.quality.Eval.aucExact(read(), group, score, positive))
-        case "keyness" =>
-          // Dunning G² distinctive terms per group (qlog64-exact)
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          write(graft.text.TextAnalysis.keyness(read(), text, group,
-            topK = opts.getOrElse("top", "15").toInt))
-        case "survival" =>
-          // Kaplan–Meier churn curve over entity lifetimes; entities
-          // whose last event is within --censor-hours of the horizon
-          // are censored, not churned
-          val id = expr(opts.getOrElse("id", fail("--id EXPR required")))
-          val tsUs = expr(opts.getOrElse("ts-us", fail("--ts-us EXPR required (µs)")))
-          write(graft.operators.Timeseries.kaplanMeier(read(), id, tsUs,
-            censorWindowUs = opts.getOrElse("censor-hours", "24").toLong * 3600000000L,
-            bucketUs = opts.getOrElse("bucket-hours", "24").toLong * 3600000000L))
-        case "ctfidf" =>
-          // BERTopic-style class TF-IDF labeling terms per group
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          write(graft.text.TextAnalysis.ctfidfTopTerms(read(), text, group,
-            topK = opts.getOrElse("top", "15").toInt))
-        case "mi" =>
-          // mutual-information dependence audit between two columns
-          val x = expr(opts.getOrElse("x", fail("--x EXPR required")))
-          val y = expr(opts.getOrElse("y", fail("--y EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read()).mutualInformation(x, y))
-        case "distinct-n" =>
-          // n-gram diversity per group (templated sources collapse)
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val ns = opts.getOrElse("ns", "1,2,3").split(",").toSeq.map(_.trim.toInt)
-          write(graft.text.TextAnalysis.distinctN(read(), text, group, ns))
-        case "kl-source" =>
-          // KL(group || corpus) distributional novelty per group
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          write(graft.text.TextAnalysis.sourceKl(read(), text, group))
-        case "cc-sizes" =>
-          // component-size histogram over an edge list input
-          val a = opts.getOrElse("a", "doc_a")
-          val b = opts.getOrElse("b", "doc_b")
-          val comps = graft.dedup.Components.connectedComponents(read(), a, b)
-          write(graft.dedup.Components.componentSizes(comps, col("cluster_id")))
-        case "hhi" =>
-          // per-group key-concentration audit (HHI bp + effective keys)
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read()).concentration(group, key))
-        case "spearman" =>
-          // per-group monotone association of two integral metrics
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val x = expr(opts.getOrElse("x", fail("--x EXPR required (integral)")))
-          val y = expr(opts.getOrElse("y", fail("--y EXPR required (integral)")))
-          write(graft.operators.Relational.RelationalOps(read()).spearman(Seq(group), x, y))
-        case "kcore" =>
-          // dense-backbone split: peel nodes of degree < k to fixpoint
-          val src = expr(opts.getOrElse("src", fail("--src EXPR required")))
-          val dst = expr(opts.getOrElse("dst", fail("--dst EXPR required")))
-          write(graft.operators.GraphOps.kCore(
-            read().select(src.as("src"), dst.as("dst")),
-            k = opts.getOrElse("k", "2").toLong,
-            maxRounds = opts.getOrElse("rounds", "12").toInt))
-        case "benford" =>
-          // first-digit forensic audit of a positive integral column
-          val value = expr(opts.getOrElse("value", fail("--value EXPR required (integral)")))
-          write(graft.quality.Validate.benfordAudit(read(), value))
-        case "twap" =>
-          // time-weighted average of an integral metric per key
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-          val tsUs = expr(opts.getOrElse("ts-us", fail("--ts-us EXPR required (µs)")))
-          val value = expr(opts.getOrElse("value", fail("--value EXPR required (integral)")))
-          write(graft.operators.Timeseries.timeWeightedAvg(read(), key, tsUs, value))
-        case "readability" =>
-          // exact-integer Flesch–Kincaid grade per document
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          write(graft.text.TextAnalysis.readability(read(), text, id))
-        case "luhn" =>
-          // 13-19 digit runs with their mod-10 checksum verdict
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          write(graft.text.TextPrep.luhnScreen(read(), text, id))
-        case "winsorize" =>
-          // per-group nearest-rank clipping: robust prep that keeps n
-          // and the row set stable (integral --value, e.g. cents)
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val value = expr(opts.getOrElse("value", fail("--value EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read()).winsorize(group, value,
-            loPerMille = opts.getOrElse("lo", "10").toLong,
-            hiPerMille = opts.getOrElse("hi", "990").toLong))
-        case "trimmed-mean" =>
-          // robust center: mean over the nearest-rank [lo,hi]‰ slice
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val value = expr(opts.getOrElse("value", fail("--value EXPR required")))
-          write(graft.operators.Relational.RelationalOps(read()).trimmedMean(group, value,
-            loPerMille = opts.getOrElse("lo", "50").toLong,
-            hiPerMille = opts.getOrElse("hi", "950").toLong))
-        case "target-encode" =>
-          // leakage-safe leave-one-out categorical encoding
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required")))
-          val target = expr(opts.getOrElse("target", fail("--target EXPR required (integral)")))
-          write(graft.operators.Relational.RelationalOps(read()).targetEncodeLoo(key, target))
-        case "conversion-ci" =>
-          // per-arm entity-level conversion rate + Agresti-Coull z=2 CI
-          val arm = expr(opts.getOrElse("arm", fail("--arm EXPR required")))
-          val entity = expr(opts.getOrElse("entity", fail("--entity EXPR required")))
-          val conv = expr(opts.getOrElse("converted", fail("--converted BOOL-EXPR required")))
-          write(graft.quality.Validate.conversionReport(read(), arm, entity, conv))
-        case "attribution" =>
-          // first/last/linear conversion credit in one pass; linear
-          // credit is exact integer micro-credits (1000000 div n)
-          val user = expr(opts.getOrElse("user", fail("--user EXPR required")))
-          val etype = expr(opts.getOrElse("type", fail("--type EXPR required")))
-          val tsUs = expr(opts.getOrElse("ts-us", fail("--ts-us EXPR required (µs)")))
-          val id = expr(opts.getOrElse("id", fail("--id EXPR required")))
-          val conv = opts.getOrElse("conv", fail("--conv TYPE required"))
-          val touches = opts.getOrElse("touch", fail("--touch T1,T2 required"))
-            .split(",").toSeq.filter(_.nonEmpty)
-          val windowUs = opts.getOrElse("window-hours", "24").toLong * 3600000000L
-          write(graft.operators.TemporalJoins.attribution(read(), user, etype, tsUs, id,
-            conv, touches, windowUs,
-            bucketUs = opts.getOrElse("bucket-hours", "24").toLong * 3600000000L))
-        case "heavy-keys" =>
-          // per-group heavy hitters over an integral key: MG sketch
-          // per group + exact recount, threshold num/den of the group
-          val group = expr(opts.getOrElse("group", fail("--group EXPR required")))
-          val key = expr(opts.getOrElse("key", fail("--key EXPR required (integral)")))
-          write(graft.sketch.Sketches.heavyHittersByGroup(read(), group, key,
-            shareNum = opts.getOrElse("num", "8").toLong,
-            shareDen = opts.getOrElse("den", "1000").toLong))
-        case "bm25" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          val terms = opts.getOrElse("terms", fail("--terms T1,T2 required"))
-            .split(",").toSeq.filter(_.nonEmpty)
-          write(graft.text.Search.bm25Rank(read(), text, id, terms,
-            topK = opts.getOrElse("top", "50").toInt))
-        case "zonemap" =>
-          // file-level min/max manifests: --action write (cluster +
-          // stats), build (stats over an existing dir), read (pruned
-          // range probe lo..hi on --key)
-          val out = opts.getOrElse("out", fail("--out PATH required"))
-          opts.getOrElse("action", "write") match {
-            case "write" =>
-              graft.sources.ZoneMaps.writeClustered(read(), out,
-                numPartitions = opts.getOrElse("parts", "8").toInt,
-                orderBy = opts.getOrElse("key", fail("--key COLUMN required")))
-              println(s"[graft] zone-mapped $out")
-            case "build" =>
-              graft.sources.ZoneMaps.buildStats(spark, out,
-                opts.getOrElse("key", fail("--key COLUMN required")).split(",").toSeq)
-              println(s"[graft] zone map rebuilt for $out")
-            case "read" =>
-              // the bound FAMILY comes from the zone manifest's own
-              // schema (never guessed from the literal's shape — a
-              // string column of zero-padded ids stores binary-ordered
-              // bounds that numeric comparison would mis-prune);
-              // --bound-type long|string overrides when no manifest
-              val key = opts.getOrElse("key", fail("--key COLUMN required"))
-              val lo = opts.getOrElse("lo", fail("--lo N required"))
-              val hi = opts.getOrElse("hi", fail("--hi N required"))
-              val family = opts.get("bound-type")
-                .orElse(graft.sources.ZoneMaps.boundFamily(spark, out, key))
-              write(family match {
-                case Some("long") => graft.sources.ZoneMaps.readRange(spark, out, key,
-                  lo.toLongOption.getOrElse(fail(s"--lo '$lo' is not a BIGINT bound")),
-                  hi.toLongOption.getOrElse(fail(s"--hi '$hi' is not a BIGINT bound")))
-                case Some("string") => graft.sources.ZoneMaps.readRange(spark, out, key, lo, hi)
-                case Some(other) => fail(s"--bound-type must be long or string, got $other")
-                case None => // no manifest: residual-only scan, either family is exact
-                  (lo.toLongOption, hi.toLongOption) match {
-                    case (Some(l), Some(h)) =>
-                      graft.sources.ZoneMaps.readRange(spark, out, key, l, h)
-                    case _ => graft.sources.ZoneMaps.readRange(spark, out, key, lo, hi)
-                  }
-              })
-            case other => fail(s"unknown zonemap action: $other")
-          }
-        case "index-compact" =>
-          // maintenance pass for the drop_id-partitioned persisted
-          // index family: consolidate a table's append history to one
-          // base partition (one file per bucket again). --kind names
-          // the index; bm25 compacts the tf table AND its stats
-          // ledger; ivf additionally reclaims rebalance's dead rows.
-          // Claim-guarded, crash-healable (a crashed pass heals at the
-          // next run) — schedule from maintenance, not under probes.
-          import spark.implicits._
-          val table = opts.getOrElse("table", fail("--table NAME required"))
-          def statRows(label: String, st: graft.sources.TableCompact.CompactStats) = Seq(
-            (label, "rows", st.rows), (label, "dropped_rows", st.droppedRows),
-            (label, "partitions_before", st.partitionsBefore.toLong),
-            (label, "partitions_after", st.partitionsAfter.toLong),
-            (label, "files_before", st.filesBefore.toLong),
-            (label, "files_after", st.filesAfter.toLong))
-          val rows = opts.getOrElse("kind", fail(
-            "--kind postings|bm25|minhash|ivf|pq required")) match {
-            case "postings" => statRows("postings", graft.text.SearchIndex.compact(spark, table))
-            case "bm25" =>
-              val (tf, st) = graft.text.SearchIndex.compactBm25(spark, table)
-              statRows("tf", tf) ++ statRows("stats", st)
-            case "minhash" => statRows("bands", graft.dedup.MinhashIndex.compact(spark, table))
-            case "ivf" => statRows("lists", graft.similarity.IvfIndex.compact(spark, table))
-            case "pq" => statRows("lists", graft.similarity.PqIndex.compact(spark, table))
-            case other => fail(s"unknown index kind: $other")
-          }
-          write(rows.toDF("table_part", "stat", "value"))
-        case "index-maintain" =>
-          // the index family's nightly job as one verb — the policy
-          // driver over the maintenance gauges: compact when the
-          // append history exceeds --max-partitions (each drop
-          // partition costs a listing + footer fetches per probe);
-          // for ivf, REBALANCE first when list concentration drifted
-          // past --hhi-factor-x10/10 × the build baseline; then
-          // reclaim superseded generations (previous kept for
-          // in-flight probes unless --keep-previous false). Zero-
-          // downtime throughout (LiveTable view swaps).
-          import spark.implicits._
-          val table = opts.getOrElse("table", fail("--table NAME required"))
-          val kind = opts.getOrElse("kind", fail(
-            "--kind postings|bm25|minhash|ivf|pq required"))
-          val maxParts = opts.getOrElse("max-partitions", "8").toInt
-          val keepPrev = opts.getOrElse("keep-previous", "true").toBoolean
-          val dataTable = kind match {
-            case "ivf" => s"${table}_cells"
-            case "pq" => s"${table}_pqcells"
-            case _ => table
-          }
-          def partsNow: Long = spark.sql("SHOW PARTITIONS " +
-            graft.sources.LiveTable.resolve(spark, dataTable)).count()
-          val partsBefore = partsNow
-          val rebalanced: Option[graft.similarity.IvfIndex.RebalanceStats] =
-            if (kind == "ivf") {
-              val d = graft.similarity.IvfIndex.driftStats(spark, table)
-              val factorX10 = opts.getOrElse("hhi-factor-x10", "15").toLong
-              if (d.hhiPermille * 10 > factorX10 * math.max(d.hhiPermilleAtBuild, 1L))
-                Some(graft.similarity.IvfIndex.rebalance(spark, table))
-              else None
-            } else None
-          val needCompact = partsNow > maxParts ||
-            rebalanced.exists(_.splitCells > 0) // reclaim the split's dead rows
-          if (needCompact) kind match {
-            case "postings" => graft.text.SearchIndex.compact(spark, table)
-            case "bm25" => graft.text.SearchIndex.compactBm25(spark, table)
-            case "minhash" => graft.dedup.MinhashIndex.compact(spark, table)
-            case "ivf" => graft.similarity.IvfIndex.compact(spark, table)
-            case "pq" => graft.similarity.PqIndex.compact(spark, table)
-            case other => fail(s"unknown index kind: $other")
-          }
-          val genTables = kind match {
-            case "bm25" => Seq(table, s"${table}_stats")
-            case _ => Seq(dataTable)
-          }
-          val vacuumed = genTables.flatMap(t =>
-            graft.sources.TableCompact.vacuumGens(spark, t, keepPrev)) ++
-            (kind match { // trained-state generations (pointer files)
-              case "ivf" => graft.similarity.IvfIndex.vacuumGens(spark, table)
-              case "pq" => graft.similarity.PqIndex.vacuumGens(spark, table)
-              case _ => Nil
-            })
-          write((Seq(
-            ("gauge", "partitions_before", partsBefore.toString),
-            ("gauge", "partitions_after", partsNow.toString),
-            ("action", "compacted", needCompact.toString)) ++
-            rebalanced.map(r => ("action", "rebalanced_cells", r.splitCells.toString)) ++
-            vacuumed.map(("action", "vacuumed", _))).toDF("kind", "name", "value"))
-        case "kmv-overlap" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val group = expr(opts.getOrElse("group", "source"))
-          write(graft.sketch.Sketches.kmvOverlapReport(read(), group, text,
-            opts.getOrElse("k", "256").toInt))
-        case "datasheet" =>
-          val text = expr(opts.getOrElse("text", fail("--text COLUMN required")))
-          val id = expr(opts.getOrElse("id", fail("--id COLUMN required")))
-          write(graft.quality.Datasheet.perSource(read(), text, id,
-            expr(opts.getOrElse("source", "source")),
-            expr(opts.getOrElse("lang", "lang")),
-            minWords = opts.getOrElse("gopher-min-words", "50").toInt,
-            maxWords = opts.getOrElse("gopher-max-words", "100000").toInt))
-        case "schema-check" =>
-          write(graft.quality.Validate.schemaDrift(read(),
-            opts.getOrElse("expect", fail("--expect DDL required"))))
-        case "validate" =>
-          val cs = parsedChecks()
-          if (cs.isEmpty) fail("validate requires --not-null, --unique and/or --check")
-          write(graft.quality.Validate.violations(read(), cs))
-
-        case "promote" =>
-          // write-audit-publish versioned corpus (Versioned.promote):
-          // stage -i under --root, gate on --not-null/--unique/--check
-          // (+ optional --diff-key/--diff-content/--max-changed-pm),
-          // atomically publish on pass; --action rollback|vacuum|
-          // current manage the pointer (-i is ignored for those)
-          import spark.implicits._
-          val root = opts.getOrElse("root", fail("--root PATH required"))
-          opts.getOrElse("action", "promote") match {
-            case "promote" =>
-              val gate = opts.get("diff-key").map(k => graft.sources.Versioned.DiffGate(
-                k, opts.getOrElse("diff-content", fail("--diff-content required with --diff-key")),
-                opts.getOrElse("max-changed-pm", "50").toLong))
-              val r = graft.sources.Versioned.promote(read(), root, parsedChecks(), gate)
-              val rows =
-                Seq(("outcome", "promoted", r.promoted.toString),
-                  ("outcome", "version", r.version.toString),
-                  ("outcome", "path", r.path)) ++
-                r.reason.map(("outcome", "reason", _)) ++
-                r.violations.map { case (rule, n) => ("violation", rule, n.toString) } ++
-                r.diffStats.map { case (s, n) => ("diff", s, n.toString) }
-              write(rows.toDF("kind", "name", "value"))
-              if (!r.promoted) sys.error(s"promotion refused: ${r.reason.getOrElse("")}")
-            case "promote-bucketed" =>
-              val gate = opts.get("diff-key").map(k => graft.sources.Versioned.DiffGate(
-                k, opts.getOrElse("diff-content", fail("--diff-content required with --diff-key")),
-                opts.getOrElse("max-changed-pm", "50").toLong))
-              val r = graft.sources.Versioned.promoteBucketed(read(), root,
-                opts.getOrElse("key", fail("--key COLUMN required")),
-                opts.getOrElse("buckets", "64").toInt, parsedChecks(), gate,
-                // --zones c1,c2: integral columns to keep per-file
-                // [min,max] zone maps for (read-range consults them)
-                zoneCols = opts.get("zones").map(_.split(",").toSeq.map(_.trim)
-                  .filter(_.nonEmpty)).getOrElse(Nil),
-                // --key-bloom-bits N: per-file key blooms for point-
-                // lookup file skipping (0 = off; multiple of 64)
-                keyBloomBits = opts.getOrElse("key-bloom-bits", "0").toInt,
-                // --zone-cluster true: range-cluster on the zone
-                // columns before the bucketed write
-                zoneCluster = opts.get("zone-cluster").exists(_.toBoolean))
-              val rows =
-                Seq(("outcome", "promoted", r.promoted.toString),
-                  ("outcome", "version", r.version.toString),
-                  ("outcome", "path", r.path)) ++
-                r.reason.map(("outcome", "reason", _)) ++
-                r.violations.map { case (rule, n) => ("violation", rule, n.toString) }
-              write(rows.toDF("kind", "name", "value"))
-              if (!r.promoted) sys.error(s"promotion refused: ${r.reason.getOrElse("")}")
-            case "merge" =>
-              val del = opts.get("deleted").map(expr).getOrElse(lit(false))
-              // --zone-cluster true: range-cluster the staged rows on
-              // the layout's zone columns so zone maps stay selective
-              // on non-time-sliced tables
-              val zc = opts.get("zone-cluster").exists(_.toBoolean)
-              // --retry N: bounded replay on a lost single-writer race
-              // (the nightly-pipeline ergonomics; merge semantics make
-              // the replay safe — see Versioned.mergeRetry)
-              val r = opts.get("retry") match {
-                case Some(n) => graft.sources.Versioned.mergeRetry(read(), root, del,
-                  parsedChecks(), opts.get("max-changed-pm").map(_.toLong),
-                  attempts = n.toInt, zoneCluster = zc)
-                case None => graft.sources.Versioned.merge(read(), root, del,
-                  parsedChecks(), opts.get("max-changed-pm").map(_.toLong),
-                  zoneCluster = zc)
-              }
-              val rows =
-                Seq(("outcome", "merged", r.merged.toString),
-                  ("outcome", "version", r.version.toString),
-                  ("outcome", "upserted", r.upserted.toString),
-                  ("outcome", "inserted", r.inserted.toString),
-                  ("outcome", "deleted", r.deleted.toString),
-                  ("outcome", "rewritten_buckets", r.rewrittenBuckets.mkString(" "))) ++
-                r.reason.map(("outcome", "reason", _)) ++
-                r.violations.map { case (rule, n) => ("violation", rule, n.toString) }
-              write(rows.toDF("kind", "name", "value"))
-              if (!r.merged) sys.error(s"merge refused: ${r.reason.getOrElse("")}")
-            case "patch" =>
-              // merge-on-read publish: -i lands as a DELTA layer
-              // (O(drop) write, no bucket rewrite); reads reconcile
-              // the layers until the next merge/fold-deltas/maintain
-              // folds them. --max-delta-layers bounds the pending
-              // read amplification (refused loudly past it).
-              val del = opts.get("deleted").map(expr).getOrElse(lit(false))
-              val maxLayers = opts.getOrElse("max-delta-layers", "8").toInt
-              val r = opts.get("retry") match {
-                case Some(n) => graft.sources.Versioned.patchRetry(read(), root, del,
-                  parsedChecks(), opts.get("max-changed-pm").map(_.toLong),
-                  attempts = n.toInt, maxDeltaLayers = maxLayers)
-                case None => graft.sources.Versioned.patch(read(), root, del,
-                  parsedChecks(), opts.get("max-changed-pm").map(_.toLong),
-                  maxDeltaLayers = maxLayers)
-              }
-              val rows =
-                Seq(("outcome", "patched", r.patched.toString),
-                  ("outcome", "version", r.version.toString),
-                  ("outcome", "upserted", r.upserted.toString),
-                  ("outcome", "inserted", r.inserted.toString),
-                  ("outcome", "deleted", r.deleted.toString),
-                  ("outcome", "delta_layers", r.layers.toString)) ++
-                r.reason.map(("outcome", "reason", _)) ++
-                r.violations.map { case (rule, n) => ("violation", rule, n.toString) }
-              write(rows.toDF("kind", "name", "value"))
-              if (!r.patched) sys.error(s"patch refused: ${r.reason.getOrElse("")}")
-            case "fold-deltas" =>
-              // fold every pending patch layer back into the base:
-              // one merge-shaped rewrite of the layers' touched
-              // buckets, read amplification back to zero. A table
-              // with no pending layers reports a no-op.
-              val r = graft.sources.Versioned.foldDeltas(spark, root, parsedChecks())
-              val rows = Seq(("outcome", "folded", r.merged.toString),
-                ("outcome", "version", r.version.toString),
-                ("outcome", "rewritten_buckets", r.rewrittenBuckets.mkString(" "))) ++
-                r.reason.map(("outcome", "reason", _))
-              write(rows.toDF("kind", "name", "value"))
-            case "compact" =>
-              // consolidate the live bucketed table into ONE new
-              // version directory (content untouched); vacuum can then
-              // reclaim the merge chain outside the retention window
-              val r = graft.sources.Versioned.compact(spark, root, parsedChecks())
-              write(Seq(("outcome", "promoted", r.promoted.toString),
-                ("outcome", "version", r.version.toString),
-                ("outcome", "path", r.path)).toDF("kind", "name", "value"))
-              if (!r.promoted) sys.error(s"compaction refused: ${r.reason.getOrElse("")}")
-            case "tail-feed" =>
-              // streaming change-feed consumer: process every version
-              // published since the --checkpoint's last offset, write
-              // their per-key diff rows (stamped with `version`) to
-              // --outfile, commit the offset. Re-running with nothing
-              // new published writes an empty batch — exactly-once
-              // per checkpoint via the file source's offset log.
-              val ck = opts.getOrElse("checkpoint", fail("--checkpoint DIR required"))
-              val k = opts.getOrElse("diff-key", fail("--diff-key COLUMN required"))
-              val c = opts.getOrElse("diff-content", fail("--diff-content COLUMN required"))
-              val outDir = opts.getOrElse("outfile", fail("--outfile PATH required"))
-              val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-              val q = graft.sources.Versioned.startChangeFeed(spark, root, ck,
-                expr(k), expr(c), keyName = k) { (diff, _) =>
-                batches.synchronized { batches += diff } // microbatch thread
-              }
-              q.awaitTermination()
-              batches.synchronized(batches.toList).reduceOption(_ unionByName _) match {
-                case Some(d) => write(d)
-                case None => println(s"[graft] no new versions under $root")
-              }
-            case "maintain" =>
-              // the nightly job as one verb: compact when the owner
-              // spread exceeds --max-owner-dirs, then vacuum with
-              // --retain/--stale-ms — the policy driver over
-              // describe's gauges
-              val r = graft.sources.Versioned.maintain(spark, root,
-                maxOwnerDirs = opts.getOrElse("max-owner-dirs", "4").toInt,
-                retainLast = opts.getOrElse("retain", "2").toInt,
-                staleStagingMillis = opts.getOrElse("stale-ms",
-                  (24L * 3600 * 1000).toString).toLong,
-                checks = parsedChecks())
-              write((Seq(
-                ("gauge", "owner_dirs_before", r.ownerDirsBefore.toString),
-                ("gauge", "owner_dirs_after", r.ownerDirsAfter.toString),
-                ("action", "compacted", r.compacted.toString)) ++
-                r.compactVersion.map(v => ("action", "compact_version", v.toString)) ++
-                r.vacuumed.map(("action", "vacuumed", _))).toDF("kind", "name", "value"))
-            case "rebucket" =>
-              // bucket-count evolution: republish the live data under
-              // --buckets N (same key + zone contract) — the layout
-              // remedy for a table that outgrew its creation count;
-              // one full rewrite, schedule like compaction
-              val r = graft.sources.Versioned.rebucket(spark, root,
-                opts.getOrElse("buckets", fail("--buckets N required")).toInt,
-                parsedChecks())
-              write(Seq(("outcome", "promoted", r.promoted.toString),
-                ("outcome", "version", r.version.toString),
-                ("outcome", "path", r.path)).toDF("kind", "name", "value"))
-              if (!r.promoted) sys.error(s"rebucket refused: ${r.reason.getOrElse("")}")
-            case "rollback" =>
-              // --to-version N targets any retained chain version;
-              // without it, one step back. Either way the rollback is
-              // PUBLISHED as a new version — history never rewrites.
-              val m = opts.get("to-version")
-                .map(v => graft.sources.Versioned.rollback(root, v.toInt))
-                .getOrElse(graft.sources.Versioned.rollback(root))
-              write(Seq(("outcome", "version", m.version.toString),
-                ("outcome", "path", m.path)).toDF("kind", "name", "value"))
-            case "vacuum" =>
-              // --stale-ms bounds the staging/claim sweep age gate
-              // (default 24 h — never sweep a possibly-live stage)
-              write(graft.sources.Versioned.vacuum(root,
-                retainLast = opts.getOrElse("retain", "2").toInt,
-                staleStagingMillis = opts.getOrElse("stale-ms",
-                  (24L * 3600 * 1000).toString).toLong).toDF("dropped"))
-            case "current" =>
-              val m = graft.sources.Versioned.currentManifest(root)
-                .getOrElse(fail(s"no live version under $root"))
-              write(Seq(("outcome", "version", m.version.toString),
-                ("outcome", "path", m.path)).toDF("kind", "name", "value"))
-            case "history" =>
-              // the manifest chain, ascending; vacuumed versions show
-              // retained = false but keep their audit entry; ts is the
-              // publish wall-clock (epoch millis; 0 = pre-stamp entry)
-              val rows = graft.sources.Versioned.versions(root).map { m =>
-                (m.version, m.path, m.previous.getOrElse(""), m.ts,
-                  new java.io.File(root, m.path).exists())
-              }
-              write(rows.toDF("version", "path", "previous", "ts", "retained"))
-            case "read-version" =>
-              write(graft.sources.Versioned.readVersion(spark, root,
-                opts.getOrElse("to-version", fail("--to-version N required")).toInt))
-            case "describe" =>
-              // the DESCRIBE DETAIL analogue: manifest-only facts of
-              // the live version (layout, owner spread, zones, schema)
-              write(graft.sources.Versioned.describe(spark, root))
-            case "read-asof" =>
-              // timestamp time travel: --ts epoch-millis or an ISO
-              // instant/date (dates read as midnight UTC)
-              val raw = opts.getOrElse("ts", fail("--ts MILLIS|ISO required"))
-              val ts = raw.toLongOption.orElse {
-                // both parses are fallible — a malformed --ts must
-                // surface as the CLI's message, not a raw stack trace
-                try Some(java.time.Instant.parse(raw).toEpochMilli)
-                catch { case _: java.time.format.DateTimeParseException =>
-                  try Some(java.time.LocalDate.parse(raw)
-                    .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli)
-                  catch { case _: java.time.format.DateTimeParseException => None } }
-              }.getOrElse(fail(
-                s"--ts '$raw' must be epoch millis, an ISO instant, or an ISO date"))
-              write(graft.sources.Versioned.readAsOf(spark, root, ts))
-            case "diff-versions" =>
-              // change feed: per-key lifecycle of --to-version relative
-              // to --from-version (added/removed/changed/unchanged)
-              val k = opts.getOrElse("diff-key", fail("--diff-key COLUMN required"))
-              write(graft.sources.Versioned.diffVersions(spark, root,
-                opts.getOrElse("from-version", fail("--from-version N required")).toInt,
-                opts.getOrElse("to-version", fail("--to-version N required")).toInt,
-                expr(k),
-                expr(opts.getOrElse("diff-content", fail("--diff-content COLUMN required"))),
-                keyName = k))
-            case "read-range" =>
-              // zone-pruned range read: --range-col C --lo N --hi N
-              // (files whose [min,max] zones miss the range never
-              // become tasks; result ≡ the plain filtered read). The
-              // bound FAMILY is resolved from the live manifest's
-              // recorded schema — never guessed from the literal's
-              // shape, so a STRING column of numeric-looking values
-              // (zero-padded ids) probes its binary-ordered bounds
-              // correctly; --bound-type long|string overrides
-              val rc = opts.getOrElse("range-col", fail("--range-col COLUMN required"))
-              val lo = opts.getOrElse("lo", fail("--lo N required"))
-              val hi = opts.getOrElse("hi", fail("--hi N required"))
-              val family = opts.get("bound-type")
-                .orElse(graft.sources.Versioned.zoneFamily(spark, root, rc))
-              write(family match {
-                case Some("long") => graft.sources.Versioned.readRange(spark, root, rc,
-                  lo.toLongOption.getOrElse(fail(s"--lo '$lo' is not a BIGINT bound")),
-                  hi.toLongOption.getOrElse(fail(s"--hi '$hi' is not a BIGINT bound")))
-                case Some("string") => graft.sources.Versioned.readRange(spark, root, rc, lo, hi)
-                case Some(other) => fail(s"--bound-type must be long or string, got $other")
-                case None => // unbucketed table: residual-only, either family is exact
-                  (lo.toLongOption, hi.toLongOption) match {
-                    case (Some(l), Some(h)) =>
-                      graft.sources.Versioned.readRange(spark, root, rc, l, h)
-                    case _ => graft.sources.Versioned.readRange(spark, root, rc, lo, hi)
-                  }
-              })
-            case o => fail(s"unknown --action: $o")
-          }
-        case other => fail(s"unknown command: $other")
-      }
-    } finally spark.stop()
+  /** Usage text generated from [[verbs]]. */
+  private def usage: String = {
+    val w = verbs.keys.map(_.length).max
+    ("usage: graft.Cli -i IN [-f json|csv|text|parquet|orc] [--schema DDL] CMD [args]" +:
+      "                 [--outfile OUT] [--codec gzip|bzip2] [--names TEMPLATE] [--delete-on-empty true]" +:
+      "commands:" +:
+      verbs.toSeq.map { case (n, v) => s"  ${n.padTo(w, ' ')}  ${v.usage}" }).mkString("\n")
   }
 
   /** Tiny arg parser: `-x v` / `--long v` → opts; bare words → cmds. */
@@ -1648,4 +197,875 @@ object Cli {
       }
     loop(args, Map.empty, Nil)
   }
+
+  private val TextId = "--text COL --id COL"
+  private val Kinds = Seq("postings", "bm25", "minhash", "ivf", "pq")
+
+  private def textId(c: Ctx): (Column, Column) = (c.expr("text"), c.expr("id"))
+
+  private def keepById(c: Ctx, df: DataFrame, id: Column, keep: DataFrame): Unit =
+    c.write(df.join(keep.toDF("__keep"), id === F.col("__keep")).drop("__keep"))
+
+  private def confusion(preds: DataFrame): DataFrame =
+    preds.groupBy(F.col("true_label"), F.col("pred_label")).agg(count(lit(1)).as("n"))
+
+  // the bound FAMILY of a zone-pruned range read comes from the stored
+  // manifest's schema, never from the literal's shape: a string column
+  // of zero-padded ids stores binary-ordered bounds that numeric
+  // comparison would mis-prune. --bound-type long|string overrides.
+  private def rangeRead(c: Ctx, family: Option[String])(
+      asLong: (Long, Long) => DataFrame, asString: (String, String) => DataFrame): Unit = {
+    val (lo, hi) = (c.req("lo"), c.req("hi"))
+    c.write(c.opt("bound-type").orElse(family) match {
+      case Some("long") => asLong(c.long("lo"), c.long("hi"))
+      case Some("string") => asString(lo, hi)
+      case Some(other) => c.fail(s"--bound-type must be long or string, got $other")
+      case None => // no zone manifest: residual-only scan, either family is exact
+        (lo.toLongOption, hi.toLongOption) match {
+          case (Some(l), Some(h)) => asLong(l, h)
+          case _ => asString(lo, hi)
+        }
+    })
+  }
+
+  private def compactIndex(spark: SparkSession, kind: String, table: String)
+      : Seq[(String, graft.sources.TableCompact.CompactStats)] = kind match {
+    case "postings" => Seq("postings" -> graft.text.SearchIndex.compact(spark, table))
+    case "bm25" =>
+      val (tf, st) = graft.text.SearchIndex.compactBm25(spark, table)
+      Seq("tf" -> tf, "stats" -> st)
+    case "minhash" => Seq("bands" -> graft.dedup.MinhashIndex.compact(spark, table))
+    case "ivf" => Seq("lists" -> graft.similarity.IvfIndex.compact(spark, table))
+    case "pq" => Seq("lists" -> graft.similarity.PqIndex.compact(spark, table))
+  }
+
+  private def diffGate(c: Ctx): Option[Versioned.DiffGate] = c.opt("diff-key").map(k =>
+    Versioned.DiffGate(k, c.req("diff-content"), c.long("max-changed-pm", 50L)))
+
+  private def outcome(promoted: Boolean, version: Int, path: String) = Seq(
+    ("outcome", "promoted", promoted.toString), ("outcome", "version", version.toString),
+    ("outcome", "path", path))
+
+  private def violations(vs: Seq[(String, Long)]) =
+    vs.map { case (rule, n) => ("violation", rule, n.toString) }
+
+  private val Day = 24L * 3600 * 1000
+
+  /** `promote --action X`: the versioned-warehouse lifecycle over --root. */
+  private val promoteActions: ListMap[String, Ctx => Unit] = ListMap(
+    // write-audit-publish: stage -i, gate on the checks (+ optional
+    // live-vs-staged churn limit), swap the manifest pointer on pass;
+    // a refusal throws after the report and leaves the live version
+    "promote" -> { c =>
+      val r = Versioned.promote(c.input, c.req("root"), c.checks, diffGate(c))
+      c.report(outcome(r.promoted, r.version, r.path) ++ r.reason.map(("outcome", "reason", _)) ++
+        violations(r.violations) ++ r.diffStats.map { case (s, n) => ("diff", s, n.toString) })
+      if (!r.promoted) sys.error(s"promotion refused: ${r.reason.getOrElse("")}")
+    },
+    "promote-bucketed" -> { c =>
+      val r = Versioned.promoteBucketed(c.input, c.req("root"), c.req("key"),
+        c.int("buckets", 64), c.checks, diffGate(c),
+        zoneCols = c.opt("zones").map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil),
+        keyBloomBits = c.int("key-bloom-bits", 0),
+        zoneCluster = c.bool("zone-cluster"))
+      c.report(outcome(r.promoted, r.version, r.path) ++ r.reason.map(("outcome", "reason", _)) ++
+        violations(r.violations))
+      if (!r.promoted) sys.error(s"promotion refused: ${r.reason.getOrElse("")}")
+    },
+    // upsert -i by the bucket key (--deleted rows delete), rewriting
+    // only the touched buckets; --retry N replays a lost writer race
+    "merge" -> { c =>
+      val (root, del, zc) = (c.req("root"), c.expr("deleted", "false"), c.bool("zone-cluster"))
+      val r = c.intOpt("retry") match {
+        case Some(n) => Versioned.mergeRetry(c.input, root, del, c.checks,
+          c.longOpt("max-changed-pm"), attempts = n, zoneCluster = zc)
+        case None => Versioned.merge(c.input, root, del, c.checks,
+          c.longOpt("max-changed-pm"), zoneCluster = zc)
+      }
+      c.report(Seq(("outcome", "merged", r.merged.toString),
+        ("outcome", "version", r.version.toString),
+        ("outcome", "upserted", r.upserted.toString),
+        ("outcome", "inserted", r.inserted.toString),
+        ("outcome", "deleted", r.deleted.toString),
+        ("outcome", "rewritten_buckets", r.rewrittenBuckets.mkString(" "))) ++
+        r.reason.map(("outcome", "reason", _)) ++ violations(r.violations))
+      if (!r.merged) sys.error(s"merge refused: ${r.reason.getOrElse("")}")
+    },
+    // merge-on-read: -i lands as a delta layer, folded by a later
+    // merge/fold-deltas/maintain; --max-delta-layers bounds read amplification
+    "patch" -> { c =>
+      val (root, del, maxLayers) = (c.req("root"), c.expr("deleted", "false"), c.int("max-delta-layers", 8))
+      val r = c.intOpt("retry") match {
+        case Some(n) => Versioned.patchRetry(c.input, root, del, c.checks,
+          c.longOpt("max-changed-pm"), attempts = n, maxDeltaLayers = maxLayers)
+        case None => Versioned.patch(c.input, root, del, c.checks,
+          c.longOpt("max-changed-pm"), maxDeltaLayers = maxLayers)
+      }
+      c.report(Seq(("outcome", "patched", r.patched.toString),
+        ("outcome", "version", r.version.toString),
+        ("outcome", "upserted", r.upserted.toString),
+        ("outcome", "inserted", r.inserted.toString),
+        ("outcome", "deleted", r.deleted.toString),
+        ("outcome", "delta_layers", r.layers.toString)) ++
+        r.reason.map(("outcome", "reason", _)) ++ violations(r.violations))
+      if (!r.patched) sys.error(s"patch refused: ${r.reason.getOrElse("")}")
+    },
+    "fold-deltas" -> { c =>
+      val r = Versioned.foldDeltas(c.spark, c.req("root"), c.checks)
+      c.report(Seq(("outcome", "folded", r.merged.toString),
+        ("outcome", "version", r.version.toString),
+        ("outcome", "rewritten_buckets", r.rewrittenBuckets.mkString(" "))) ++
+        r.reason.map(("outcome", "reason", _)))
+    },
+    "compact" -> { c =>
+      val r = Versioned.compact(c.spark, c.req("root"), c.checks)
+      c.report(outcome(r.promoted, r.version, r.path))
+      if (!r.promoted) sys.error(s"compaction refused: ${r.reason.getOrElse("")}")
+    },
+    // streaming change-feed consumer: diff rows of every version
+    // published since the --checkpoint's offset; exactly-once per
+    // checkpoint via the file source's offset log
+    "tail-feed" -> { c =>
+      val (root, k) = (c.req("root"), c.req("diff-key"))
+      val (ck, content) = (c.req("checkpoint"), c.expr("diff-content"))
+      c.req("outfile")
+      val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val q = Versioned.startChangeFeed(c.spark, root, ck, F.expr(k), content, keyName = k) {
+        (diff, _) => batches.synchronized { batches += diff } // microbatch thread
+      }
+      q.awaitTermination()
+      batches.synchronized(batches.toList).reduceOption(_ unionByName _) match {
+        case Some(d) => c.write(d)
+        case None => println(s"[graft] no new versions under $root")
+      }
+    },
+    "maintain" -> { c =>
+      val r = Versioned.maintain(c.spark, c.req("root"),
+        maxOwnerDirs = c.int("max-owner-dirs", 4), retainLast = c.int("retain", 2),
+        staleStagingMillis = c.long("stale-ms", Day), checks = c.checks)
+      c.report(Seq(
+        ("gauge", "owner_dirs_before", r.ownerDirsBefore.toString),
+        ("gauge", "owner_dirs_after", r.ownerDirsAfter.toString),
+        ("action", "compacted", r.compacted.toString)) ++
+        r.compactVersion.map(v => ("action", "compact_version", v.toString)) ++
+        r.vacuumed.map(("action", "vacuumed", _)))
+    },
+    "rebucket" -> { c =>
+      val r = Versioned.rebucket(c.spark, c.req("root"), c.int("buckets"), c.checks)
+      c.report(outcome(r.promoted, r.version, r.path))
+      if (!r.promoted) sys.error(s"rebucket refused: ${r.reason.getOrElse("")}")
+    },
+    // rollback PUBLISHES the target as a new version: history never rewrites
+    "rollback" -> { c =>
+      val root = c.req("root")
+      val m = c.intOpt("to-version").map(Versioned.rollback(root, _)).getOrElse(Versioned.rollback(root))
+      c.report(Seq(("outcome", "version", m.version.toString), ("outcome", "path", m.path)))
+    },
+    // --stale-ms gates the staging/claim sweep: never sweep a possibly-live stage
+    "vacuum" -> { c =>
+      import c.spark.implicits._
+      c.write(Versioned.vacuum(c.req("root"), retainLast = c.int("retain", 2),
+        staleStagingMillis = c.long("stale-ms", Day)).toDF("dropped"))
+    },
+    "current" -> { c =>
+      val root = c.req("root")
+      val m = Versioned.currentManifest(root).getOrElse(c.fail(s"no live version under $root"))
+      c.report(Seq(("outcome", "version", m.version.toString), ("outcome", "path", m.path)))
+    },
+    // ts is the publish wall-clock (epoch millis; 0 = pre-stamp entry)
+    "history" -> { c =>
+      import c.spark.implicits._
+      val root = c.req("root")
+      c.write(Versioned.versions(root).map { m =>
+        (m.version, m.path, m.previous.getOrElse(""), m.ts, new java.io.File(root, m.path).exists())
+      }.toDF("version", "path", "previous", "ts", "retained"))
+    },
+    "read-version" -> (c => c.write(Versioned.readVersion(c.spark, c.req("root"), c.int("to-version")))),
+    "describe" -> (c => c.write(Versioned.describe(c.spark, c.req("root")))),
+    "read-asof" -> { c =>
+      // --ts is epoch millis, an ISO instant, or an ISO date (midnight UTC)
+      val raw = c.req("ts")
+      def iso[T](p: => T): Option[T] =
+        try Some(p) catch { case _: java.time.format.DateTimeParseException => None }
+      val ts = raw.toLongOption
+        .orElse(iso(java.time.Instant.parse(raw).toEpochMilli))
+        .orElse(iso(java.time.LocalDate.parse(raw)
+          .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli))
+        .getOrElse(c.fail(s"--ts '$raw' must be epoch millis, an ISO instant, or an ISO date"))
+      c.write(Versioned.readAsOf(c.spark, c.req("root"), ts))
+    },
+    "diff-versions" -> { c =>
+      val k = c.req("diff-key")
+      c.write(Versioned.diffVersions(c.spark, c.req("root"), c.int("from-version"),
+        c.int("to-version"), F.expr(k), c.expr("diff-content"), keyName = k))
+    },
+    // files whose [min,max] zones miss the range never become tasks
+    "read-range" -> { c =>
+      val (root, rc) = (c.req("root"), c.req("range-col"))
+      rangeRead(c, Versioned.zoneFamily(c.spark, root, rc))(
+        Versioned.readRange(c.spark, root, rc, _, _), Versioned.readRange(c.spark, root, rc, _, _))
+    })
+
+  val verbs: Map[String, Verb] = ListMap(
+    "partition.map" -> Verb("--expr \"id, value*2 AS v2\"",
+      c => c.write(c.input.mapRecords(c.exprList("expr"): _*))),
+    "partition.filter" -> Verb("--expr \"value > 10\"",
+      c => c.write(c.input.filterRecords(c.expr("expr")))),
+    "partition.flat_map" -> Verb("--expr \"explode(split(text, ' ')) AS word, id\"",
+      c => c.write(c.input.mapRecords(c.exprList("expr"): _*))),
+    // shmr distinct is BY KEY (partition.py:83 key_fn); with --key keep
+    // the least row by --order per key (deterministic, unlike file
+    // order); without, full-row distinct
+    "partition.distinct" -> Verb("--expr \"a, b\" [--key \"a\" --order \"b\"]", { c =>
+      val projected = c.input.mapRecords(c.exprList("expr"): _*)
+      c.write(if (c.has("key")) projected.distinctBy(c.exprList("key"), c.exprList("order"))
+        else projected.distinct())
+    }),
+    "partition.reduce" -> Verb("--aggs \"sum(v) AS s, count(1) AS n\"", { c =>
+      val aggs = c.exprList("aggs")
+      c.write(c.input.reduceRecords(aggs.head, aggs.tail: _*))
+    }),
+    "partition.reduce_by_key" -> Verb("--keys \"k1, k2\" --aggs \"sum(v) AS s\"",
+      c => c.write(c.input.reduceByKey(c.exprList("keys"), c.exprList("aggs")))),
+    // bucket i → its own directory (shmr: bucket i → file i); a plain
+    // write would repartition round-robin and mix buckets
+    "partition.split_by_key" -> Verb("--key \"id\" --num-partitions 8", { c =>
+      val n = c.int("num-partitions")
+      PartitionedFiles.writeJsonlPartitionedBy(
+        c.input.splitByKey(c.expr("key"), n), c.req("outfile"), "bucket")
+    }),
+    "partition.count" -> Verb("[--outfile stdout|PATH]", { c =>
+      val n = c.input.countRecords()
+      c.opt("outfile") match {
+        case None | Some("stdout") => println(n)
+        case Some(path) => java.nio.file.Files.writeString(java.nio.file.Paths.get(path), n.toString)
+      }
+    }),
+    "partition.head" -> Verb("[--n 10] --order \"v DESC, id\"", { c =>
+      val n = c.int("n", 10)
+      c.write(c.input.headRecords(n, c.exprList("order"): _*))
+    }),
+    // shmr partition.join (partition.py:263): the right key is computed
+    // BEFORE de-colliding names (it references the original columns),
+    // then colliding right columns get a with_ prefix (shmr emits
+    // [left_record, right_record]; flat columns need distinct names)
+    "partition.join" -> Verb("--with OTHER [--with-schema DDL] --key \"id\" --with-key \"id\" [--broadcast true]", { c =>
+      val other = c.side("with")
+      val left = c.input.withColumn("__jk", c.expr("key"))
+      val right = other.columns.filter(left.columns.contains).foldLeft(
+        other.withColumn("__wjk", c.expr("with-key")))((r, n) => r.withColumnRenamed(n, s"with_$n"))
+      c.write(left.keyedJoin(right, F.col("__jk") === F.col("__wjk"),
+        broadcastRight = c.bool("broadcast")).drop("__jk", "__wjk"))
+    }),
+    // shmr partition.apply streams fn over records for its side effects
+    // (partition.py:102): evaluate over every record, report the count
+    "partition.apply" -> Verb("--expr \"assert_true(v >= 0)\"",
+      c => println(c.input.mapRecords(c.expr("expr")).count())),
+    // ListPartition.reduce (partitions.py:145): one global aggregate
+    "partitions.reduce" -> Verb("--aggs \"sum(v) AS s\"", { c =>
+      val aggs = c.exprList("aggs")
+      c.write(c.input.reduceRecords(aggs.head, aggs.tail: _*))
+    }),
+    // shmr ListPartition.coalesce (partitions.py:81)
+    "partitions.coalesce" -> Verb("--num-partitions 4 | --records-per-partition N", { c =>
+      val df = c.input
+      val n = c.intOpt("num-partitions")
+        .orElse(c.longOpt("records-per-partition").map(rpp =>
+          math.max(1L, (df.count() + rpp - 1) / rpp).toInt))
+        .getOrElse(c.fail("--num-partitions or --records-per-partition required"))
+      c.write(df.repartitionRecords(n), parts = n)
+    }),
+    "partitions.concat" -> Verb("", c => c.write(c.input.coalescePartitions(1))),
+
+    "dedup-minhash" -> Verb(s"$TextId [--shingle 3] [--bands 4] [--rows-per-band 2] " +
+      "[--emit keep|pairs|keep-best [--order \"length(text) DESC, doc_id\"]]", { c =>
+      val df = c.input
+      val (text, id) = textId(c)
+      val pairs = graft.dedup.Dedup.minhashCandidatePairs(df, text, id,
+        shingleN = c.int("shingle", 3), numBands = c.int("bands", 4),
+        rowsPerBand = c.int("rows-per-band", 2))
+      c.oneOf("emit", "keep")("keep", "pairs", "keep-best") match {
+        case "pairs" => c.write(pairs)
+        case "keep" => c.write(graft.dedup.Components.keepOnePerCluster(df, id, pairs, "doc_a", "doc_b"))
+        // --order needs an id tiebreak or the keeper is nondeterministic
+        case "keep-best" => c.write(graft.dedup.Components.keepBestPerCluster(
+          df, id, pairs, "doc_a", "doc_b", c.exprList("order")))
+      }
+    }),
+    "pack" -> Verb(s"$TextId [--shard \"doc_id % 8\"] [--budget 2000]", { c =>
+      val (text, id) = textId(c)
+      val shard = c.expr("shard", s"pmod(${c.req("id")}, 8)")
+      c.write(graft.text.TextPrep.packByTokenBudget(
+        c.input.withColumn("__shard", shard), F.col("__shard"), Seq(id),
+        graft.text.TextAnalysis.tokenCount(text), budget = c.long("budget", 2000L))
+        .withColumnRenamed("__shard", "shard"))
+    }),
+    "split-assign" -> Verb("--key doc_id [--train 90] [--val 5]", { c =>
+      c.write(c.input.withColumn("split", graft.text.TextPrep.splitAssign(
+        c.expr("key"), trainPct = c.int("train", 90), valPct = c.int("val", 5))))
+    }),
+    "decontam" -> Verb(s"--bench PATH $TextId [--bench-text C] [--bench-id C] " +
+      "[--n 3] [--min-hits 3] [--emit clean|flags]", { c =>
+      val (text, id) = textId(c)
+      val bench = c.side("bench")
+      val (bText, bId) = (c.expr("bench-text", c.req("text")), c.expr("bench-id", c.req("id")))
+      val (n, minHits) = (c.int("n", 3), c.long("min-hits", 3L))
+      val emit = c.oneOf("emit", "clean")("clean", "flags")
+      val op = if (emit == "flags") graft.dedup.Decontam.ngramContamination _
+        else graft.dedup.Decontam.decontaminate _
+      c.write(op(c.input, text, id, bench, bText, bId, n, minHits))
+    }),
+    "boilerplate" -> Verb(s"$TextId [--n 3] [--min-doc-freq 5]", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextPrep.removeFrequentGrams(c.input, text, id,
+        n = c.int("n", 3), minDocFreq = c.long("min-doc-freq", 5L)))
+    }),
+    "scrub-spans" -> Verb(s"$TextId [--window 20] [--min-count 2] [--emit clean|spans]", { c =>
+      val (text, id) = textId(c)
+      val (w, minCount) = (c.int("window", 20), c.long("min-count", 2L))
+      c.write(c.oneOf("emit", "clean")("clean", "spans") match {
+        case "clean" => graft.dedup.SubstringDedup.scrubDuplicatedSpans(c.input, text, id, w, minCount)
+        case "spans" => graft.dedup.SubstringDedup.duplicatedSpans(c.input, text, id, w, minCount)
+      })
+    }),
+    "sample-tokens" -> Verb(s"$TextId --group source --budget 1000000", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextPrep.sampleByTokenBudget(c.input, c.expr("group"), id,
+        graft.text.TextAnalysis.tokenCount(text), budget = c.long("budget")))
+    }),
+    "lm-score" -> Verb(s"$TextId [--rare-max 100]", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextAnalysis.lmScore(c.input, text, id, rareMax = c.long("rare-max", 100L)))
+    }),
+    "semdedup" -> Verb("--vec embedding --id vec_id [--centroids 16] [--iters 2] [--tau 0.95] " +
+      "[--max-cell N|none] [--emit keep|flags] " +
+      "[--pq true [--margin 0.2] [--pq-m 8] [--pq-subdim 8] [--pq-k 64] [--pq-iters 2]]", { c =>
+      import graft.similarity.CellCap
+      val df = c.input
+      val corpus = graft.similarity.Similarity.prepareQuantized(df, c.col("vec"), c.col("id"))
+      // default cap is CellCap.Auto (4× average cell): scale-safe untuned
+      val cap = c.opt("max-cell") match {
+        case None => CellCap.Auto
+        case Some("none") => CellCap.Unbounded
+        case Some(_) => CellCap.Fixed(c.int("max-cell"))
+      }
+      val (centroids, iters, tau) = (c.int("centroids", 16), c.int("iters", 2), c.double("tau", 0.95))
+      // --pq screens within-cell pairs on product-quantization codes
+      // first, then re-checks exactly at tau: same verdict policy
+      val verdicts =
+        if (c.bool("pq"))
+          graft.similarity.SemDedup.semDedupPq(corpus, centroids, iters, tau,
+            margin = c.double("margin", 0.2), m = c.int("pq-m", 8),
+            subDim = c.int("pq-subdim", 8), pqK = c.int("pq-k", 64),
+            pqIters = c.int("pq-iters", 2), maxCellSize = cap)
+        else graft.similarity.SemDedup.semDedup(corpus, centroids, iters, tau, cap)
+      c.oneOf("emit", "keep")("keep", "flags") match {
+        case "flags" => c.write(verdicts)
+        case "keep" => keepById(c, df, c.col("id"), verdicts.filter(!F.col("is_dup")).select("vec_id"))
+      }
+    }),
+    "embed" -> Verb("--text COL --id COL [--dim 64]",
+      c => c.write(graft.text.HashEmbed.embedDocuments(c.input, c.col("text"), c.col("id"), c.int("dim", 64)))),
+    // -i is the corpus, --queries the query set: with --prepared both
+    // are (vec_id, e, nrm) frames (e.g. `embed` output), otherwise
+    // float vector frames quantized here via --vec/--id
+    "knn" -> Verb("--queries PATH [--k 3] (--prepared true | --vec COL --id COL)", { c =>
+      import graft.similarity.Similarity
+      val k = c.int("k", 3)
+      val qdf = c.parquet("queries")
+      val (corpus, queries) =
+        if (c.bool("prepared")) (c.input, qdf)
+        else (Similarity.prepareQuantized(c.input, c.col("vec"), c.col("id")),
+          Similarity.prepareQuantized(qdf, c.col("vec"), c.col("id")))
+      c.write(Similarity.cosineTopK(corpus, queries, k))
+    }),
+    "bpe" -> Verb("--mode train --text COL [--max-types 100000] [--merges 16] | " +
+      "--mode tokens --text COL --id COL --merges-table PATH [--max-types 100000]", { c =>
+      import graft.text.Bpe
+      val text = c.col("text")
+      val maxTypes = c.int("max-types", 100000)
+      c.oneOf("mode", "train")("train", "tokens") match {
+        case "train" =>
+          val numMerges = c.int("merges", 16)
+          c.write(Bpe.mergesDf(c.spark, Bpe.trainMerges(Bpe.wordTypes(c.input, text, maxTypes), numMerges)))
+        case "tokens" =>
+          val id = c.col("id")
+          val merges = c.parquet("merges-table").orderBy("rank").collect()
+            .map(r => (r.getString(1), r.getString(2))).toSeq
+          val df = c.input
+          c.write(Bpe.tokenCounts(df, text, Seq(id), Bpe.symbolize(Bpe.wordTypes(df, text, maxTypes), merges)))
+      }
+    }),
+    // append: OR-mergeable register of this drop's keys (idempotent
+    // per --drop-id); screen: might_seen=false ⇒ certainly novel, zero
+    // corpus access; novel: Bloom-certain novels skip the anti-join
+    "bloom-ledger" -> Verb("--mode append --ledger PATH --drop-id ID --key EXPR [--bits 1048576] [--hashes 5] | " +
+      "--mode screen --ledger PATH --key EXPR | " +
+      "--mode novel --ledger PATH --corpus PATH --key EXPR [--corpus-key EXPR]", { c =>
+      import graft.sketch.BloomLedger
+      val key = c.expr("key")
+      val (bits, hashes) = (c.int("bits", 1 << 20), c.int("hashes", 5))
+      val ledger = c.req("ledger")
+      c.oneOf("mode", "screen")("append", "screen", "novel") match {
+        case "append" =>
+          val dropId = c.req("drop-id")
+          BloomLedger.append(ledger, BloomLedger.dropSummary(c.input, dropId, key, bits, hashes))
+        case "screen" =>
+          c.write(BloomLedger.screen(c.input, key, BloomLedger.mergedFrom(c.spark, ledger)))
+        case "novel" =>
+          val corpus = c.parquet("corpus")
+          c.write(BloomLedger.novelExact(corpus, c.opt("corpus-key").map(F.expr).getOrElse(key),
+            c.input, key, BloomLedger.mergedFrom(c.spark, ledger)))
+      }
+    }),
+    // append: drop-sized union-find, only affected hash(id) buckets
+    // staged + atomic manifest swap; vacuum GCs superseded append dirs
+    "cluster-ledger" -> Verb("--mode append --ledger PATH --a doc_a --b doc_b [--buckets 64] | " +
+      "--mode labels|vacuum --ledger PATH", { c =>
+      import c.spark.implicits._
+      import graft.dedup.ClusterLedger
+      val ledger = c.req("ledger")
+      c.oneOf("mode", "labels")("append", "labels", "vacuum") match {
+        case "append" =>
+          val (a, b) = (c.req("a"), c.req("b"))
+          val st = ClusterLedger.append(ledger, c.input, a, b, numBuckets = c.int("buckets", 64))
+          c.write(Seq(
+            ("relabeled", st.relabeled.toString),
+            ("new_ids", st.newIds.toString),
+            ("rewritten_buckets", st.rewrittenBuckets.mkString(","))).toDF("stat", "value"))
+        case "labels" => c.write(ClusterLedger.labels(c.spark, ledger))
+        case "vacuum" => c.write(ClusterLedger.vacuum(ledger).toDF("dropped"))
+      }
+    }),
+    // the reference profile is built once; each drop is reported
+    // against the stored profile, never rescanning the reference
+    "drift" -> Verb("--mode profile --bucket EXPR | --mode report --profile PATH --bucket EXPR", { c =>
+      val bucket = c.expr("bucket")
+      c.oneOf("mode", "report")("profile", "report") match {
+        case "profile" => c.write(c.input.select(bucket.cast("long").as("bucket"))
+          .groupBy("bucket").agg(count(lit(1)).as("n_ref")))
+        case "report" =>
+          val profile = c.parquet("profile")
+          c.write(graft.operators.TableDiff.driftAgainstProfile(profile, c.input, bucket))
+      }
+    }),
+    "rrf" -> Verb("--id doc_id --signals \"len=size(split(trim(text),'\\s+'));...\" [--k 60] [--scale 1000000]", { c =>
+      val id = c.expr("id")
+      val sigs = c.req("signals").split(";").toSeq.map { p =>
+        val (n, e) = p.span(_ != '=')
+        if (e.isEmpty) c.fail(s"signal needs name=expr, got: $p")
+        n.trim -> F.expr(e.drop(1))
+      }
+      c.write(graft.quality.Ensemble.rrf(c.input, id, sigs,
+        k = c.long("k", 60L), scale = c.long("scale", 1000000L)))
+    }),
+    "kmv-ledger" -> Verb("--mode append --ledger PATH --drop-id ID --text COL [--k 256] | " +
+      "--mode overlap --ledger PATH --text COL", { c =>
+      import graft.sketch.KmvLedger
+      val (text, ledger) = (c.expr("text"), c.req("ledger"))
+      c.oneOf("mode", "overlap")("append", "overlap") match {
+        case "append" =>
+          val dropId = c.req("drop-id")
+          KmvLedger.append(ledger, KmvLedger.dropSummary(c.input, dropId, text, c.int("k", 256)))
+        case "overlap" =>
+          c.write(KmvLedger.overlapVsHistory(c.input, text, KmvLedger.mergedFrom(c.spark, ledger)))
+      }
+    }),
+    // append is idempotent per --drop-id (dynamic partition overwrite);
+    // rollup reads the ledger as -i: additive sums + exact HLL merge
+    "stats-ledger" -> Verb("--mode append --ledger PATH --drop-id ID --group EXPR --key EXPR " +
+      "[--tokens EXPR | --text COL] [--p 12] | --mode rollup [--p 12]", { c =>
+      import graft.sketch.StatsLedger
+      val p = c.int("p", 12)
+      c.oneOf("mode", "append")("append", "rollup") match {
+        case "append" =>
+          val (ledger, dropId) = (c.req("ledger"), c.req("drop-id"))
+          val (group, key) = (c.expr("group"), c.expr("key"))
+          val tokens = c.opt("tokens").map(F.expr).orElse(c.opt("text").map(t =>
+            graft.text.TextAnalysis.tokenCount(F.col(t)).cast("bigint")))
+            .getOrElse(c.fail("--tokens EXPR (or --text COLUMN) required"))
+          StatsLedger.append(ledger, StatsLedger.dropSummary(c.input, dropId, group, key, tokens, p))
+        case "rollup" => c.write(StatsLedger.merge(c.input, p))
+      }
+    }),
+    "centroid-classify" -> Verb("--vec embedding --id vec_id --label label [--emit preds|confusion]", { c =>
+      import graft.similarity.Similarity
+      val corpus = Similarity.prepareQuantized(c.input, c.col("vec"), c.col("id"), c.col("label").as("label"))
+      val preds = Similarity.centroidClassify(corpus)
+      c.write(c.oneOf("emit", "preds")("preds", "confusion") match {
+        case "preds" => preds
+        case "confusion" => confusion(preds)
+      })
+    }),
+    // --hold-mod M scores only the held-out doc_id ≡ 0 (mod M) slice;
+    // otherwise resubstitution. --emit keep is Corpus.nbLabelFilter
+    "nb-classify" -> Verb(s"$TextId --label lang [--buckets 256] [--scale-bits 40] [--hold-mod M] " +
+      "[--emit preds|confusion|keep]", { c =>
+      import graft.quality.NaiveBayes
+      val df = c.input
+      val (text, id, label) = (c.col("text"), c.col("id"), c.col("label"))
+      val (buckets, scaleBits) = (c.int("buckets", 256), c.int("scale-bits", 40))
+      val preds = c.intOpt("hold-mod") match {
+        case Some(m) => NaiveBayes.holdoutProbe(df, text, id, label, m, buckets, scaleBits)
+        case None => NaiveBayes.classify(df, text, id, label, df, text, id, label, buckets, scaleBits)
+      }
+      c.oneOf("emit", "preds")("preds", "confusion", "keep") match {
+        case "preds" => c.write(preds)
+        case "confusion" => c.write(confusion(preds))
+        case "keep" => keepById(c, df, id, preds.filter(F.col("correct") === 1).select("doc_id"))
+      }
+    }),
+    "scrub-sentences" -> Verb(s"$TextId [--max-sent-tokens 8] [--emit clean|spans]", { c =>
+      import graft.dedup.SentenceDedup
+      val (df, text, id) = (c.input, c.col("text"), c.col("id"))
+      val maxSent = c.int("max-sent-tokens", 8)
+      c.write(c.oneOf("emit", "clean")("clean", "spans") match {
+        case "clean" => SentenceDedup.scrubDuplicatedSentenceSpans(df, text, id, maxSent)
+        case "spans" => SentenceDedup.duplicatedSentenceSpans(df, text, id, maxSent)
+      })
+    }),
+    "dsir" -> Verb(s"--target PATH $TextId [--k N] [--target-text T] [--target-id I] [--buckets 512] " +
+      "[--scale-bits 40] [--emit keep|weights]", { c =>
+      import graft.quality.Dsir
+      val (text, id) = textId(c)
+      val target = c.side("target")
+      val tText = c.expr("target-text", c.str("text", "text"))
+      val tId = c.expr("target-id", c.str("id", "id"))
+      val (buckets, scaleBits) = (c.int("buckets", 512), c.int("scale-bits", 40))
+      val df = c.input
+      c.oneOf("emit", "keep")("keep", "weights") match {
+        case "weights" =>
+          val ratios = Dsir.logRatios(target, tText, tId, df, text, id, buckets, scaleBits)
+          c.write(Dsir.importanceWeights(df, text, id, ratios, buckets))
+        case "keep" =>
+          val k = c.int("k")
+          keepById(c, df, id,
+            Dsir.select(df, text, id, target, tText, tId, k, buckets, scaleBits).select("doc_id"))
+      }
+    }),
+    "unimax" -> Verb("--group lang --text text [--budget-num 8] [--budget-den 5] [--epochs-milli 2000] " +
+      "[--emit alloc|copies [--id COL]]", { c =>
+      import graft.text.UniMax
+      val (group, text) = (c.expr("group"), c.expr("text"))
+      val (num, den) = (c.long("budget-num", 8L), c.long("budget-den", 5L))
+      val epochsMilli = c.long("epochs-milli", 2000L)
+      val df = c.input
+      val alloc = UniMax.allocateRelative(df, group, text, num, den, epochsMilli)
+      c.oneOf("emit", "alloc")("alloc", "copies") match {
+        case "alloc" => c.write(alloc)
+        case "copies" => c.write(UniMax.materializeCopies(df, group, text, c.expr("id"), alloc))
+      }
+    }),
+    "novel" -> Verb(s"--corpus PATH $TextId [--shingle 3] [--bands 4] [--rows-per-band 2]", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.dedup.Dedup.minhashNovel(c.side("corpus"), c.input, text, id,
+        shingleN = c.int("shingle", 3), numBands = c.int("bands", 4),
+        rowsPerBand = c.int("rows-per-band", 2)))
+    }),
+    // -i is the NEW snapshot, --old the previous one
+    "diff" -> Verb("--old PATH --key doc_id --content text [--old-key K] [--old-content C] " +
+      "[--key-name id] [--emit rows|stats]", { c =>
+      import graft.operators.TableDiff
+      val (key, content) = (c.expr("key"), c.expr("content"))
+      val d = TableDiff.snapshotDiff(c.side("old"), c.input,
+        c.opt("old-key").map(F.expr).getOrElse(key), key,
+        c.opt("old-content").map(F.expr).getOrElse(content), content,
+        keyName = c.str("key-name", "id"))
+      c.write(c.oneOf("emit", "rows")("rows", "stats") match {
+        case "rows" => d
+        case "stats" => TableDiff.snapshotDiffStats(d)
+      })
+    }),
+    "sample-weighted" -> Verb("--key doc_id --weight n_chars --threshold 400", { c =>
+      c.write(c.input.filter(graft.text.TextPrep.weightedSample(
+        c.expr("key"), c.expr("weight"), c.long("threshold"))))
+    }),
+    "winnow" -> Verb(s"$TextId [--k 5] [--w 4]", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextAnalysis.winnowFingerprints(c.input, text, id,
+        k = c.int("k", 5), w = c.int("w", 4)))
+    }),
+    "neighbors" -> Verb(s"$TextId [--window 5] [--key-len 30]", { c =>
+      val (text, id) = textId(c)
+      val key = F.substring(F.regexp_replace(F.lower(text.cast("string")), "[^a-z0-9]", ""),
+        1, c.int("key-len", 30))
+      c.write(graft.dedup.Dedup.sortedNeighborhoodPairs(c.input, id, key, window = c.int("window", 5)))
+    }),
+    "scd2" -> Verb("--key user_id --ts \"unix_micros(ts)\" [--order \"..., event_id\"]", { c =>
+      val order = if (c.has("order")) c.exprList("order") else Seq(c.expr("ts"))
+      c.write(graft.operators.TemporalJoins.scd2(c.input, c.expr("key"), c.expr("ts"), order))
+    }),
+    "shuffle" -> Verb("--key doc_id [--seed 42]",
+      c => c.write(graft.operators.Ordering.shuffleRank(c.input, c.expr("key"), seed = c.long("seed", 42L)))),
+    "pack-sequences" -> Verb(s"$TextId [--shard \"doc_id % 8\"] [--budget 2000] [--sep $$'\\n']", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextPrep.packSequences(c.input, c.expr("shard", "0"), Seq(id), text,
+        graft.text.TextAnalysis.tokenCount(text),
+        budget = c.long("budget", 2000L), sep = c.str("sep", "\n")))
+    }),
+    // the whole prep chain as ONE verb (the Corpus facade); every
+    // stage optional, --rules applied in the order given
+    "corpus" -> Verb(s"$TextId [--rules gopher,c4,repetition [--gopher-min-words 50] " +
+      "[--gopher-max-words 100000] [--text-name text]] [--min-tokens 30] [--dedup exact|none] " +
+      "[--near minhash|minhash-best|simhash|winnow|none] [--lm-rare-max 100 [--lm-max-rare-ratio 0.5]] " +
+      "[--bg-rare-max 25 [--bg-max-rare-ratio 0.5]] [--ppl-rare-max 100 [--ppl-keep 1,2] [--lang lang]] " +
+      "[--decontam PATH [--decontam-text text] [--decontam-id doc_id]] " +
+      "[--source-cap N [--source SOURCE_COL]] [--temperature SOURCE_COL] [--split 90,5] " +
+      "[--emit docs|ledger]", { c =>
+      val (text, id) = textId(c)
+      val ledger = c.oneOf("emit", "docs")("docs", "ledger") == "ledger"
+      var k = Corpus(c.input, text, id)
+      if (ledger) k = k.audited
+      c.opt("rules").foreach(_.split(",").map(_.trim).filter(_.nonEmpty).foreach {
+        case "gopher" => k = k.gopherQualityFilter(c.int("gopher-min-words", 50),
+          c.int("gopher-max-words", 100000))
+        case "c4" => k = k.c4LineFilter(c.str("text-name", "text"))
+        case "repetition" => k = k.repetitionFilter()
+        case o => c.fail(s"--rules entries must be gopher|c4|repetition, got: $o")
+      })
+      c.intOpt("min-tokens").foreach(m => k = k.qualityFilter(m))
+      if (c.oneOf("dedup", "exact")("exact", "none") == "exact") k = k.exactDedup()
+      c.oneOf("near", "minhash")("minhash", "minhash-best", "simhash", "winnow", "none") match {
+        case "minhash" => k = k.nearDedup()
+        case "minhash-best" => k = k.nearDedupKeepBest()
+        case "simhash" => k = k.nearDedupSimhash()
+        case "winnow" => k = k.nearDedupWinnow()
+        case "none" =>
+      }
+      c.longOpt("lm-rare-max").foreach(r => k = k.lmQualityFilter(r, c.double("lm-max-rare-ratio", 0.5)))
+      c.longOpt("bg-rare-max").foreach(r => k = k.bigramQualityFilter(r, c.double("bg-max-rare-ratio", 0.5)))
+      c.longOpt("ppl-rare-max").foreach(r =>
+        k = k.keepPplBuckets(F.col(c.str("lang", "lang")), r, c.ints("ppl-keep", "1,2").toSet))
+      if (c.has("decontam"))
+        k = k.decontaminate(c.side("decontam"), c.expr("decontam-text", "text"), c.expr("decontam-id", "doc_id"))
+      c.intOpt("source-cap").foreach(s => k = k.capPerSource(F.col(c.str("source", "source")), s))
+      c.opt("temperature").foreach(s => k = k.temperatureSample(F.col(s)))
+      if (c.has("split")) c.ints("split", "") match {
+        case Seq(train, v) => k = k.splitAssign(train, v)
+        case _ => c.fail("--split needs TRAIN,VAL percentages")
+      }
+      c.write(if (ledger) k.dropLedger else k.df)
+    }),
+    // with no --phrases file the corpus's own top n-gram phrases are used
+    "phrase-search" -> Verb(s"$TextId [--phrases PATH [--phrase-col phrase]] [--n 3] [--top 5]", { c =>
+      import graft.text.Search
+      val (text, id) = textId(c)
+      val df = c.input
+      val phrases = if (c.has("phrases")) c.side("phrases")
+        else Search.topPhrases(df, text, n = c.int("n", 3), k = c.int("top", 5))
+      val phrase = c.expr("phrase-col", "phrase")
+      c.write(Search.phraseOccurrences(df, text, id, phrases, phrase, phrase))
+    }),
+    "trending" -> Verb("--key EXPR --day EXPR", c => c.write(
+      graft.operators.Timeseries.TimeseriesOps(c.input).decayedCounts(c.expr("key"), c.expr("day")))),
+    "quantile-norm" -> Verb("--group EXPR --score EXPR --id EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input)
+        .quantileNormalize(c.expr("group"), c.expr("score"), c.expr("id")))),
+    "skew" -> Verb("--group EXPR --key EXPR [--lanes 60]", c => c.write(
+      graft.sketch.Sketches.amsF2(c.input, c.expr("group"), c.expr("key"), lanes = c.int("lanes", 60)))),
+    "trend" -> Verb("--group EXPR --x EXPR --y EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).groupOls(Seq(c.expr("group")), c.expr("x"), c.expr("y")))),
+    "balance" -> Verb("--group EXPR --value EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).giniByGroup(Seq(c.expr("group")), c.expr("value")))),
+    "stop-grams" -> Verb(s"$TextId [--n 3] [--cap 64|auto|unbounded]", { c =>
+      import graft.dedup.DocFreqCap
+      val (text, id) = textId(c)
+      val cap = c.str("cap", "64") match {
+        case "auto" => DocFreqCap.Auto
+        case "unbounded" => DocFreqCap.Unbounded
+        case _ => DocFreqCap.Fixed(c.long("cap", 64L))
+      }
+      c.write(graft.dedup.Dedup.stopGrams(c.input, text, id, n = c.int("n", 3), cap = cap))
+    }),
+    // --blocks B is the unbiased 1-in-B pair-sample work dial; --blocks 1
+    // buys the exact all-pairs sweep (quadratic in per-window actives)
+    "coactive" -> Verb("--user EXPR --type EXPR --ts EXPR [--bucket-hours 3] [--blocks 4] [--top 25]", { c =>
+      c.write(graft.operators.TemporalJoins.coActivePairs(c.input,
+        c.expr("user"), c.expr("type"), c.expr("ts"),
+        bucketUs = c.long("bucket-hours", 3L) * 3600000000L,
+        blocks = c.int("blocks", 4), topK = c.int("top", 25)))
+    }),
+    "keywords" -> Verb("--text text [--iters 3] [--top 40]", c => c.write(
+      graft.text.TextAnalysis.textRank(c.input, c.expr("text"),
+        iters = c.int("iters", 3), topK = c.int("top", 40)))),
+    "triplets" -> Verb("--vec embedding --id vec_id --label label [--anchor-mod 10] [--k 5]", { c =>
+      import graft.similarity.Similarity
+      val corpus = Similarity.prepareQuantized(c.input, c.expr("vec"), c.expr("id"), c.expr("label"))
+      val anchors = corpus.filter(pmod(F.col("vec_id"), lit(c.long("anchor-mod", 10L))) === 0)
+      c.write(Similarity.mineTriplets(corpus, anchors, k = c.int("k", 5)))
+    }),
+    // NULL AUC for one-class groups
+    "auc" -> Verb("--group EXPR --score INTEGRAL-EXPR --positive BOOL-EXPR", c => c.write(
+      graft.quality.Eval.aucExact(c.input, c.expr("group"), c.expr("score"), c.expr("positive")))),
+    "keyness" -> Verb("--text COL --group EXPR [--top 15]", c => c.write(
+      graft.text.TextAnalysis.keyness(c.input, c.expr("text"), c.expr("group"), topK = c.int("top", 15)))),
+    // entities whose last event is within --censor-hours of the horizon
+    // are censored, not churned
+    "survival" -> Verb("--id EXPR --ts-us MICROS-EXPR [--censor-hours 24] [--bucket-hours 24]", c => c.write(
+      graft.operators.Timeseries.kaplanMeier(c.input, c.expr("id"), c.expr("ts-us"),
+        censorWindowUs = c.long("censor-hours", 24L) * 3600000000L,
+        bucketUs = c.long("bucket-hours", 24L) * 3600000000L))),
+    "ctfidf" -> Verb("--text COL --group EXPR [--top 15]", c => c.write(
+      graft.text.TextAnalysis.ctfidfTopTerms(c.input, c.expr("text"), c.expr("group"), topK = c.int("top", 15)))),
+    "mi" -> Verb("--x EXPR --y EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).mutualInformation(c.expr("x"), c.expr("y")))),
+    "distinct-n" -> Verb("--text COL --group EXPR [--ns 1,2,3]", c => c.write(
+      graft.text.TextAnalysis.distinctN(c.input, c.expr("text"), c.expr("group"), c.ints("ns", "1,2,3")))),
+    "kl-source" -> Verb("--text COL --group EXPR", c => c.write(
+      graft.text.TextAnalysis.sourceKl(c.input, c.expr("text"), c.expr("group")))),
+    "cc-sizes" -> Verb("[--a doc_a] [--b doc_b]", { c =>
+      import graft.dedup.Components
+      val comps = Components.connectedComponents(c.input, c.str("a", "doc_a"), c.str("b", "doc_b"))
+      c.write(Components.componentSizes(comps, F.col("cluster_id")))
+    }),
+    "hhi" -> Verb("--group EXPR --key EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).concentration(c.expr("group"), c.expr("key")))),
+    "spearman" -> Verb("--group EXPR --x INTEGRAL-EXPR --y INTEGRAL-EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).spearman(Seq(c.expr("group")), c.expr("x"), c.expr("y")))),
+    "kcore" -> Verb("--src EXPR --dst EXPR [--k 2] [--rounds 12]", { c =>
+      val edges = c.input.select(c.expr("src").as("src"), c.expr("dst").as("dst"))
+      c.write(graft.operators.GraphOps.kCore(edges, k = c.long("k", 2L), maxRounds = c.int("rounds", 12)))
+    }),
+    "benford" -> Verb("--value INTEGRAL-EXPR",
+      c => c.write(graft.quality.Validate.benfordAudit(c.input, c.expr("value")))),
+    "twap" -> Verb("--key EXPR --ts-us MICROS-EXPR --value INTEGRAL-EXPR", c => c.write(
+      graft.operators.Timeseries.timeWeightedAvg(c.input, c.expr("key"), c.expr("ts-us"), c.expr("value")))),
+    "readability" -> Verb(TextId, { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextAnalysis.readability(c.input, text, id))
+    }),
+    "luhn" -> Verb(TextId, { c =>
+      val (text, id) = textId(c)
+      c.write(graft.text.TextPrep.luhnScreen(c.input, text, id))
+    }),
+    "winsorize" -> Verb("--group EXPR --value INTEGRAL-EXPR [--lo 10] [--hi 990]", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).winsorize(c.expr("group"), c.expr("value"),
+        loPerMille = c.long("lo", 10L), hiPerMille = c.long("hi", 990L)))),
+    "trimmed-mean" -> Verb("--group EXPR --value INTEGRAL-EXPR [--lo 50] [--hi 950]", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).trimmedMean(c.expr("group"), c.expr("value"),
+        loPerMille = c.long("lo", 50L), hiPerMille = c.long("hi", 950L)))),
+    "target-encode" -> Verb("--key EXPR --target INTEGRAL-EXPR", c => c.write(
+      graft.operators.Relational.RelationalOps(c.input).targetEncodeLoo(c.expr("key"), c.expr("target")))),
+    "conversion-ci" -> Verb("--arm EXPR --entity EXPR --converted BOOL-EXPR", c => c.write(
+      graft.quality.Validate.conversionReport(c.input, c.expr("arm"), c.expr("entity"), c.expr("converted")))),
+    "attribution" -> Verb("--user EXPR --type EXPR --ts-us MICROS-EXPR --id EXPR --conv TYPE --touch T1,T2 " +
+      "[--window-hours 24] [--bucket-hours 24]", { c =>
+      val touches = c.req("touch").split(",").toSeq.filter(_.nonEmpty)
+      c.write(graft.operators.TemporalJoins.attribution(c.input,
+        c.expr("user"), c.expr("type"), c.expr("ts-us"), c.expr("id"), c.req("conv"), touches,
+        c.long("window-hours", 24L) * 3600000000L,
+        bucketUs = c.long("bucket-hours", 24L) * 3600000000L))
+    }),
+    // MG sketch per group + exact recount, threshold num/den of the group
+    "heavy-keys" -> Verb("--group EXPR --key INTEGRAL-EXPR [--num 8] [--den 1000]", c => c.write(
+      graft.sketch.Sketches.heavyHittersByGroup(c.input, c.expr("group"), c.expr("key"),
+        shareNum = c.long("num", 8L), shareDen = c.long("den", 1000L)))),
+    "bm25" -> Verb(s"$TextId --terms T1,T2 [--top 50]", { c =>
+      val (text, id) = textId(c)
+      val terms = c.req("terms").split(",").toSeq.filter(_.nonEmpty)
+      c.write(graft.text.Search.bm25Rank(c.input, text, id, terms, topK = c.int("top", 50)))
+    }),
+    // file-level min/max manifests: write (cluster + stats), build
+    // (stats over an existing dir), read (pruned range probe on --key)
+    "zonemap" -> Verb("--action write --out PATH --key COL [--parts 8] | --action build --out PATH --key C1,C2 | " +
+      "--action read --out PATH --key COL --lo X --hi Y [--bound-type long|string]", { c =>
+      import graft.sources.ZoneMaps
+      val out = c.req("out")
+      c.oneOf("action", "write")("write", "build", "read") match {
+        case "write" =>
+          ZoneMaps.writeClustered(c.input, out, numPartitions = c.int("parts", 8), orderBy = c.req("key"))
+          println(s"[graft] zone-mapped $out")
+        case "build" =>
+          ZoneMaps.buildStats(c.spark, out, c.req("key").split(",").toSeq)
+          println(s"[graft] zone map rebuilt for $out")
+        case "read" =>
+          val key = c.req("key")
+          rangeRead(c, ZoneMaps.boundFamily(c.spark, out, key))(
+            ZoneMaps.readRange(c.spark, out, key, _, _), ZoneMaps.readRange(c.spark, out, key, _, _))
+      }
+    }),
+    // consolidate a persisted index's append history to one base
+    // partition; bm25 compacts tf AND its stats ledger, ivf also
+    // reclaims rebalance's dead rows. Claim-guarded and crash-healable:
+    // schedule from maintenance, not under probes
+    "index-compact" -> Verb(s"--kind ${Kinds.mkString("|")} --table NAME", { c =>
+      import c.spark.implicits._
+      val kind = c.oneOf("kind")(Kinds: _*)
+      c.write(compactIndex(c.spark, kind, c.req("table")).flatMap { case (label, st) => Seq(
+        (label, "rows", st.rows), (label, "dropped_rows", st.droppedRows),
+        (label, "partitions_before", st.partitionsBefore.toLong),
+        (label, "partitions_after", st.partitionsAfter.toLong),
+        (label, "files_before", st.filesBefore.toLong),
+        (label, "files_after", st.filesAfter.toLong))
+      }.toDF("table_part", "stat", "value"))
+    }),
+    // the index family's nightly job: compact past --max-partitions
+    // (each drop partition costs a listing + footer fetches per probe);
+    // for ivf rebalance first when list concentration drifted past
+    // --hhi-factor-x10/10 × the build baseline; then reclaim superseded
+    // generations. Zero-downtime throughout (LiveTable view swaps)
+    "index-maintain" -> Verb(s"--kind ${Kinds.mkString("|")} --table NAME [--max-partitions 8] " +
+      "[--keep-previous true] [--hhi-factor-x10 15]", { c =>
+      import graft.similarity.{IvfIndex, PqIndex}
+      val (kind, table) = (c.oneOf("kind")(Kinds: _*), c.req("table"))
+      val (maxParts, keepPrev) = (c.int("max-partitions", 8), c.bool("keep-previous", true))
+      val factorX10 = c.long("hhi-factor-x10", 15L)
+      val dataTable = kind match {
+        case "ivf" => s"${table}_cells"
+        case "pq" => s"${table}_pqcells"
+        case _ => table
+      }
+      def partsNow: Long = c.spark.sql("SHOW PARTITIONS " +
+        graft.sources.LiveTable.resolve(c.spark, dataTable)).count()
+      val partsBefore = partsNow
+      val rebalanced = if (kind != "ivf") None else {
+        val d = IvfIndex.driftStats(c.spark, table)
+        if (d.hhiPermille * 10 > factorX10 * math.max(d.hhiPermilleAtBuild, 1L))
+          Some(IvfIndex.rebalance(c.spark, table))
+        else None
+      }
+      val needCompact = partsNow > maxParts || rebalanced.exists(_.splitCells > 0) // reclaim the split's dead rows
+      if (needCompact) compactIndex(c.spark, kind, table)
+      val genTables = if (kind == "bm25") Seq(table, s"${table}_stats") else Seq(dataTable)
+      val vacuumed = genTables.flatMap(graft.sources.TableCompact.vacuumGens(c.spark, _, keepPrev)) ++
+        (kind match { // trained-state generations (pointer files)
+          case "ivf" => IvfIndex.vacuumGens(c.spark, table)
+          case "pq" => PqIndex.vacuumGens(c.spark, table)
+          case _ => Nil
+        })
+      c.report(Seq(
+        ("gauge", "partitions_before", partsBefore.toString),
+        ("gauge", "partitions_after", partsNow.toString),
+        ("action", "compacted", needCompact.toString)) ++
+        rebalanced.map(r => ("action", "rebalanced_cells", r.splitCells.toString)) ++
+        vacuumed.map(("action", "vacuumed", _)))
+    }),
+    "kmv-overlap" -> Verb("--text text [--group source] [--k 256]", c => c.write(
+      graft.sketch.Sketches.kmvOverlapReport(c.input, c.expr("group", "source"), c.expr("text"), c.int("k", 256)))),
+    "datasheet" -> Verb(s"$TextId [--source source] [--lang lang] [--gopher-min-words 50] " +
+      "[--gopher-max-words 100000]", { c =>
+      val (text, id) = textId(c)
+      c.write(graft.quality.Datasheet.perSource(c.input, text, id,
+        c.expr("source", "source"), c.expr("lang", "lang"),
+        minWords = c.int("gopher-min-words", 50), maxWords = c.int("gopher-max-words", 100000)))
+    }),
+    // metadata-only: no data scanned
+    "schema-check" -> Verb("--expect \"id BIGINT, text STRING, ...\"",
+      c => c.write(graft.quality.Validate.schemaDrift(c.input, c.req("expect")))),
+    // every rule evaluated in ONE pass over the data
+    "validate" -> Verb("[--not-null \"a,b\"] [--unique \"a,b\"] [--check \"pred1;pred2\"]", { c =>
+      val cs = c.checks
+      if (cs.isEmpty) c.fail("validate requires --not-null, --unique and/or --check")
+      c.write(graft.quality.Validate.violations(c.input, cs))
+    }),
+    "promote" -> Verb(s"--root PATH [--action ${promoteActions.keys.mkString("|")}] " +
+      "[--not-null/--unique/--check] [--diff-key id --diff-content c [--max-changed-pm 50]] " +
+      "[--key doc_id --buckets 64 [--zones c1,c2] [--key-bloom-bits N] [--zone-cluster true]] " +
+      "[--deleted EXPR] [--retry N] [--max-delta-layers 8] [--to-version N] [--from-version N] " +
+      "[--retain 2] [--stale-ms MS] [--max-owner-dirs 4] [--checkpoint DIR] [--ts MILLIS|ISO] " +
+      "[--range-col C --lo X --hi Y [--bound-type long|string]]", { c =>
+      val action = c.str("action", "promote")
+      promoteActions.getOrElse(action, c.fail(s"unknown --action: $action"))(c)
+    })
+  )
 }

@@ -37,6 +37,12 @@ class PlansSpec extends SparkSpecBase {
     assert(f === 1.0)
   }
 
+  test("graft_dot_long refuses non-integral arrays at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_dot_long(array('a'), array('b'))").head())
+    assert(e.getMessage.contains("graft_dot_long"))
+  }
+
   test("graft_shingles / graft_char_shingles are registered SQL functions") {
     val w = spark.sql("SELECT graft_shingles('The quick Fox', 2) AS g")
       .as[Seq[String]].head()
