@@ -39,6 +39,41 @@ object Cli {
 
   private def fail(msg: String): Nothing = throw new CliError(msg)
 
+  /** The items of a comma-separated expression list; commas inside
+    * parentheses, brackets or quotes belong to their item. */
+  private[graft] def splitList(s: String): Seq[String] = {
+    val items = Seq.newBuilder[String]
+    var depth = 0
+    var quote: Option[Char] = None
+    var start = 0
+    for (i <- s.indices) (s(i), quote) match {
+      case (c, Some(q)) => if (c == q) quote = None
+      case ('\'' | '"' | '`', None) => quote = Some(s(i))
+      case ('(' | '[', None) => depth += 1
+      case (')' | ']', None) => depth -= 1
+      case (',', None) if depth == 0 => items += s.substring(start, i).trim; start = i + 1
+      case _ =>
+    }
+    (items += s.substring(start).trim).result()
+  }
+
+  private val SortItem = """(?is)(.+?)(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?""".r
+
+  /** One sort item, `expr [ASC|DESC] [NULLS FIRST|LAST]`, with SQL's
+    * defaults: ascending, nulls first when ascending and last when
+    * descending. */
+  private[graft] def sortItem(item: String): Column = item match {
+    case SortItem(e, dir, nulls) =>
+      val c = F.expr(e)
+      (Option(dir).map(_.toUpperCase), Option(nulls).map(_.toUpperCase)) match {
+        case (Some("DESC"), Some("FIRST")) => c.desc_nulls_first
+        case (Some("DESC"), _)             => c.desc
+        case (_, Some("LAST"))             => c.asc_nulls_last
+        case _                             => c.asc
+      }
+    case other => fail(s"not a sort item: '$other' (use expr [ASC|DESC] [NULLS FIRST|LAST])")
+  }
+
   /** One verb: its one-line usage and its body. */
   final case class Verb(usage: String, body: Ctx => Unit)
 
@@ -81,8 +116,9 @@ object Cli {
     def col(k: String): Column = F.col(req(k))
     def expr(k: String): Column = F.expr(req(k))
     def expr(k: String, default: String): Column = F.expr(str(k, default))
-    def exprList(k: String): Seq[Column] =
-      req(k).split(",(?![^()]*\\))").map(s => F.expr(s.trim)).toSeq
+    def exprList(k: String): Seq[Column] = Cli.splitList(req(k)).map(F.expr)
+    /** `--k "expr [ASC|DESC] [NULLS FIRST|LAST], ..."` as sort columns. */
+    def sortList(k: String): Seq[Column] = Cli.splitList(req(k)).map(Cli.sortItem)
 
     // --not-null "a,b" / --unique "a,b" / --check "pred1;pred2" →
     // Validate.Check suite (shared by the validate and promote verbs)
@@ -418,7 +454,7 @@ object Cli {
     // order); without, full-row distinct
     "partition.distinct" -> Verb("--expr \"a, b\" [--key \"a\" --order \"b\"]", { c =>
       val projected = c.input.mapRecords(c.exprList("expr"): _*)
-      c.write(if (c.has("key")) projected.distinctBy(c.exprList("key"), c.exprList("order"))
+      c.write(if (c.has("key")) projected.distinctBy(c.exprList("key"), c.sortList("order"))
         else projected.distinct())
     }),
     "partition.reduce" -> Verb("--aggs \"sum(v) AS s, count(1) AS n\"", { c =>
@@ -443,7 +479,7 @@ object Cli {
     }),
     "partition.head" -> Verb("[--n 10] --order \"v DESC, id\"", { c =>
       val n = c.int("n", 10)
-      c.write(c.input.headRecords(n, c.exprList("order"): _*))
+      c.write(c.input.headRecords(n, c.sortList("order"): _*))
     }),
     // shmr partition.join (partition.py:263): the right key is computed
     // BEFORE de-colliding names (it references the original columns),
@@ -481,15 +517,16 @@ object Cli {
       "[--emit keep|pairs|keep-best [--order \"length(text) DESC, doc_id\"]]", { c =>
       val df = c.input
       val (text, id) = textId(c)
-      val pairs = graft.dedup.Dedup.minhashCandidatePairs(df, text, id,
-        shingleN = c.int("shingle", 3), numBands = c.int("bands", 4),
-        rowsPerBand = c.int("rows-per-band", 2))
+      val (shingleN, numBands, rowsPerBand) = (c.int("shingle", 3), c.int("bands", 4), c.int("rows-per-band", 2))
+      // the keep rules only need the clusters: the star edges span them
+      def edges = graft.dedup.Dedup.minhashClusterEdges(df, text, id, shingleN, numBands, rowsPerBand)
       c.oneOf("emit", "keep")("keep", "pairs", "keep-best") match {
-        case "pairs" => c.write(pairs)
-        case "keep" => c.write(graft.dedup.Components.keepOnePerCluster(df, id, pairs, "doc_a", "doc_b"))
+        case "pairs" =>
+          c.write(graft.dedup.Dedup.minhashCandidatePairs(df, text, id, shingleN, numBands, rowsPerBand))
+        case "keep" => c.write(graft.dedup.Components.keepOnePerCluster(df, id, edges, "doc_a", "doc_b"))
         // --order needs an id tiebreak or the keeper is nondeterministic
         case "keep-best" => c.write(graft.dedup.Components.keepBestPerCluster(
-          df, id, pairs, "doc_a", "doc_b", c.exprList("order")))
+          df, id, edges, "doc_a", "doc_b", c.sortList("order")))
       }
     }),
     "pack" -> Verb(s"$TextId [--shard \"doc_id % 8\"] [--budget 2000]", { c =>
@@ -792,7 +829,7 @@ object Cli {
       c.write(graft.dedup.Dedup.sortedNeighborhoodPairs(c.input, id, key, window = c.int("window", 5)))
     }),
     "scd2" -> Verb("--key user_id --ts \"unix_micros(ts)\" [--order \"..., event_id\"]", { c =>
-      val order = if (c.has("order")) c.exprList("order") else Seq(c.expr("ts"))
+      val order = if (c.has("order")) c.sortList("order") else Seq(c.expr("ts"))
       c.write(graft.operators.TemporalJoins.scd2(c.input, c.expr("key"), c.expr("ts"), order))
     }),
     "shuffle" -> Verb("--key doc_id [--seed 42]",

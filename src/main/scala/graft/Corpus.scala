@@ -129,18 +129,24 @@ final case class Corpus(df: DataFrame, text: Column, id: Column,
   /** MinHash-LSH near-dup removal, keeping the min-id doc per
     * connected cluster. `portable = true` switches to the
     * md5-lexicographic hash family (engine-replayable, oracle-gated);
-    * the default xxhash64 family is the fast path. */
+    * the default xxhash64 family is the fast path. Clusters come from
+    * the star edges of [[Dedup.minhashClusterEdges]] (one edge per
+    * band-bucket member), not the all-pairs candidate graph: a
+    * spanning edge set has the same connected components, so the kept
+    * rows are the same, at |B| − 1 edges per bucket instead of
+    * C(|B|,2). */
   def nearDedup(shingleN: Int = 3, numBands: Int = 4, rowsPerBand: Int = 2,
       portable: Boolean = false): Corpus = {
-    val pairs = Dedup.minhashCandidatePairs(df, text, id, shingleN, numBands, rowsPerBand, portable)
-    keep(Components.keepOnePerCluster(df, id, pairs, "doc_a", "doc_b"), "near_dedup")
+    val edges = Dedup.minhashClusterEdges(df, text, id, shingleN, numBands, rowsPerBand, portable)
+    keep(Components.keepOnePerCluster(df, id, edges, "doc_a", "doc_b"), "near_dedup")
   }
 
   /** MinHash-LSH near-dup removal, keeping the LONGEST doc per
-    * cluster (id tiebreak) — the copy worth training on. */
+    * cluster (id tiebreak) — the copy worth training on. Same star
+    * edges as [[nearDedup]]. */
   def nearDedupKeepBest(shingleN: Int = 3, numBands: Int = 4, rowsPerBand: Int = 2): Corpus = {
-    val pairs = Dedup.minhashCandidatePairs(df, text, id, shingleN, numBands, rowsPerBand)
-    keep(Components.keepBestPerCluster(df, id, pairs, "doc_a", "doc_b",
+    val edges = Dedup.minhashClusterEdges(df, text, id, shingleN, numBands, rowsPerBand)
+    keep(Components.keepBestPerCluster(df, id, edges, "doc_a", "doc_b",
       Seq(length(text).desc, id.asc)), "near_dedup_keep_best")
   }
 

@@ -155,20 +155,21 @@ object Components {
   def connectedComponents(pairs: DataFrame, a: String, b: String, maxIter: Int = 20,
       localThreshold: Long = LocalEdgeThreshold): DataFrame = {
     // the size probe rides the checkpoint's own materializing job
-    // (eagerCount) — one job, not eager-then-count
-    val (sym, symCnt) = Checkpoints.eagerCount(
-      pairs.select(col(a).as("src"), col(b).as("dst"))
-        .union(pairs.select(col(b).as("src"), col(a).as("dst"))))
-    if (symCnt / 2 <= localThreshold) {
-      // sym carries every node as a src (self-loops included), so the
-      // union-find registers self-loop-only nodes as their own
-      // singletons in-stream — no label-resolution join, and the
-      // local path adds ZERO key shuffles to the downstream plan.
-      // Plan stays lazy over the checkpointed sym, which the caller's
-      // next query boundary releases like any other operator
-      // checkpoint.
-      return localComponents(sym.select(col("src").as("u"), col("dst").as("v")))
+    // (eagerCount) — one job, not eager-then-count. One orientation
+    // is checkpointed: the union-find registers both endpoints of
+    // every edge, so it needs no symmetric copy
+    val (edges, nEdges) = Checkpoints.eagerCount(pairs.select(col(a).as("src"), col(b).as("dst")))
+    if (nEdges <= localThreshold) {
+      // self-loop-only nodes register as their own singletons
+      // in-stream — no label-resolution join, and the local path adds
+      // ZERO key shuffles to the downstream plan. Plan stays lazy over
+      // the checkpointed edges, which the caller's next query boundary
+      // releases like any other operator checkpoint.
+      return localComponents(edges.select(col("src").as("u"), col("dst").as("v")))
     }
+    // every node appears as a src of the symmetric view (self-loops
+    // included), which the propagation loop reads each round
+    val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
     // labels carry (id, lbl, prev): `prev` is the label the row held
     // BEFORE this round's min — so "did anything change" is a scan of
     // the already-materialized checkpoint, not a next⋈old join (which
@@ -195,7 +196,7 @@ object Components {
       converged = changed == 0
       round += 1
     }
-    Checkpoints.release(sym) // final labels are self-contained blocks
+    Checkpoints.release(edges) // final labels are self-contained blocks
     labels.select(col("id"), col("lbl").as("cluster_id"))
   }
 
@@ -303,7 +304,13 @@ object Components {
 
   /** Full dedup decision: every doc keeps exactly one representative —
     * the min id of its near-dup cluster (docs without any near-dup
-    * keep themselves). Left join: singleton docs pass through. */
+    * keep themselves). Left join: singleton docs pass through.
+    *
+    * `pairs` is any edge set whose connected components are the
+    * clusters: the all-pairs candidate graph or a spanning subset of
+    * it such as [[Dedup.minhashClusterEdges]] — only connectivity
+    * decides the keeper, so both give the same rows and the spanning
+    * set is the cheaper input. */
   def keepOnePerCluster(df: DataFrame, id: Column, pairs: DataFrame, a: String, b: String): DataFrame = {
     // reserved names: drop-by-name removes EVERY column with that name,
     // so joining under the caller-visible "id"/"cluster_id" would
@@ -328,7 +335,9 @@ object Components {
     * Selection runs through the GroupTopK operator (k = 1): each map
     * partition reduces to one candidate per cluster BEFORE the
     * exchange, so the shuffle carries one row per (cluster,
-    * partition) — not the corpus. */
+    * partition) — not the corpus. `pairs` takes the same edge sets as
+    * [[keepOnePerCluster]]: the clusters are connected components, so
+    * a spanning edge set ([[Dedup.minhashClusterEdges]]) suffices. */
   def keepBestPerCluster(df: DataFrame, id: Column, pairs: DataFrame, a: String, b: String,
       order: Seq[Column]): DataFrame = {
     val comps = connectedComponents(pairs, a, b)

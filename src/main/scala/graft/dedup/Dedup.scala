@@ -47,8 +47,13 @@ object DocFreqCap {
   *
   * All stages are declarative Column expressions — shingling, hashing,
   * banding and candidate generation run inside whole-stage codegen /
-  * native expression eval; the only shuffles are the keyed self-joins
-  * on band/gram keys, which is the canonical LSH-on-MapReduce shape.
+  * native expression eval; the only shuffles are keyed on band/gram
+  * keys, the canonical LSH-on-MapReduce shape. MinHash banding has
+  * two outputs: [[minhashCandidatePairs]] (every pair per bucket, a
+  * band-key self-join) for consumers of pairs, and
+  * [[minhashClusterEdges]] (one star edge per bucket member, a window
+  * over the band key) for consumers of connected components — a
+  * spanning edge set gives the same components, linear in bucket size.
   *
   * Hash family is selectable: xxhash64 (fast path, codegen'd) or
   * md5-lexicographic (engine-portable, used by the DuckDB oracles).
@@ -148,7 +153,12 @@ object Dedup {
   /** Candidate pairs from MinHash-LSH banding: one self-join on
     * (band_id, band_key). Band keys are uniform hashes → the shuffle
     * is skew-free; pairs are deduped across bands and oriented
-    * idA < idB to halve the verification work. */
+    * idA < idB to halve the verification work. A bucket of |B| docs
+    * emits C(|B|,2) pairs — the right input for consumers that read
+    * pairs AS pairs (verification, recall audits, triangles, pair
+    * ledgers); consumers that only need connected components take
+    * [[minhashClusterEdges]], which spans the same graph in |B| − 1
+    * edges per bucket. */
   def minhashCandidatePairs(
       df: DataFrame,
       text: Column,
@@ -170,6 +180,37 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
   }
+
+  /** A spanning edge set of the [[minhashCandidatePairs]] graph: one
+    * star edge (doc_a = bucket minimum, doc_b = member) per member of
+    * each (band_id, band_key) bucket, deduped across bands. Each
+    * bucket is a clique in the all-pairs graph and a star here, so
+    * both graphs have the same nodes and the same connected components
+    * — [[Components.connectedComponents]] of either is bit-equal —
+    * while a bucket of |B| docs costs |B| − 1 edges instead of
+    * C(|B|,2). That linear bound is what keeps a boilerplate bucket
+    * from blowing up the pair graph (the star contraction of
+    * [[Components.connectedComponentsStar]], applied per bucket).
+    *
+    * One exchange on the band key (the window), no self-join.
+    * `doc_a < doc_b` holds as in the pair graph; null ids drop out
+    * (`doc_id != root` is null for them) exactly as `a.doc_id <
+    * b.doc_id` drops them, and rows sharing an id share one signature,
+    * so an id never pairs with itself. */
+  def minhashClusterEdges(
+      df: DataFrame,
+      text: Column,
+      id: Column,
+      shingleN: Int = 3,
+      numBands: Int = 4,
+      rowsPerBand: Int = 2,
+      portable: Boolean = false
+  ): DataFrame =
+    minhashBandKeys(df, text, id, shingleN, numBands, rowsPerBand, portable)
+      .withColumn("__root", min("doc_id").over(Window.partitionBy("band_id", "band_key")))
+      .filter(col("doc_id") =!= col("__root"))
+      .select(col("__root").as("doc_a"), col("doc_id").as("doc_b"))
+      .distinct()
 
   /** Incremental corpus update: split `batch` into rows that are
     * MinHash-LSH near-dups of the EXISTING corpus vs novel rows, and

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.LongType
 
 /** Session-scoped registry of the storage blocks pinned by
   * operator-internal eager local checkpoints.
@@ -29,8 +31,9 @@ import org.apache.spark.sql.DataFrame
   *
   * There is one way to materialize: [[eagerCount]] (checkpoint + the
   * row count its own job yields, + an optional partitioning claim
-  * verified against the executed plan); [[eager]] is the same call
-  * without the count.
+  * verified against the executed plan); [[eagerSum]] yields a column
+  * sum from that job instead, and [[eager]] is the same call without
+  * the count.
   */
 object Checkpoints {
   // WEAK keys: the registry is an eager-release accelerator, not an
@@ -66,12 +69,29 @@ object Checkpoints {
     * `repartition(n, keys)` where it replaces an exchange the plan
     * would insert anyway (below a distinct / aggregate on the same
     * keys), never on top of one. */
-  def eagerCount(df: DataFrame, claim: Seq[String] = Nil): (DataFrame, Long) = {
+  def eagerCount(df: DataFrame, claim: Seq[String] = Nil): (DataFrame, Long) =
+    materialize(df, claim)(_.count())
+
+  /** [[eagerCount]] returning the sum of the LONG column `column`
+    * (nulls count 0) instead of the row count — a mass over the rows,
+    * such as the number of rows flagged 1, read in the same single
+    * materializing job. */
+  def eagerSum(df: DataFrame, column: String, claim: Seq[String] = Nil): (DataFrame, Long) = {
+    val i = df.schema.fieldIndex(column)
+    require(df.schema(i).dataType == LongType,
+      s"eagerSum: column $column is ${df.schema(i).dataType.simpleString}, not bigint")
+    materialize(df, claim)(_.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).fold(0L)(_ + _))
+  }
+
+  // the one materializing body: `job` runs on the checkpoint's own RDD,
+  // so its one job computes (and pins) every partition
+  private def materialize(df: DataFrame, claim: Seq[String])(
+      job: RDD[InternalRow] => Long): (DataFrame, Long) = {
     val ck = df.localCheckpoint(eager = false)
     val rdd = org.apache.spark.sql.graft.CheckpointBlocks.rddOf(ck)
       .getOrElse(sys.error("a local checkpoint is not a LogicalRDD scan"))
     tracked.put(rdd, java.lang.Boolean.TRUE)
-    val n = rdd.count()
+    val n = job(rdd.asInstanceOf[RDD[InternalRow]])
     val out =
       if (claim.isEmpty) ck
       else org.apache.spark.sql.graft.GraftPlans.claimIfHashPartitioned(ck, df, claim)

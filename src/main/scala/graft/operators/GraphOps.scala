@@ -99,12 +99,13 @@ object GraphOps {
     require(iters >= 0)
     val e = Checkpoints.eager(edges.select(col("src"), col("dst")).distinct())
     val nodes0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-    // claimed on id / src for the same per-round reuse as [[pageRank]]
-    val nodes = Checkpoints.eager(
+    // claimed on id / src for the same per-round reuse as [[pageRank]];
+    // the seed mass rides the checkpoint's own materializing job
+    val (nodes, ns) = Checkpoints.eagerSum(
       nodes0.join(seeds.select(col("id")).distinct().withColumn("__s", lit(1L)), Seq("id"), "left")
         .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed"))
-        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")), Seq("id"))
-    val ns = nodes.agg(sum("seed")).head().getLong(0)
+        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")),
+      "seed", Seq("id"))
     require(ns > 0, "no seed appears in the graph")
     val base = scale / ns
     val tele = (15L * base) / 100L

@@ -272,11 +272,12 @@ object TemporalJoins {
     *
     * `order` must totally order a key's changes (give it a change-id
     * tiebreak for equal timestamps, or intervals are
-    * nondeterministic); `valid_to` of a row equals the next row's
-    * `valid_from`, so intervals are contiguous, half-open [from, to)
-    * and never overlap. */
+    * nondeterministic); plain columns sort ascending, sort columns
+    * (`.desc`, `.asc_nulls_last`) keep their direction. `valid_to` of
+    * a row equals the next row's `valid_from`, so intervals are
+    * contiguous, half-open [from, to) and never overlap. */
   def scd2(df: DataFrame, key: Column, tsUs: Column, order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(order.map(_.asc): _*)
+    val w = Window.partitionBy(key).orderBy(order: _*)
     df.withColumn("valid_from_us", tsUs.cast("long"))
       .withColumn("valid_to_us", lead(tsUs.cast("long"), 1).over(w))
       .withColumn("is_current", col("valid_to_us").isNull)

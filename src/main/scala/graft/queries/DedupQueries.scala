@@ -173,47 +173,49 @@ object DedupQueries {
       Dedup.containmentPairs(Tables.documents(s, dir), col("text"), col("doc_id"), n = 3, tau = 0.8)),
 
     // §2.3/25b near-dup clustering: connected components over the
-    // minhash pair graph (label propagation vs recursive-CTE oracle).
+    // minhash star edges — a spanning subset of the pair graph, so the
+    // labels equal the recursive-CTE oracle's over all pairs.
     "q_dedup_cluster" -> ((s, dir) => {
-      val pairs = Dedup.minhashCandidatePairs(
+      val edges = Dedup.minhashClusterEdges(
         Tables.documents(s, dir), col("text"), col("doc_id"),
         shingleN = 3, numBands = 4, rowsPerBand = 2, portable = true)
-      Components.connectedComponents(pairs, "doc_a", "doc_b")
+      Components.connectedComponents(edges, "doc_a", "doc_b")
         .withColumnRenamed("id", "doc_id")
     }),
 
-    // §2.3/24b3 component-size histogram over the same minhash pair
-    // graph — the "is one giant cluster about to eat the corpus"
+    // §2.3/24b3 component-size histogram over the same minhash star
+    // edges — the "is one giant cluster about to eat the corpus"
     // diagnostic read before keep-one acts.
     "q_cc_sizes" -> ((s, dir) => {
-      val pairs = Dedup.minhashCandidatePairs(
+      val edges = Dedup.minhashClusterEdges(
         Tables.documents(s, dir), col("text"), col("doc_id"),
         shingleN = 3, numBands = 4, rowsPerBand = 2, portable = true)
       Components.componentSizes(
-        Components.connectedComponents(pairs, "doc_a", "doc_b"), col("cluster_id"))
+        Components.connectedComponents(edges, "doc_a", "doc_b"), col("cluster_id"))
     }),
 
     // §2.3/25b-star: same clustering through large-star/small-star
     // contraction — the adversarial-diameter scale path. Same oracle.
     "q_cluster_star" -> ((s, dir) => {
-      val pairs = Dedup.minhashCandidatePairs(
+      val edges = Dedup.minhashClusterEdges(
         Tables.documents(s, dir), col("text"), col("doc_id"),
         shingleN = 3, numBands = 4, rowsPerBand = 2, portable = true)
-      Components.connectedComponentsStar(pairs, "doc_a", "doc_b")
+      Components.connectedComponentsStar(edges, "doc_a", "doc_b")
         .withColumnRenamed("id", "doc_id")
     }),
 
     // Capstone: end-to-end corpus construction — quality gate (token
-    // floor), minhash-LSH near-dup clustering, keep-one-per-cluster,
-    // per-source corpus stats. Every stage is individually oracle-
-    // gated elsewhere; this gate proves the COMPOSITION stays exact.
+    // floor), minhash-LSH near-dup clustering (star edges),
+    // keep-one-per-cluster, per-source corpus stats. Every stage is
+    // individually oracle-gated elsewhere; this gate proves the
+    // COMPOSITION stays exact.
     "q_corpus" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
         .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")).cast("bigint"))
         .filter(col("n_tokens") >= 30)
-      val pairs = Dedup.minhashCandidatePairs(docs, col("text"), col("doc_id"),
+      val edges = Dedup.minhashClusterEdges(docs, col("text"), col("doc_id"),
         shingleN = 3, numBands = 4, rowsPerBand = 2, portable = true)
-      Components.keepOnePerCluster(docs, col("doc_id"), pairs, "doc_a", "doc_b")
+      Components.keepOnePerCluster(docs, col("doc_id"), edges, "doc_a", "doc_b")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens"))
     }),
@@ -251,9 +253,9 @@ object DedupQueries {
     "q_keep_best" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
         .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")).cast("bigint"))
-      val pairs = Dedup.minhashCandidatePairs(docs, col("text"), col("doc_id"),
+      val edges = Dedup.minhashClusterEdges(docs, col("text"), col("doc_id"),
         shingleN = 3, numBands = 4, rowsPerBand = 2, portable = true)
-      Components.keepBestPerCluster(docs, col("doc_id"), pairs, "doc_a", "doc_b",
+      Components.keepBestPerCluster(docs, col("doc_id"), edges, "doc_a", "doc_b",
           Seq(col("n_tokens").desc, col("doc_id").asc))
         .select(col("doc_id"), col("source"), col("n_tokens"))
     }),

@@ -86,4 +86,18 @@ class ClaimSpec extends SparkSpecBase {
     assert(counted <= eager, s"eagerCount ran $counted jobs, localCheckpoint(eager = true) $eager")
     Checkpoints.releaseAll()
   }
+
+  test("eagerSum reads a bigint column's sum off the same single job; other types refuse") {
+    def input() = spark.range(0, 2000, 1, 4).groupBy((col("id") % 13).as("k")).count()
+      .withColumn("n", when(col("k") === 0, lit(null)).otherwise(col("count")))
+    val ((ck, total), summed) = JobCount(spark)(Checkpoints.eagerSum(input(), "n"))
+    val (_, eager) = JobCount(spark)(input().localCheckpoint(eager = true))
+    // k = 0 holds ids 0, 13, …, 1989: 154 rows, its null sum counts 0
+    assert(total === 2000L - 154L)
+    assert(summed <= eager, s"eagerSum ran $summed jobs, localCheckpoint(eager = true) $eager")
+    assert(ck.count() === 13L)
+    assertThrows[IllegalArgumentException](
+      Checkpoints.eagerSum(spark.range(3).selectExpr("CAST(id AS INT) AS i"), "i"))
+    Checkpoints.releaseAll()
+  }
 }

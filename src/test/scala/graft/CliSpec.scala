@@ -146,7 +146,7 @@ class CliSpec extends SparkSpecBase {
     assertSame(json(p("rbk"), "k long, s long"),
       src.reduceByKey(Seq(expr("id % 2 AS k")), Seq(expr("sum(v) AS s"))))
     assert(json(p("rbk"), "k long, s long").as[(Long, Long)].collect().sorted.toSeq === Seq((0L, 60L), (1L, 40L)))
-    in("partition.head", "--n", "2", "--order", "-v, id", "--outfile", p("head"))
+    in("partition.head", "--n", "2", "--order", "v DESC", "--outfile", p("head"))
     assert(json(p("head"), s.get).as[(Long, Long)].collect().sorted.toSeq === Seq((3L, 30L), (4L, 40L)))
     in("partitions.reduce", "--aggs", "max(v) AS m, min(id) AS lo", "--outfile", p("preduce"))
     assert(json(p("preduce"), "m long, lo long").as[(Long, Long)].collect().toSeq === Seq((40L, 1L)))
@@ -172,6 +172,20 @@ class CliSpec extends SparkSpecBase {
     cli("-i", p("regions"), "-f", "parquet", "partition.reduce", "--aggs", "count(1) AS n",
       "--outfile", p("pqn"), "--codec", "snappy")
     assert(load(p("pqn")).as[Long].head() === 5L)
+  }
+
+  test("sort lists: ASC/DESC with SQL null defaults, NULLS FIRST|LAST, commas inside calls and quotes") {
+    assert(Cli.splitList("concat(a, ',', b), coalesce(x, (y)) DESC, `c,d`") ===
+      Seq("concat(a, ',', b)", "coalesce(x, (y)) DESC", "`c,d`"))
+    val t = Seq((1L, Some(20L)), (2L, None), (3L, Some(10L)), (4L, Some(20L))).toDF("id", "v")
+    def order(spec: String): Seq[Long] =
+      t.orderBy(Cli.splitList(spec).map(Cli.sortItem): _*).as[(Long, Option[Long])].collect().map(_._1).toSeq
+    assert(order("v, id") === Seq(2L, 3L, 1L, 4L))
+    assert(order("v ASC NULLS LAST, id desc") === Seq(3L, 4L, 1L, 2L))
+    assert(order("v DESC, id") === Seq(1L, 4L, 3L, 2L))
+    assert(order("v desc nulls first, id DESC") === Seq(2L, 4L, 1L, 3L))
+    assert(order("coalesce(v, 15) DESC, id") === Seq(1L, 4L, 2L, 3L))
+    assert(intercept[Cli.CliError](Cli.sortItem("")).getMessage.contains("not a sort item"))
   }
 
   test("the reference suite's own cases over csv: count, reduce, split_by_key, coalesce") {
@@ -206,9 +220,9 @@ class CliSpec extends SparkSpecBase {
     assertSame(kept, Components.keepOnePerCluster(in, col("doc_id"), libPairs, "doc_a", "doc_b"))
     assert(kept.count() < in.count())
     val best = pq(docs, "dedupedBest", "dedup-minhash", "--text", "text", "--id", "doc_id",
-      "--emit", "keep-best", "--order", "-length(text), doc_id")
+      "--emit", "keep-best", "--order", "length(text) DESC, doc_id")
     assertSame(best, Components.keepBestPerCluster(in, col("doc_id"), libPairs, "doc_a", "doc_b",
-      Seq(-length(col("text")), col("doc_id"))))
+      Seq(length(col("text")).desc, col("doc_id"))))
     assert(best.count() === kept.count())
 
     // every doc band-collides with its own corpus copy: nothing is novel

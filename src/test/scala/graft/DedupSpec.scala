@@ -31,6 +31,14 @@ class DedupSpec extends SparkSpecBase {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // unrelated doc stays out
   }
 
+  test("minhashClusterEdges: a bucket of 200 identical texts is 199 star edges, not C(200,2) pairs") {
+    val same = (1L to 200L).map(i => (i, base)).toDF("doc_id", "text")
+    val edges = Dedup.minhashClusterEdges(same, col("text"), col("doc_id")).as[(Long, Long)].collect()
+    assert(edges.length === 199)
+    assert(edges.toSet === (2L to 200L).map(m => (1L, m)).toSet)
+    assert(Dedup.minhashCandidatePairs(same, col("text"), col("doc_id")).count() === 19900L)
+  }
+
   test("minhashSignatures fast path is bit-compatible with minhashFast") {
     val sig = Dedup.minhashSignatures(docs, col("text"), col("doc_id"),
         shingleN = 3, numHashes = 4, portable = false)

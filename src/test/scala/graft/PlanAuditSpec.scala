@@ -580,8 +580,10 @@ class PlanAuditSpec extends SparkSpecBase {
   // every job the query starts while it is built (the checkpoint
   // jobs of its rounds) and written to a noop sink, counted by job
   // group. Measured at sf0.001 on the spec session (local[4], 4
-  // shuffle partitions).
-  private val jobBudgets: Map[String, Int] = Map("q_pagerank" -> 16, "q_kcore" -> 12)
+  // shuffle partitions). q_trustrank reads its seed mass off the node
+  // checkpoint's own job (Checkpoints.eagerSum), not a second action.
+  private val jobBudgets: Map[String, Int] =
+    Map("q_pagerank" -> 16, "q_kcore" -> 12, "q_trustrank" -> 19)
 
   test("loop-shaped queries stay within their job budget") {
     val over = jobBudgets.toSeq.sortBy(_._1).flatMap { case (q, budget) =>

@@ -243,6 +243,44 @@ class PropertySpec extends SparkSpecBase {
     }
   }
 
+  test("minhashClusterEdges components equal the candidate-pair components on random corpora") {
+    // the star edges must span exactly the all-pairs graph: same nodes,
+    // same components, row for row — under null ids, repeated ids, null
+    // texts and texts too short to shingle, for both hash families
+    import graft.dedup.Components
+    val vocab = Array("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    var starSmaller = false
+    for (seed <- 1 to 3; portable <- Seq(false, true)) {
+      val rnd = new scala.util.Random(seed)
+      def text(): Option[String] = rnd.nextInt(10) match {
+        case 0 => None
+        case 1 => Some(vocab(rnd.nextInt(vocab.length)) + " " + vocab(rnd.nextInt(vocab.length)))
+        case _ => Some(Seq.fill(3 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.length))).mkString(" "))
+      }
+      val docs = (0 until 60).map { i =>
+        val id = rnd.nextInt(10) match {
+          case 0 => None
+          case 1 => Some(100L + rnd.nextInt(i + 1)) // an earlier doc's id (or its own)
+          case _ => Some(100L + i)
+        }
+        (id, text())
+      }.toDF("doc_id", "text")
+      val edges = Dedup.minhashClusterEdges(docs, col("text"), col("doc_id"), portable = portable)
+      val pairs = Dedup.minhashCandidatePairs(docs, col("text"), col("doc_id"), portable = portable)
+      def comps(e: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+        Components.connectedComponents(e, "doc_a", "doc_b").as[(Long, Long)].collect().sorted.toSeq
+      val ctx = s"seed=$seed portable=$portable"
+      val (es, ps) = (edges.as[(Long, Long)].collect(), pairs.as[(Long, Long)].collect().toSet)
+      assert(ps.nonEmpty, ctx)
+      assert(comps(edges) === comps(pairs), ctx)
+      // every star edge is a candidate pair, so doc_a < doc_b holds too
+      assert(es.forall(ps.contains), ctx)
+      starSmaller ||= es.length < ps.size
+      graft.operators.Checkpoints.releaseAll()
+    }
+    assert(starSmaller, "no corpus had a bucket of three or more docs")
+  }
+
   test("sortedNeighborhoodPairs equals brute force on random keys, sizes and windows") {
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
