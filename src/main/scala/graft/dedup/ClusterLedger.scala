@@ -2,10 +2,13 @@ package graft.dedup
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import graft.operators.Checkpoints
+import graft.sources.{CommitSlot, Versioned}
+import graft.sources.CommitSlot.rmTree
 
 /** Persisted incremental connected-components ledger — the
   * clustering-side completion of the build-once dedup family
@@ -77,10 +80,13 @@ object ClusterLedger {
     * contract). */
   final case class AppendStats(relabeled: Long, newIds: Long, rewrittenBuckets: Seq[Int])
 
-  /** The manifest: bucket count, number of committed appends, and
+  /** The manifest: bucket count, number of committed appends,
     * `owner(b)` = the append index whose directory holds bucket b's
-    * current content (0 = never written: bucket is empty). */
-  private[graft] final case class Manifest(numBuckets: Int, appends: Int, owner: Vector[Int])
+    * current content (0 = never written: bucket is empty), and the
+    * (id, cluster_id) schema, so [[lookup]] plans with no footer-read
+    * job (None on manifests written before the field existed). */
+  private[graft] final case class Manifest(numBuckets: Int, appends: Int, owner: Vector[Int],
+      labelSchema: Option[StructType] = None)
 
   private def manifestFile(path: String) = new File(path, "_cluster_manifest.json")
   private def appendDir(path: String, idx: Int) = new File(path, f"a$idx%05d")
@@ -88,9 +94,11 @@ object ClusterLedger {
   private val NumRe = """"numBuckets"\s*:\s*(\d+)""".r.unanchored
   private val AppRe = """"appends"\s*:\s*(\d+)""".r.unanchored
   private val OwnRe = """"owner"\s*:\s*\[([0-9,\s]*)\]""".r.unanchored
+  private val SchemaRe = """"schema"\s*:\s*"([^"]+)"""".r.unanchored
 
   private def render(m: Manifest): String =
-    s"""{"numBuckets": ${m.numBuckets}, "appends": ${m.appends}, "owner": [${m.owner.mkString(",")}]}"""
+    s"""{"numBuckets": ${m.numBuckets}, "appends": ${m.appends}, "owner": [${m.owner.mkString(",")}]""" +
+      m.labelSchema.map(t => s""", "schema": "${t.toDDL}"""").getOrElse("") + "}"
 
   private[graft] def readManifest(path: String): Option[Manifest] = {
     val f = manifestFile(path)
@@ -104,7 +112,8 @@ object ClusterLedger {
         case _ => sys.error(s"bad cluster-ledger manifest: $text")
       }
       require(own.length == nb, s"cluster-ledger manifest owner map has ${own.length} entries for $nb buckets")
-      Some(Manifest(nb, ap, own))
+      val schema = text match { case SchemaRe(ddl) => Some(StructType.fromDDL(ddl)) case _ => None }
+      Some(Manifest(nb, ap, own, schema))
     }
   }
 
@@ -193,7 +202,7 @@ object ClusterLedger {
       // empty label table)
       (Components.connectedComponentsBounded(e, "__u", "__v", eCnt)
         .withColumn("__src", lit(1))
-        .withColumn("bkt", pmod(xxhash64(col("id").cast("string")), lit(numBuckets)).cast("int"))
+        .withColumn("bkt", Versioned.bktCol(Seq("id"), numBuckets))
         .select(col("id"), col("cluster_id"), col("bkt"), col("__src")),
         Seq.empty[DataFrame])
     } else {
@@ -244,7 +253,7 @@ object ClusterLedger {
       // three separate jobs over the same checkpoint (guide §1.2)
       val touched = relabeled.withColumn("__src", lit(0))
         .unionByName(newRows.withColumn("__src", lit(1)))
-        .withColumn("bkt", pmod(xxhash64(col("id").cast("string")), lit(numBuckets)).cast("int"))
+        .withColumn("bkt", Versioned.bktCol(Seq("id"), numBuckets))
       // 6. affected buckets are rewritten WHOLE into the staged append
       //    directory (a bucket's live content must stay in one place):
       //    carry their untouched co-resident rows through unchanged.
@@ -258,8 +267,16 @@ object ClusterLedger {
       (touched.select("id", "cluster_id", "bkt", "__src").unionByName(carried),
         Seq(endLab, remap))
     }
-    def releaseAllMine(): Unit = (e +: extraCks).foreach(Checkpoints.release)
+    // release only THIS append's checkpoints, on every exit — a
+    // caller's own eager frames stay alive
+    try commitAppend(path, existing, numBuckets, startedMs, out)
+    finally (e +: extraCks).foreach(Checkpoints.release)
+  }
 
+  /** Stage `out` (the rewritten buckets' rows, with `__src` provenance)
+    * and commit it as the next append. */
+  private def commitAppend(path: String, existing: Option[Manifest], numBuckets: Int,
+      startedMs: Long, out: DataFrame): AppendStats = {
     // stage the write FIRST and read the append stats + the
     // rewritten-bucket set off the SAME pass as observed metrics
     // (guide §1.4: don't pay a second action for numbers the write
@@ -290,86 +307,62 @@ object ClusterLedger {
       relabeled = Option(metrics("rel")).map(_.asInstanceOf[Long]).getOrElse(0L),
       newIds = Option(metrics("neu")).map(_.asInstanceOf[Long]).getOrElse(0L),
       rewrittenBuckets = rewritten)
-    if (rewritten.nonEmpty) {
-      // commit the staged NONCE-suffixed private dir (concurrent
-      // attempts must never clobber each other) in four steps:
-      // optimistic single-writer check, atomic slot CLAIM
-      // (O_CREAT|O_EXCL lock file — closes the residual
-      // check-then-rename window to a pathological-pause sliver; see
-      // Versioned.claimAndRename's protocol note), rename into the
-      // a%05d slot, atomic manifest swap. Readers switch from the old
-      // consistent labeling to the new one instantly.
-      def refuse(nowAppends: Int): Nothing = {
-        rmTree(staging)
-        releaseAllMine()
-        throw new graft.sources.ConcurrentWriteException(
-          s"concurrent append detected on cluster ledger $path: committed " +
-            s"append count moved ${idx - 1} -> $nowAppends (or another writer holds " +
-            f"the a$idx%05d slot) while this drop staged — the ledger is " +
-            "single-writer; replay the drop against the new state")
-      }
-      // optimistic single-writer check BEFORE the slot is touched: if
-      // another append committed while this one staged, claiming its
-      // slot (or overwriting its manifest) would orphan its buckets —
-      // refuse loudly; the caller replays the drop against the new
-      // state (a semilattice no-op for whatever both drops agreed on)
-      val nowAppends = readManifest(path).map(_.appends).getOrElse(0)
-      if (nowAppends != idx - 1) refuse(nowAppends)
-      // atomic slot claim: exactly one writer owns a%05d. A claim
-      // STRICTLY OLDER than this append's start is a crashed attempt's
-      // leftover (single-writer contract: any prior attempt at this
-      // slot died before the retry began) — stolen with ONE atomic
-      // rename inside CommitSlot (two concurrent stealers can never
-      // both win); fresher = a racing writer mid-commit — refuse
-      // without touching anything.
-      val claim = graft.sources.CommitSlot
-        .acquire(new File(path, f"_claim_a$idx%05d"), startedMs)
-        .getOrElse(refuse(idx - 1))
-      // re-check under the claim: a committed winner releases its claim
-      // only AFTER its manifest swap, so "claim owned ∧ count unmoved"
-      // proves the pre-existing slot dir is a crashed leftover
-      val recheck = readManifest(path).map(_.appends).getOrElse(0)
-      if (recheck != idx - 1) { claim.release(); refuse(recheck) }
-      val slot = appendDir(path, idx)
-      // last-instant ownership re-verify before anything destructive: a
-      // stolen claim means another writer judged this one crashed — the
-      // pre-existing slot may be ITS committed data now
-      if (!claim.owned()) refuse(idx - 1)
-      if (slot.exists()) rmTree(slot)
-      if (!claim.owned()) refuse(idx - 1)
-      require(staging.renameTo(slot), s"append rename failed: $staging -> $slot")
+    if (rewritten.isEmpty) rmTree(staging) // pure-replay no-op: nothing rewritten
+    else {
+      // commit the staged NONCE-suffixed private dir into the a%05d
+      // slot ([[CommitSlot.commit]]), then swap the manifest: readers
+      // switch from the old consistent labeling to the new one
+      // instantly. A lost race refuses; the caller replays the drop
+      // against the new state (a semilattice no-op for whatever both
+      // drops agreed on)
+      val claim = commitSlot(path, idx, startedMs, staging, now =>
+        s"concurrent append detected on cluster ledger $path: committed " +
+          s"append count moved ${idx - 1} -> $now (or another writer holds " +
+          f"the a$idx%05d slot) while this drop staged — the ledger is " +
+          "single-writer; replay the drop against the new state")
       val oldOwner = existing.map(_.owner).getOrElse(Vector.fill(numBuckets)(0))
       val owner = rewritten.foldLeft(oldOwner)((o, bkt) => o.updated(bkt, idx))
-      writeManifest(path, Manifest(numBuckets, idx, owner))
+      writeManifest(path, Manifest(numBuckets, idx, owner, Some(labelSchemaOf(out))))
       claim.release()
-    } else rmTree(staging) // pure-replay no-op: nothing rewritten
-    // release only THIS append's checkpoints — a caller's own eager
-    // frames stay alive
-    releaseAllMine()
+    }
     stats
   }
+
+  /** [[CommitSlot.commit]] of `staging` into append slot `idx`, against
+    * the committed append count this writer started from. */
+  private def commitSlot(path: String, idx: Int, startedMs: Long, staging: File,
+      refusal: Int => String): CommitSlot.Claim =
+    CommitSlot.commit(new File(path, f"_claim_a$idx%05d"), startedMs, staging,
+      appendDir(path, idx), "ledger", () => readManifest(path).map(_.appends).getOrElse(0),
+      idx - 1, refusal)
 
   /** Point lookup: ONE id's cluster label — the serving-path read.
     * The id hashes to its bucket under the ledger's fixed layout, and
     * the scan touches ONLY that bucket's partition inside its one
     * owning append directory (the [[graft.sources.Versioned.lookup]]
     * shape: at 100 TB a "which cluster is this doc in" fetch reads
-    * one bucket's files, never the label table). The bucket id is
-    * evaluated through Spark so the reader and the writers share ONE
-    * hash code path. Missing ids return an empty frame. */
+    * one bucket's files, never the label table). The bucket id comes
+    * from [[graft.sources.Versioned.bktOf]] — the writers' hash,
+    * evaluated on the driver with zero jobs. Missing ids return an
+    * empty frame. */
   def lookup(spark: SparkSession, path: String, idValue: Any): DataFrame = {
     val m = readManifest(path).getOrElse(sys.error(s"no cluster ledger at $path"))
-    val bkt = spark.range(1)
-      .select(pmod(xxhash64(lit(idValue).cast("string")), lit(m.numBuckets)).cast("int"))
-      .head().getInt(0)
+    val bkt = Versioned.bktOf(spark, Seq(idValue), m.numBuckets)
     val ownerIdx = m.owner(bkt)
-    if (ownerIdx == 0) // bucket never written: id unseen
-      labels(spark, path).filter(lit(false))
-    else
-      spark.read.parquet(appendDir(path, ownerIdx).getPath)
-        .filter(col("bkt") === bkt && col("id") === lit(idValue))
-        .select("id", "cluster_id")
+    m.labelSchema match {
+      case Some(schema) if ownerIdx == 0 => // bucket never written: id unseen
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      case None if ownerIdx == 0 => labels(spark, path).filter(lit(false))
+      case recorded =>
+        // the recorded schema plans the scan with no footer-read job
+        recorded.fold(spark.read)(t => spark.read.schema(t.add("bkt", IntegerType)))
+          .parquet(appendDir(path, ownerIdx).getPath)
+          .filter(col("bkt") === bkt && col("id") === lit(idValue))
+          .select("id", "cluster_id")
+    }
   }
+
+  private def labelSchemaOf(df: DataFrame): StructType = df.select("id", "cluster_id").schema
 
   /** Consolidate the ledger: rewrite the ENTIRE live labeling into one
     * new append directory owning every non-empty bucket — a long
@@ -380,7 +373,7 @@ object ClusterLedger {
     * the whole chain. Content is untouched (bit-equal read,
     * spec-pinned) — the maintenance pass between the nightly appends,
     * exactly [[graft.sources.Versioned.compact]] on the ledger side.
-    * Commits under the same claim discipline as [[append]].
+    * Commits through the same [[CommitSlot.commit]] as [[append]].
     *
     * `newBuckets` additionally EVOLVES the bucket count — the
     * ledger's rebucket (the same rewrite under a new layout contract:
@@ -396,7 +389,7 @@ object ClusterLedger {
     val cur = Checkpoints.eager(
       if (nb == m.numBuckets) assembled
       else assembled.drop("bkt")
-        .withColumn("bkt", pmod(xxhash64(col("id").cast("string")), lit(nb)).cast("int")))
+        .withColumn("bkt", Versioned.bktCol(Seq("id"), nb)))
     try {
       val idx = m.appends + 1
       val staging = new File(path, f"a$idx%05d_tmp${System.nanoTime()}")
@@ -408,27 +401,12 @@ object ClusterLedger {
       val stagedBkts: Set[Int] = Option(staging.listFiles()).toSeq.flatten
         .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
         .map(_.getName.stripPrefix("bkt=").toInt).toSet
-      def refuse(now: Int): Nothing = {
-        rmTree(staging)
-        throw new graft.sources.ConcurrentWriteException(
-          s"concurrent append detected on cluster ledger $path: committed append " +
-            s"count moved ${idx - 1} -> $now while this compaction staged — " +
-            "the ledger is single-writer; re-run against the new state")
-      }
-      val now = readManifest(path).map(_.appends).getOrElse(0)
-      if (now != idx - 1) refuse(now)
-      val claim = graft.sources.CommitSlot
-        .acquire(new File(path, f"_claim_a$idx%05d"), startedMs)
-        .getOrElse(refuse(idx - 1))
-      val recheck = readManifest(path).map(_.appends).getOrElse(0)
-      if (recheck != idx - 1) { claim.release(); refuse(recheck) }
-      val slot = appendDir(path, idx)
-      if (!claim.owned()) refuse(idx - 1) // stolen mid-stall: slot may be live data
-      if (slot.exists()) rmTree(slot)
-      if (!claim.owned()) refuse(idx - 1)
-      require(staging.renameTo(slot), s"compact rename failed: $staging -> $slot")
+      val claim = commitSlot(path, idx, startedMs, staging, now =>
+        s"concurrent append detected on cluster ledger $path: committed append " +
+          s"count moved ${idx - 1} -> $now while this compaction staged — " +
+          "the ledger is single-writer; re-run against the new state")
       val owner = Vector.tabulate(nb)(b => if (stagedBkts(b)) idx else 0)
-      writeManifest(path, Manifest(nb, idx, owner))
+      writeManifest(path, Manifest(nb, idx, owner, Some(labelSchemaOf(cur))))
       claim.release()
       AppendStats(relabeled = 0L, newIds = 0L,
         rewrittenBuckets = stagedBkts.toSeq.sorted)
@@ -445,17 +423,7 @@ object ClusterLedger {
     * non-race failures propagate immediately. */
   def appendRetry(path: String, pairs: DataFrame, a: String, b: String,
       numBuckets: Int = 64, attempts: Int = 5, backoffMs: Long = 500L): AppendStats = {
-    require(attempts >= 1)
-    var last: graft.sources.ConcurrentWriteException = null
-    for (attempt <- 1 to attempts) {
-      try return append(path, pairs, a, b, numBuckets)
-      catch {
-        case e: graft.sources.ConcurrentWriteException =>
-          last = e
-          if (attempt < attempts) Thread.sleep(backoffMs * attempt)
-      }
-    }
-    throw last
+    CommitSlot.retrying(attempts, backoffMs)(_ => append(path, pairs, a, b, numBuckets))
   }
 
   /** GC append directories no longer referenced by the owner map
@@ -489,8 +457,4 @@ object ClusterLedger {
     doomed.map(_.getName).toSeq.sorted
   }
 
-  private def rmTree(f: File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete()
-  }
 }

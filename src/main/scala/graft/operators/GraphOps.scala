@@ -31,55 +31,8 @@ object GraphOps {
     * and stays partitioned by src throughout; rank/degree relations
     * are node-sized.
     */
-  def pageRank(edges: DataFrame, iters: Int, scale: Long = 1000000000000L): DataFrame = {
-    require(iters >= 0)
-    val e = Checkpoints.eager(edges.select(col("src"), col("dst")).distinct())
-    // claimed on id (one extra NODE-sized exchange, paid once): the
-    // per-round left join back to the node list re-uses this layout
-    // instead of re-exchanging the node list every round (guide §2.4);
-    // the node count rides the checkpoint's own materializing job
-    val (nodes, n) = Checkpoints.eagerCount(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")), Seq("id"))
-    require(n > 0, "graph has no nodes")
-    val base = scale / n              // floor — mirrors integer // in the oracle
-    val tele = (15L * base) / 100L
-    // loop-invariant: each edge annotated with its source's out-degree
-    // once, so iterations only join the rank relation and aggregate.
-    // The degree rides a window over the src-clustered edges — the
-    // explicit repartition is the ONLY exchange of this build (it
-    // satisfies the window's clustering, replacing both the old
-    // degree-aggregate exchange and the join back), and the claim
-    // carries hash(src) through the checkpoint so no per-round join
-    // ever re-exchanges the edge relation (guide §2.4)
-    val ed = Checkpoints.eager(
-      e.repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
-        .withColumn("d", count(lit(1)).over(Window.partitionBy("src"))),
-      Seq("src"))
-    Checkpoints.release(e) // nodes and ed are materialized; e backs nothing further
-
-    var pr = nodes.withColumn("pr", lit(base))
-    var prCkpt: DataFrame = null
-    for (i <- 1 to iters) {
-      val contrib = ed
-        .join(pr.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("pr div d").as("c"))
-        .groupBy("id").agg(sum("c").as("s"))
-      pr = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(tele) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("pr"))
-      // no convergence check reads pr mid-loop, so iterations stack
-      // into one plan (depth is linear in iters) and run as a single
-      // job; cut lineage only every few rounds to keep deep iteration
-      // counts plannable without forcing a materialization per round
-      if (i % 4 == 0 && i < iters) {
-        pr = Checkpoints.eager(pr)
-        if (prCkpt != null) Checkpoints.release(prCkpt) // superseded cut
-        prCkpt = pr
-      }
-    }
-    pr
-  }
+  def pageRank(edges: DataFrame, iters: Int, scale: Long = 1000000000000L): DataFrame =
+    rank(edges, None, iters, scale)
 
   /** Personalized PageRank / TrustRank (Gyöngyi, Garcia-Molina &
     * Pedersen 2004): the teleport mass lands ONLY on a trusted seed
@@ -95,25 +48,44 @@ object GraphOps {
     * flag rides the node list (one extra node-sized left join at
     * build time, nothing per-iteration). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-      scale: Long = 1000000000000L): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame =
+    rank(edges, Some(seeds), iters, scale)
+
+  /** The one rank loop. Every node carries a `seed` flag — 1 for all
+    * nodes without `seeds` (plain PageRank: seed·tele = tele, and the
+    * flag sum is the node count), 1 on the seeds otherwise — and the
+    * initial mass scale/Σseed and teleport (15·base) div 100 land on
+    * seed·mass, so both variants replay their oracle chains exactly. */
+  private def rank(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
+      scale: Long): DataFrame = {
     require(iters >= 0)
-    val e = Checkpoints.eager(edges.select(col("src"), col("dst")).distinct())
-    val nodes0 = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-    // claimed on id / src for the same per-round reuse as [[pageRank]];
-    // the seed mass rides the checkpoint's own materializing job
-    val (nodes, ns) = Checkpoints.eagerSum(
-      nodes0.join(seeds.select(col("id")).distinct().withColumn("__s", lit(1L)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed"))
-        .repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("id")),
-      "seed", Seq("id"))
-    require(ns > 0, "no seed appears in the graph")
-    val base = scale / ns
-    val tele = (15L * base) / 100L
+    val n = edges.sparkSession.sessionState.conf.numShufflePartitions
+    // loop-invariant: each distinct edge annotated with its source's
+    // out-degree once, so iterations only join the rank relation and
+    // aggregate. The repartition below the dedup is the ONLY exchange
+    // of this build (khopReach's shape): it satisfies both the
+    // distinct's and the degree window's clustering, and the claim
+    // carries hash(src) through the checkpoint so no per-round join
+    // ever re-exchanges the edge relation (guide §2.4)
     val ed = Checkpoints.eager(
-      e.repartition(e.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
+      edges.select(col("src"), col("dst")).repartition(n, col("src")).distinct()
         .withColumn("d", count(lit(1)).over(Window.partitionBy("src"))),
       Seq("src"))
-    Checkpoints.release(e)
+    val ids = ed.select(col("src").as("id")).union(ed.select(col("dst").as("id"))).distinct()
+    val flagged = seeds match {
+      case None => ids.withColumn("seed", lit(1L))
+      case Some(s) =>
+        ids.join(s.select(col("id")).distinct().withColumn("__s", lit(1L)), Seq("id"), "left")
+          .select(col("id"), coalesce(col("__s"), lit(0L)).as("seed"))
+    }
+    // claimed on id (one extra NODE-sized exchange, paid once): the
+    // per-round left join back to the node list re-uses this layout
+    // instead of re-exchanging the node list every round; the seed
+    // mass rides the checkpoint's own materializing job
+    val (nodes, mass) = Checkpoints.eagerSum(flagged.repartition(n, col("id")), "seed", Seq("id"))
+    require(mass > 0, if (seeds.isEmpty) "graph has no nodes" else "no seed appears in the graph")
+    val base = scale / mass           // floor — mirrors integer // in the oracle
+    val tele = (15L * base) / 100L
 
     var pr = nodes.select(col("id"), (col("seed") * base).as("pr"))
     var prCkpt: DataFrame = null
@@ -125,9 +97,13 @@ object GraphOps {
       pr = nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (col("seed") * tele + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("pr"))
+      // no convergence check reads pr mid-loop, so iterations stack
+      // into one plan (depth is linear in iters) and run as a single
+      // job; cut lineage only every few rounds to keep deep iteration
+      // counts plannable without forcing a materialization per round
       if (i % 4 == 0 && i < iters) {
         pr = Checkpoints.eager(pr)
-        if (prCkpt != null) Checkpoints.release(prCkpt)
+        if (prCkpt != null) Checkpoints.release(prCkpt) // superseded cut
         prCkpt = pr
       }
     }

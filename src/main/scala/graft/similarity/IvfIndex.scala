@@ -89,13 +89,6 @@ object IvfIndex {
   def centroids(spark: SparkSession, table: String): DataFrame =
     spark.table(centsTable(table, liveGen(spark, table)))
 
-  // test seam: a simulated crash BETWEEN the next generation's tables
-  // being written and the pointer swap (IvfIndexSpec's torn-commit
-  // test drives it; production never sets it)
-  private[graft] var failBeforeSwap: Boolean = false
-  private def maybeCrashBeforeSwap(): Unit =
-    if (failBeforeSwap) sys.error("simulated crash before ivf pointer swap")
-
   /** Train the coarse quantizer on the corpus, assign every vector,
     * persist centroids + bucketed inverted lists, commit with the
     * pointer swap. `corpus` must be in [[Similarity.prepareQuantized]]
@@ -134,7 +127,7 @@ object IvfIndex {
     }
     graft.operators.Checkpoints.release(cents)
     writeMeta(spark, table, gen) // build-time drift baseline
-    maybeCrashBeforeSwap()
+    graft.sources.CommitSlot.at("ivf.before-swap") // fault point: tables written, not swapped
     swapPointer(spark, table, gen)
   }
 
@@ -296,7 +289,7 @@ object IvfIndex {
     nextCents.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(centsTable(table, nextGen))
     writeMeta(spark, table, nextGen)
-    maybeCrashBeforeSwap()
+    graft.sources.CommitSlot.at("ivf.before-swap") // fault point: tables written, not swapped
     swapPointer(spark, table, nextGen)
     val stats = RebalanceStats(nOver, newCellCount,
       spark.table(cellsTable(table))

@@ -2,38 +2,51 @@ package graft.sources
 
 import java.io.File
 
-/** Nonce-verified commit-slot claims — the shared locking primitive
-  * behind [[Versioned]]'s and [[graft.dedup.ClusterLedger]]'s publish
-  * steps (and the index family's compaction).
+/** The single-writer commit protocol behind every publish of
+  * [[Versioned]] and [[graft.dedup.ClusterLedger]] (and the claim
+  * under the index family's compaction, [[TableCompact]]).
   *
-  * The first-generation claim (`createNewFile` + bare `delete`/
-  * `createNewFile` steal) had a non-atomic steal: two retrying writers
-  * that both observed a crashed claim could interleave
-  * delete→create→delete→create and BOTH believe they owned the slot —
-  * the loser's cleanup could then delete the winner's just-renamed
-  * data. This claim closes that:
+  * A writer resolves the live pointer, stages its new version into a
+  * private nonce-suffixed directory, audits it, and then calls
+  * [[commit]], which moves the staging directory into the version slot
+  * in five steps:
   *
-  *  - the claim file's CONTENT is the owner's nonce; ownership is a
-  *    property you can re-verify at any time ([[Claim.owned]]), not a
-  *    one-shot create result;
-  *  - a steal is ONE atomic rename of the stale claim to a
-  *    nonce-suffixed graveyard name — of N concurrent stealers exactly
-  *    one wins the rename; the losers observe the failure and refuse;
-  *  - acquisition ends with a content read-back: a writer whose claim
-  *    was stolen between its write and the read-back sees a foreign
-  *    nonce and refuses before touching the slot;
-  *  - callers re-verify [[Claim.owned]] immediately before every
-  *    destructive step under the claim (the pre-rename target reclaim,
-  *    the rename itself) — a stall long enough for another writer to
-  *    judge this one crashed is detected at the last possible instant
-  *    instead of silently deleting the usurper's committed data.
+  *  1. optimistic check — refuse if the live pointer moved while this
+  *     writer staged (renaming over the newer publish would orphan its
+  *     committed data);
+  *  2. atomic slot claim ([[acquire]]) — exactly one writer owns a
+  *     version slot; a claim clearly older than this publish's start
+  *     (a crashed attempt's leftover under the single-writer contract)
+  *     is stolen, a fresher one is a racing writer mid-commit: refuse;
+  *  3. re-check under the claim — a winner releases its claim only
+  *     AFTER its pointer swap, so "claim owned ∧ pointer unmoved" means
+  *     no other writer can have renamed into this slot;
+  *  4. ownership re-verify ([[Claim.owned]]) immediately before the
+  *     reclaim of a crashed claimant's leftover target and again before
+  *     the rename — a writer whose claim was stolen mid-stall refuses
+  *     instead of deleting the usurper's just-committed data;
+  *  5. rename staging → target.
   *
-  * Staleness is still mtime-based (`lastModified < startedMs` — the
-  * claim predates the would-be stealer's whole publish), so the
-  * residual window is a writer that stalls longer than a retry's full
-  * stage+audit between its OWN ownership re-verify and the very next
-  * filesystem op — narrowed from the whole claim-to-commit span to
-  * one instruction boundary. On object stores without atomic
+  * The caller then swaps its pointer and releases the claim. On any
+  * conflict the staging directory is removed and
+  * [[ConcurrentWriteException]] is thrown; [[retrying]] replays a
+  * publish that lost the race.
+  *
+  * Claims are nonce-verified: the claim file's CONTENT is the owner's
+  * nonce, so ownership can be re-verified at any time; a steal is ONE
+  * atomic rename of the stale claim to a nonce-suffixed graveyard name
+  * (of N concurrent stealers exactly one wins the rename); acquisition
+  * ends with a content read-back, so a writer whose claim was stolen
+  * between its write and the read-back refuses before touching the
+  * slot. (A bare delete-then-create steal would let two retrying
+  * writers interleave delete→create→delete→create and BOTH believe
+  * they owned the slot.)
+  *
+  * Staleness is mtime-based (`lastModified < startedMs` minus a slack),
+  * so the residual window is a writer that stalls longer than a
+  * retry's whole stage+audit between its last ownership re-verify and
+  * the very next filesystem op — one instruction boundary, not the
+  * claim-to-commit span. On object stores without atomic
   * create/rename, point commits at a consistent metadata service
   * (every manifest-based table format's caveat).
   *
@@ -96,5 +109,68 @@ object CommitSlot {
         }
       } else None
     } catch { case _: java.io.IOException => None }
+  }
+
+  /** Fault seam: called at named points of every publish and
+    * compaction (`versioned.staged`, `ledger.claimed`,
+    * `compact.swapped`, `ivf.before-swap`, …) so a test can crash a
+    * writer there, or hold it until a racing writer arrives. Production
+    * never sets it. */
+  @volatile private[graft] var hook: String => Unit = _ => ()
+
+  private[graft] def at(point: String): Unit = hook(point)
+
+  /** Move `staging` into the version slot `target` under the claim
+    * `claimFile` — steps 1–5 of the protocol above. `readLive` reads
+    * the live pointer and `startedFrom` is the value this writer
+    * resolved before staging; `refusal` renders the conflict message
+    * from the pointer value observed. Fault points: `<seam>.commit`
+    * before the optimistic check, `<seam>.claimed` after the re-check.
+    * Returns the held claim: the caller swaps its pointer, then
+    * releases it. */
+  def commit[P](claimFile: File, startedMs: Long, staging: File, target: File, seam: String,
+      readLive: () => P, startedFrom: P, refusal: P => String): Claim = {
+    def refuse(now: P): Nothing = {
+      rmTree(staging)
+      throw new ConcurrentWriteException(refusal(now))
+    }
+    at(s"$seam.commit")
+    val now1 = readLive()
+    if (now1 != startedFrom) refuse(now1)
+    val claim = acquire(claimFile, startedMs).getOrElse(refuse(startedFrom))
+    val now2 = readLive()
+    if (now2 != startedFrom) { claim.release(); refuse(now2) }
+    at(s"$seam.claimed")
+    if (!claim.owned()) refuse(startedFrom)
+    if (target.exists()) rmTree(target) // crashed claimant's rename leftover
+    if (!claim.owned()) refuse(startedFrom)
+    if (!staging.renameTo(target)) {
+      claim.release()
+      rmTree(staging)
+      sys.error(s"commit rename failed: $staging -> $target")
+    }
+    claim
+  }
+
+  /** Run `body(attempt)` for attempt = 1, 2, … until it returns,
+    * replaying only a lost race ([[ConcurrentWriteException]]) with
+    * linear backoff (`backoffMs × attempt`); any other failure
+    * propagates at once, and after `attempts` conflicts the last one
+    * is rethrown. */
+  def retrying[A](attempts: Int, backoffMs: Long)(body: Int => A): A = {
+    require(attempts >= 1, s"attempts must be >= 1, got $attempts")
+    def run(attempt: Int): A =
+      try body(attempt)
+      catch {
+        case _: ConcurrentWriteException if attempt < attempts =>
+          Thread.sleep(backoffMs * attempt)
+          run(attempt + 1)
+      }
+    run(1)
+  }
+
+  private[graft] def rmTree(f: File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmTree)
+    f.delete()
   }
 }

@@ -63,21 +63,6 @@ object TableCompact {
       partitionsBefore: Int, partitionsAfter: Int,
       filesBefore: Int, filesAfter: Int)
 
-  // test seam for crash-point specs/fuzz: a simulated kill around the
-  // commit (one-shot — consumed on fire). Production never sets it.
-  // 'staged' fires between the staging write and the commit; 'swapped'
-  // fires right after the commit (for a legacy upgrade: between its
-  // DROP TABLE and CREATE VIEW — the one-time window).
-  private[graft] var crashPoint: Option[String] = None
-  // test seam: runs between the staging write and the file-census
-  // re-check, so a spec can interleave a concurrent append/overwrite
-  private[graft] var midStageHook: () => Unit = () => ()
-  private def maybeCrash(point: String): Unit =
-    if (crashPoint.contains(point)) {
-      crashPoint = None
-      sys.error(s"simulated crash at compact point '$point'")
-    }
-
   private def claimFile(spark: SparkSession, table: String): java.io.File = {
     val (db, bare) = table.lastIndexOf('.') match {
       case -1 => (spark.catalog.currentDatabase, table)
@@ -230,8 +215,9 @@ object TableCompact {
       // drop ids (commas, spaces) round-trip exactly.
       spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES " +
         s"('graft.consumed_drops_v2' = '${LiveTable.renderConsumed(fps0)}')")
-      maybeCrash("staged")
-      midStageHook()
+      // fault point between the staging write and the file-census
+      // re-check (a crash, or a concurrent append/overwrite)
+      CommitSlot.at("compact.staged")
       // an append that committed while we staged — a NEW partition or
       // an overwrite of an existing one (fresh part-file names either
       // way) — owns rows the staged generation lacks; swapping would
@@ -252,11 +238,11 @@ object TableCompact {
         // one-time upgrade of a pre-view index: the only remaining
         // missing-name window, completed by heal on the retry
         spark.sql(s"DROP TABLE $table")
-        maybeCrash("swapped")
+        CommitSlot.at("compact.swapped") // the one-time legacy window
         LiveTable.swap(spark, table, nextGen)
       } else {
         LiveTable.swap(spark, table, nextGen) // THE commit — one atomic op
-        maybeCrash("swapped") // after this point the compaction has landed
+        CommitSlot.at("compact.swapped") // after this point the compaction has landed
       }
       val filesAfter = dataFiles(spark, staging)
       CompactStats(rows, before - rows, parts0.size, partitions(spark, staging).size,

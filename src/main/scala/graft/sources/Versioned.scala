@@ -64,6 +64,7 @@ final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
   * directory becomes the version directory with one directory-level
   * rename, so publish cost is O(1) regardless of corpus size. */
 object Versioned {
+  import CommitSlot.rmTree
 
   /** The live pointer: monotonically increasing version, its
     * directory (relative to the root), and the directory it
@@ -218,16 +219,6 @@ object Versioned {
         .sortBy(_.version).toSeq
   }
 
-  // test seam for the warehouse_crash fuzz family and crash specs: a
-  // simulated kill at a named point of the publish sequence (one-shot —
-  // consumed on fire so the retry completes). Production never sets it.
-  private[graft] var crashPoint: Option[String] = None
-  private def maybeCrash(point: String): Unit =
-    if (crashPoint.contains(point)) {
-      crashPoint = None
-      sys.error(s"simulated crash at publish point '$point'")
-    }
-
   /** Atomic pointer swap: write beside, rename over. Also records the
     * version's immutable `_v%05d.json` chain entry, stamped with the
     * publish wall-clock ([[readAsOf]]'s axis). The stamp is clamped to
@@ -248,7 +239,7 @@ object Versioned {
     // is overwritten by the next publish of that version number
     java.nio.file.Files.write(versionFile(root, m.version).toPath,
       render(m).getBytes("UTF-8"))
-    maybeCrash("chain")
+    CommitSlot.at("versioned.chain")
     val tmp = new File(root, s"_manifest.json.tmp${System.nanoTime()}")
     java.nio.file.Files.write(tmp.toPath, render(m).getBytes("UTF-8"))
     java.nio.file.Files.move(tmp.toPath, manifestFile(root).toPath,
@@ -623,7 +614,10 @@ object Versioned {
       .filter(col("__rn") === 1).drop("__rn", "__layer")
   }
 
-  private def bktCol(keys: Seq[String], numBuckets: Int) =
+  /** The bucket id column of a key tuple under the layout contract —
+    * the one bucket hash every bucket store writes with (Versioned's
+    * tables and [[graft.dedup.ClusterLedger]]'s labels). */
+  private[graft] def bktCol(keys: Seq[String], numBuckets: Int): Column =
     pmod(xxhash64(keys.map(k => col(k).cast("string")): _*), lit(numBuckets)).cast("int")
 
   /** The bucket id of a key TUPLE under the layout contract, computed
@@ -643,7 +637,8 @@ object Versioned {
     }
   }
 
-  private def bktOf(spark: SparkSession, keyValues: Seq[Any], numBuckets: Int): Int = {
+  /** [[bktCol]] of one key tuple, on the driver with zero jobs. */
+  private[graft] def bktOf(spark: SparkSession, keyValues: Seq[Any], numBuckets: Int): Int = {
     val h = keyHash(spark, keyValues)
     (((h % numBuckets) + numBuckets) % numBuckets).toInt
   }
@@ -707,11 +702,6 @@ object Versioned {
       f <- widenedFields(spark, root, spec).find(_.name == c)
     } yield zoneBound(f.dataType)
 
-  private def rmTree(f: File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete()
-  }
-
   /** Stage → audit → publish. Returns the report either way; the
     * manifest moves only on `promoted = true`. */
   def promote(
@@ -724,123 +714,93 @@ object Versioned {
     val startedMs = System.currentTimeMillis()
     val live = currentManifest(root)
     val version = live.map(_.version + 1).getOrElse(1)
-    val dirName = f"v$version%05d"
-    // nonce suffix: concurrent attempts (single-writer violations the
-    // commit guard catches) must never clobber each other's staging;
-    // crashed attempts leave orphans that [[vacuum]] sweeps
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val (dirName, staging) = stagingFor(root, version)
     df.write.mode(SaveMode.Overwrite).parquet(staging.getPath)
     val staged = spark.read.parquet(staging.getPath)
+    val (diffStats, diffReason) = diffGated(spark, root, live, diffGate, staged)
+    val (viol, reason) = audit(checks, staged, diffReason)
+    val promoted = settle(root, live, staging, dirName, startedMs, reason)(
+      Manifest(version, dirName, live.map(_.path)))
+    PromoteReport(promoted, version, dirName, viol, diffStats, reason)
+  }
 
+  /** The version slot's directory name and a fresh staging directory
+    * for it — nonce-suffixed, so concurrent attempts (single-writer
+    * violations the commit refuses) never clobber each other's
+    * staging; crashed attempts leave orphans that [[vacuum]] sweeps. */
+  private def stagingFor(root: String, version: Int): (String, File) = {
+    val dirName = f"v$version%05d"
+    (dirName, new File(root, s"_staging_${dirName}_${System.nanoTime()}"))
+  }
+
+  /** The one publish audit: the [[Validate.Check]] suite over the
+    * staged rows (`validated` is read only when there are checks; every
+    * rule must report 0 violations), then the publish's fat-finger
+    * `gate`. Returns the violations and the refusal reason, if any. */
+  private def audit(checks: Seq[Validate.Check], validated: => DataFrame,
+      gate: Option[String]): (Seq[(String, Long)], Option[String]) = {
     val viol: Seq[(String, Long)] =
       if (checks.isEmpty) Seq.empty
-      else Validate.violations(staged, checks).collect()
+      else Validate.violations(validated, checks).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-
-    val (diffStats, diffReason): (Seq[(String, Long)], Option[String]) =
-      (live, diffGate) match {
-        case (Some(m), Some(g)) =>
-          val liveDf = readManifestData(spark, root, m)
-          val stats = TableDiff.snapshotDiffStats(TableDiff.snapshotDiff(
-            liveDf, staged, col(g.key), col(g.key), col(g.content), col(g.content)))
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-          val byStatus = stats.toMap.withDefaultValue(0L)
-          val liveRows = byStatus("unchanged") + byStatus("changed") + byStatus("removed")
-          val moved = byStatus("changed") + byStatus("removed")
-          val over = liveRows > 0 && moved * 1000L > g.maxChangedPerMille * liveRows
-          (stats, if (over) Some(
-            s"diff gate: $moved of $liveRows live keys changed/removed " +
-              s"(> ${g.maxChangedPerMille} per mille)") else None)
-        case _ => (Seq.empty, None)
-      }
-
-    val reason = firstViolation
+    val reason = viol.find(_._2 > 0)
       .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(diffReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        PromoteReport(promoted = false, version, dirName, viol, diffStats, reason)
-      case None =>
-        val claim = claimAndRename(root, live, staging, dirName, startedMs)
-        writeManifest(root, Manifest(version, dirName, live.map(_.path)))
-        claim.release()
-        PromoteReport(promoted = true, version, dirName, viol, diffStats, None)
-    }
+      .orElse(gate)
+    (viol, reason)
   }
 
-  /** Commit-slot claim: the concurrency discipline between "audit
-    * passed" and "manifest renamed". The table carries a SINGLE-WRITER
-    * contract (the same one every manifest-rename table format carries
-    * without a locking service); this makes violations LOUD instead of
-    * silent, in three steps:
-    *
-    *  1. optimistic check — a publish that started against version N
-    *     refuses to commit if the live pointer moved while it staged
-    *     (renaming its manifest over the newer one would orphan that
-    *     publish's committed data);
-    *  2. atomic slot claim — [[CommitSlot.acquire]] on `_claim_<dir>`:
-    *     exactly one writer can own a version slot, ownership is a
-    *     re-verifiable nonce (not a one-shot create result), and a
-    *     stale claim (strictly older than this publish's start — a
-    *     crashed attempt's leftover under the single-writer contract)
-    *     is stolen with ONE atomic rename, so two concurrent stealers
-    *     can never both believe they own the slot; a fresher claim is
-    *     a racing writer mid-commit — refuse without touching anything;
-    *  3. re-check under the claim — a winner releases its claim only
-    *     AFTER its manifest move, so "claim owned ∧ pointer unmoved"
-    *     means no other writer can have renamed into this slot; and
-    *     ownership is RE-VERIFIED immediately before the target
-    *     reclaim and the rename, so a writer whose claim was stolen
-    *     mid-stall refuses instead of deleting the usurper's
-    *     just-committed data.
-    *
-    * Residual window: a writer that stalls between its last ownership
-    * re-verify and the very next filesystem op, for longer than a
-    * retry's whole stage+audit (a multi-second GC pause at exactly
-    * the wrong instruction) — narrowed from the whole claim-to-commit
-    * span. On object stores without atomic create/rename, point the
-    * manifest at a consistent metadata service (every manifest-based
-    * table format's caveat).
-    *
-    * On success the staging directory has been renamed into
-    * `dirName` and the returned claim is held: the caller writes
-    * the manifest, then releases the claim. On conflict the staging
-    * directory is removed and [[ConcurrentWriteException]] is thrown. */
-  private def claimAndRename(root: String, startedAt: Option[Manifest], staging: File,
-      dirName: String, startedMs: Long): CommitSlot.Claim = {
-    def refuse(now: Option[Int]): Nothing = {
-      rmTree(staging)
-      throw new ConcurrentWriteException(
-        s"concurrent publish detected under $root: live version moved " +
-          s"${startedAt.map(_.version).getOrElse("none")} -> ${now.getOrElse("none")} " +
-          s"(or another writer holds the $dirName commit slot) while this publish " +
-          "staged — the table is single-writer; retry against the new live version")
+  /** The whole-table publishes' gate: the [[DiffGate]] of the staged
+    * rows against the live version — (status counts, refusal). */
+  private def diffGated(spark: SparkSession, root: String, live: Option[Manifest],
+      diffGate: Option[DiffGate], staged: DataFrame): (Seq[(String, Long)], Option[String]) =
+    (live, diffGate) match {
+      case (Some(m), Some(g)) =>
+        val liveDf = readManifestData(spark, root, m)
+        val stats = TableDiff.snapshotDiffStats(TableDiff.snapshotDiff(
+          liveDf, staged, col(g.key), col(g.key), col(g.content), col(g.content)))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        val byStatus = stats.toMap.withDefaultValue(0L)
+        val liveRows = byStatus("unchanged") + byStatus("changed") + byStatus("removed")
+        val moved = byStatus("changed") + byStatus("removed")
+        val over = liveRows > 0 && moved * 1000L > g.maxChangedPerMille * liveRows
+        (stats, if (over) Some(
+          s"diff gate: $moved of $liveRows live keys changed/removed " +
+            s"(> ${g.maxChangedPerMille} per mille)") else None)
+      case _ => (Seq.empty, None)
     }
-    val startVersion = startedAt.map(_.version)
-    val now1 = currentManifest(root).map(_.version)
-    if (now1 != startVersion) refuse(now1)
-    val claim = CommitSlot.acquire(new File(root, s"_claim_$dirName"), startedMs)
-      .getOrElse(refuse(startVersion))
-    val now2 = currentManifest(root).map(_.version)
-    if (now2 != startVersion) { claim.release(); refuse(now2) }
-    maybeCrash("claimed")
-    val target = new File(root, dirName)
-    // last-instant ownership re-verify: a stolen claim means another
-    // writer judged this one crashed — the pre-existing target may be
-    // ITS committed data now, so refuse rather than reclaim it
-    if (!claim.owned()) refuse(startVersion)
-    if (target.exists()) rmTree(target) // crashed claimant's rename leftover
-    if (!claim.owned()) refuse(startVersion)
-    if (!staging.renameTo(target)) {
+
+  /** The drop publishes' O(1) gate: refuse when the drop's updates +
+    * deletes of existing keys exceed `maxChangedPerMille` of the
+    * manifest's live row count. */
+  private def changedGate(maxChangedPerMille: Option[Long], movedKeys: Long,
+      liveRows: Long): Option[String] =
+    maxChangedPerMille.collect {
+      case pm if liveRows > 0 && movedKeys * 1000L > pm * liveRows =>
+        s"merge gate: $movedKeys of $liveRows live keys changed/removed (> $pm per mille)"
+    }
+
+  /** Settle an audited publish: a refusal removes the staging
+    * directory; otherwise [[CommitSlot.commit]] moves it into the
+    * `dirName` slot, and the manifest swaps to `next` (evaluated after
+    * the rename) before the claim is released. A lost race throws
+    * [[ConcurrentWriteException]]. Returns whether it committed. */
+  private def settle(root: String, startedAt: Option[Manifest], staging: File, dirName: String,
+      startedMs: Long, reason: Option[String])(next: => Manifest): Boolean =
+    if (reason.isDefined) { rmTree(staging); false }
+    else {
+      val from = startedAt.map(_.version)
+      val claim = CommitSlot.commit(new File(root, s"_claim_$dirName"), startedMs, staging,
+        new File(root, dirName), "versioned", () => currentManifest(root).map(_.version), from,
+        (now: Option[Int]) =>
+          s"concurrent publish detected under $root: live version moved " +
+            s"${from.getOrElse("none")} -> ${now.getOrElse("none")} " +
+            s"(or another writer holds the $dirName commit slot) while this publish " +
+            "staged — the table is single-writer; retry against the new live version")
+      CommitSlot.at("versioned.renamed")
+      writeManifest(root, next)
       claim.release()
-      rmTree(staging)
-      sys.error(s"publish rename failed: $staging -> $target")
+      true
     }
-    claim
-  }
 
   /** [[merge]] outcome. `upserted`/`inserted`/`deleted` count drop
     * keys that updated an existing row / created a new one / removed
@@ -914,8 +874,7 @@ object Versioned {
     val startedMs = System.currentTimeMillis()
     val live = currentManifest(root)
     val version = live.map(_.version + 1).getOrElse(1)
-    val dirName = f"v$version%05d"
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val (dirName, staging) = stagingFor(root, version)
     // Cluster the staging write BY BUCKET before partitionBy when the
     // table carries no zone maps: a partitionBy("bkt") write emits one
     // file per (task, bucket) pair, so an unclustered M-task input
@@ -973,49 +932,16 @@ object Versioned {
     // lazy: .schema is a driver-side footer read; Validate below runs
     // a job only when the caller passed checks
     val staged = spark.read.parquet(staging.getPath)
-
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty) Seq.empty
-      else Validate.violations(staged.drop("bkt"), checks).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-
-    val (diffStats, diffReason): (Seq[(String, Long)], Option[String]) =
-      (live, diffGate) match {
-        case (Some(m), Some(g)) =>
-          val liveDf = readManifestData(spark, root, m)
-          val stats = TableDiff.snapshotDiffStats(TableDiff.snapshotDiff(
-            liveDf, staged, col(g.key), col(g.key), col(g.content), col(g.content)))
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-          val byStatus = stats.toMap.withDefaultValue(0L)
-          val liveRows = byStatus("unchanged") + byStatus("changed") + byStatus("removed")
-          val moved = byStatus("changed") + byStatus("removed")
-          val over = liveRows > 0 && moved * 1000L > g.maxChangedPerMille * liveRows
-          (stats, if (over) Some(
-            s"diff gate: $moved of $liveRows live keys changed/removed " +
-              s"(> ${g.maxChangedPerMille} per mille)") else None)
-        case _ => (Seq.empty, None)
-      }
-
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(diffReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        PromoteReport(promoted = false, version, dirName, viol, diffStats, reason)
-      case None =>
-        val claim = claimAndRename(root, live, staging, dirName, startedMs)
-        // the widened data schema rides in the manifest so serving
-        // reads never pay per-directory footer derivation
-        val schemaB64 = encodeSchema(staged.schema.fields.filter(_.name != "bkt").toSeq)
-        writeManifest(root, Manifest(version, dirName, live.map(_.path),
-          Some(BucketSpec(keys.mkString(","), numBuckets, rows,
-            Vector.fill(numBuckets)(dirName), zoneCols, Some(schemaB64), keyBloomBits))))
-        claim.release()
-        PromoteReport(promoted = true, version, dirName, viol, diffStats, None)
-    }
+    val (diffStats, diffReason) = diffGated(spark, root, live, diffGate, staged)
+    val (viol, reason) = audit(checks, staged.drop("bkt"), diffReason)
+    // the widened data schema rides in the manifest so serving reads
+    // never pay per-directory footer derivation
+    val promoted = settle(root, live, staging, dirName, startedMs, reason)(
+      Manifest(version, dirName, live.map(_.path),
+        Some(BucketSpec(keys.mkString(","), numBuckets, rows, Vector.fill(numBuckets)(dirName),
+          zoneCols, Some(encodeSchema(staged.schema.fields.filter(_.name != "bkt").toSeq)),
+          keyBloomBits))))
+    PromoteReport(promoted, version, dirName, viol, diffStats, reason)
   }
 
   /** Run a publish body with an `eager` that checkpoints and records
@@ -1087,67 +1013,12 @@ object Versioned {
       zoneCluster: Boolean = false): MergeReport = {
     val spark = drop.sparkSession
     val startedMs = System.currentTimeMillis()
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — publish with promoteBucketed before merging"))
+    val (live, spec) = liveBucketed(root, "publish with promoteBucketed before merging")
     val keys = spec.keys
-    keys.foreach(k => require(drop.columns.contains(k),
-      s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
 
     withReleasedCheckpoints { eager =>
-    val d = eager(drop
-      .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
-      .withColumn("bkt", bktCol(keys, spec.numBuckets)))
-    // ONE aggregation job answers all the drop questions (size,
-    // key-uniqueness, upsert count, touched buckets) the previous
-    // code asked with separate actions over the same checkpoint
-    // (guide §1.2: don't recompute what one pass already knows; the
-    // bucket id is a pure function of the key, so first(bkt) per key
-    // group is exact)
-    val keyAgg = d.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("__del"), 0L).otherwise(1L)).as("__u"),
-        first(col("bkt")).as("__b"))
-      .agg(sum(col("__n")), count(lit(1)), sum(col("__u")),
-        collect_set(col("__b")))
-      .collect().head
-    val nDrop = if (keyAgg.isNullAt(0)) 0L else keyAgg.getLong(0)
-    val nDropKeys = keyAgg.getLong(1)
-    val upsertRows = if (keyAgg.isNullAt(2)) 0L else keyAgg.getLong(2)
-    require(nDrop == nDropKeys,
-      s"drop has duplicate '${spec.key}' keys — upsert/delete order within a drop is undefined")
-
-    // the table's live schema: recorded in the manifest by every
-    // publish since the field existed (zero per-call footer reads);
-    // older manifests re-derive the first-seen union of the owning
-    // directories' footers
-    val tableFields = widenedFields(spark, root, spec)
-    // SCHEMA EVOLUTION: columns the drop ADDS widen the table — new
-    // files carry them, older rows read as null (unionEvolved's
-    // by-name discipline applied to the bucket store); columns the
-    // drop is MISSING are still refused (delete-only drops excepted) —
-    // an upsert that silently nulled an existing column would be a
-    // data-loss footgun, not evolution. Columns the `deleted`
-    // expression references are CDC MARKERS, not data — they never
-    // widen the table (resolved against the drop so arbitrary marker
-    // expressions work, not just a bare column)
-    val delRefs: Set[String] =
-      drop.select(deleted.as("__p")).queryExecution.analyzed
-        .expressions.flatMap(_.references.map(_.name)).toSet
-    val dropExtras = d.schema.fields.filter(f =>
-      !tableFields.exists(_.name == f.name) && f.name != "__del" && f.name != "bkt" &&
-        !delRefs.contains(f.name)).toSeq
-    val allFields = tableFields ++ dropExtras
-    // legacy-layout guard, BEFORE any staging I/O: a table published
-    // when doubles/decimals were long-cast into zone bounds would
-    // otherwise fail inside buildZoneMap AFTER the staging write,
-    // stranding an orphan — refuse at entry with the remedy instead
-    for (z <- spec.zones; f <- allFields.find(_.name == z))
-      try zoneBound(f.dataType)
-      catch { case e: RuntimeException => sys.error(
-        s"zone column '$z' of the live layout has unsupported type ${f.dataType.simpleString} " +
-          s"(a pre-r14 publish accepted it; bounds would truncate) — republish with " +
-          s"promoteBucketed and integral/string/date zone columns before merging: ${e.getMessage}") }
+    val Drop(d, nDrop, upsertRows, dropBuckets, allFields, missing) =
+      prepareDrop(drop, root, spec, deleted, "merging", eager)
     val dataCols: Seq[String] = allFields.map(_.name)
 
     // fold pending PATCH layers into this rewrite: the layers' net
@@ -1160,8 +1031,6 @@ object Versioned {
     val net: Option[DataFrame] =
       if (spec.deltas.isEmpty) None
       else Some(eager(netDelta(spark, root, spec, allFields)))
-    def netHint(df: DataFrame): DataFrame =
-      if (spec.deltaRows.sum <= DeltaBroadcastMaxRows) broadcast(df) else df
     val dAll: DataFrame = net match {
       case None => d
       case Some(nd) => eager(d.unionByName(
@@ -1172,7 +1041,7 @@ object Versioned {
     // from the keyAgg pass; with deltas folded in, dAll adds net-delta
     // keys, so their buckets still need the distinct scan
     val touched =
-      if (spec.deltas.isEmpty) keyAgg.getSeq[Int](3).sorted
+      if (spec.deltas.isEmpty) dropBuckets
       else dAll.select("bkt").distinct().collect().map(_.getInt(0)).toSeq.sorted
 
     // reading every owning directory with the WIDENED schema makes the
@@ -1199,11 +1068,6 @@ object Versioned {
     def dkHint(df: DataFrame): DataFrame =
       if (nAll <= maxBroadcastDropKeys) broadcast(df) else df
     val upsertSrc = dAll.filter(!col("__del"))
-    val missing = tableFields.map(_.name).filterNot(c => drop.columns.contains(c))
-    if (missing.nonEmpty)
-      require(d.filter(!col("__del")).isEmpty,
-        s"drop upsert rows are missing table columns: ${missing.mkString(", ")} — " +
-          "a drop may ADD columns (older rows read as null) but must carry every existing one")
     val upserts =
       if (missing.isEmpty || net.isDefined)
         // net layers read in the widened shape, so dAll carries every
@@ -1211,19 +1075,16 @@ object Versioned {
         upsertSrc.select(dataCols.map(col) :+ col("bkt"): _*)
       else
         // delete-only drop, no layers: an empty frame in the table's shape
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(
-            allFields :+ org.apache.spark.sql.types.StructField(
-              "bkt", org.apache.spark.sql.types.IntegerType)))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
     // No-layer fast path: ONE outer join annotates each touched-bucket
     // row with its drop verdict (__hit null = survivor, false =
     // updated, true = deleted), checkpointed once — survivors AND the
     // exact accounting both read the annotation, where the previous
     // shape scanned the touched buckets twice (an anti-join for the
     // rewrite, then a second inner-join job for accounting). With
-    // pending layers (the rarer fold path) the reconciled pre-image
-    // accounting below stays as it was. Guide §1.2/§2.4: one pass,
-    // one join, for what two joins computed.
+    // pending layers (the rarer fold path) the accounting runs against
+    // the reconciled pre-image ([[preImageHits]]). Guide §1.2/§2.4:
+    // one pass, one join, for what two joins computed.
     val annotated: Option[DataFrame] =
       if (net.isEmpty)
         oldRows.map(o => eager(o.join(
@@ -1244,10 +1105,7 @@ object Versioned {
     }
 
     // exact O(drop) accounting for the USER drop against the
-    // RECONCILED pre-image of the touched buckets (base shadowed by
-    // the net layer effect, its live upserts unioned back — a key an
-    // earlier patch inserted counts as an update here, one it deleted
-    // counts as an insert)
+    // RECONCILED pre-image of the touched buckets
     val (upserted, deletedN) = annotated match {
       case Some(a) =>
         val r = a.agg(
@@ -1256,31 +1114,14 @@ object Versioned {
           .collect().head
         (if (r.isNullAt(0)) 0L else r.getLong(0),
           if (r.isNullAt(1)) 0L else r.getLong(1))
-      case None =>
-        val userDKeys = d.select((keys :+ "__del").map(col): _*)
-        val preKeys: Option[DataFrame] = net match {
-          case None => oldRows.map(_.select(keys.map(col): _*))
-          case Some(nd) =>
-            val ndK = nd.select(keys.map(col): _*)
-            val ndUp = nd.filter(!col("__del")).select(keys.map(col): _*)
-            val shadowed = oldRows.map(_.select(keys.map(col): _*)
-              .join(netHint(ndK), keys, "left_anti"))
-            Some(shadowed.map(_.unionByName(ndUp)).getOrElse(ndUp))
-        }
-        preKeys.map(_
-          .join(dkHint(userDKeys), keys, "inner")
-          .agg(
-            sum(when(col("__del"), 0L).otherwise(1L)).as("up"),
-            sum(when(col("__del"), 1L).otherwise(0L)).as("del"))
-          .collect().head).map(r => (Option(r.get(0)).fold(0L)(_ => r.getLong(0)),
-            Option(r.get(1)).fold(0L)(_ => r.getLong(1)))).getOrElse((0L, 0L))
+      case None => preImageHits(spark, root, spec, allFields, touched,
+        net.map(nd => (nd, Some(spec.deltaRows.sum))).toSeq, d, dkHint)
     }
     val inserted = upsertRows - upserted
     val newTotal = spec.rows + inserted - deletedN
 
     val version = live.version + 1
-    val dirName = f"v$version%05d"
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val (dirName, staging) = stagingFor(root, version)
     val stagedEmpty = merged.isEmpty
     if (!stagedEmpty) {
       // zoneCluster: range-cluster survivors ∪ upserts on (bkt,
@@ -1319,55 +1160,148 @@ object Versioned {
       // them — [[lookup]]'s point-probe file skipping
       if (spec.bloomBits > 0) buildKeyBloom(spark, staging.getPath, keys, spec.bloomBits)
     } else staging.mkdirs() // every touched bucket emptied: version dir holds no files
-    maybeCrash("staged")
+    CommitSlot.at("versioned.staged")
 
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty || stagedEmpty) Seq.empty
-      else Validate.violations(spark.read.parquet(staging.getPath).drop("bkt"), checks)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-    val gateReason = maxChangedPerMille.flatMap { pm =>
-      val movedKeys = upserted + deletedN
-      if (spec.rows > 0 && movedKeys * 1000L > pm * spec.rows)
-        Some(s"merge gate: $movedKeys of ${spec.rows} live keys changed/removed (> $pm per mille)")
-      else None
+    val (viol, reason) = audit(if (stagedEmpty) Nil else checks,
+      spark.read.parquet(staging.getPath).drop("bkt"),
+      changedGate(maxChangedPerMille, upserted + deletedN, spec.rows))
+    // the staged bucket set is read from STAGING (pre-rename): a staged
+    // bucket with zero rows writes no partition dir — its owner entry
+    // becomes "" (empty bucket), not the new dir. partitionBy
+    // materializes exactly one bkt=K directory per non-empty bucket, so
+    // the set is a driver-side listing, not a scan of what was written
+    val stagedBkts: Set[Int] = Option(staging.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
+      .map(_.getName.stripPrefix("bkt=").toInt).toSet
+    val owner = touched.foldLeft(spec.owner)((o, b) =>
+      o.updated(b, if (stagedBkts.contains(b)) dirName else ""))
+    // deltas = Nil: this rewrite FOLDED any pending patch layers
+    // (their rows are in the touched buckets' new files now)
+    val committed = settle(root, Some(live), staging, dirName, startedMs, reason)(
+      Manifest(version, dirName, Some(live.path),
+        Some(spec.copy(rows = newTotal, owner = owner,
+          schemaB64 = Some(encodeSchema(allFields)),
+          deltas = Nil, deltaRows = Nil))))
+    MergeReport(committed, version, dirName, upserted, inserted, deletedN,
+      touched, viol, reason)
     }
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(gateReason)
+  }
 
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        MergeReport(merged = false, version, dirName, upserted, inserted, deletedN,
-          touched, viol, reason)
-      case None =>
-        // the staged bucket set is read from STAGING (pre-rename): a
-        // staged bucket with zero rows writes no partition dir — its
-        // owner entry becomes "" (empty bucket), not the new dir.
-        // partitionBy materializes exactly one bkt=K directory per
-        // non-empty bucket, so the set is a driver-side listing — the
-        // previous distinct-scan job re-read everything just written
-        val stagedBkts: Set[Int] =
-          if (stagedEmpty) Set.empty
-          else Option(staging.listFiles()).toSeq.flatten
-            .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
-            .map(_.getName.stripPrefix("bkt=").toInt).toSet
-        val claim = claimAndRename(root, Some(live), staging, dirName, startedMs)
-        maybeCrash("renamed")
-        val owner = touched.foldLeft(spec.owner)((o, b) =>
-          o.updated(b, if (stagedBkts.contains(b)) dirName else ""))
-        // deltas = Nil: this rewrite FOLDED any pending patch layers
-        // (their rows are in the touched buckets' new files now)
-        writeManifest(root, Manifest(version, dirName, Some(live.path),
-          Some(spec.copy(rows = newTotal, owner = owner,
-            schemaB64 = Some(encodeSchema(allFields)),
-            deltas = Nil, deltaRows = Nil))))
-        claim.release()
-        MergeReport(merged = true, version, dirName, upserted, inserted, deletedN,
-          touched, viol, None)
+  /** The live manifest and its bucket layout; refuses, naming `why`,
+    * when the table has no live version or is not bucketed. */
+  private def liveBucketed(root: String, why: String): (Manifest, BucketSpec) = {
+    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
+    (live, live.buckets.getOrElse(sys.error(s"live version under $root is not bucketed — $why")))
+  }
+
+  /** What [[merge]] and [[patch]] know about a drop before staging:
+    * the drop checkpointed with its `__del` marker and `bkt` bucket id,
+    * its row count, upsert rows and touched buckets, the table schema
+    * WIDENED by the drop's added columns, and the table columns the
+    * drop lacks (only a delete-only drop may lack any). */
+  private final case class Drop(d: DataFrame, rows: Long, upsertRows: Long,
+      buckets: Seq[Int], allFields: Seq[StructField], missing: Seq[String])
+
+  /** The drop prologue of [[merge]] and [[patch]] (`verb` names the
+    * publish in the legacy-layout refusal): check the key columns,
+    * checkpoint the drop, answer size, key-uniqueness, upsert count and
+    * touched buckets with ONE aggregation job (the bucket id is a pure
+    * function of the key, so first(bkt) per key group is exact), widen
+    * the schema, and refuse a drop whose upserts miss a column. */
+  private def prepareDrop(drop: DataFrame, root: String, spec: BucketSpec, deleted: Column,
+      verb: String, eager: DataFrame => DataFrame): Drop = {
+    val keys = spec.keys
+    keys.foreach(k => require(drop.columns.contains(k),
+      s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
+    val d = eager(drop
+      .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
+      .withColumn("bkt", bktCol(keys, spec.numBuckets)))
+    val keyAgg = d.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"),
+        sum(when(col("__del"), 0L).otherwise(1L)).as("__u"),
+        first(col("bkt")).as("__b"))
+      .agg(sum(col("__n")), count(lit(1)), sum(col("__u")),
+        collect_set(col("__b")))
+      .collect().head
+    val rows = if (keyAgg.isNullAt(0)) 0L else keyAgg.getLong(0)
+    require(rows == keyAgg.getLong(1),
+      s"drop has duplicate '${spec.key}' keys — upsert/delete order within a drop is undefined")
+
+    // the table's live schema: recorded in the manifest by every
+    // publish since the field existed (zero per-call footer reads);
+    // older manifests re-derive the first-seen union of the owning
+    // directories' footers
+    val tableFields = widenedFields(drop.sparkSession, root, spec)
+    // SCHEMA EVOLUTION: columns the drop ADDS widen the table — new
+    // files carry them, older rows read as null (unionEvolved's
+    // by-name discipline applied to the bucket store); columns the
+    // drop is MISSING are still refused (delete-only drops excepted) —
+    // an upsert that silently nulled an existing column would be a
+    // data-loss footgun, not evolution. Columns the `deleted`
+    // expression references are CDC MARKERS, not data — they never
+    // widen the table (resolved against the drop so arbitrary marker
+    // expressions work, not just a bare column)
+    val delRefs: Set[String] =
+      drop.select(deleted.as("__p")).queryExecution.analyzed
+        .expressions.flatMap(_.references.map(_.name)).toSet
+    val dropExtras = d.schema.fields.filter(f =>
+      !tableFields.exists(_.name == f.name) && f.name != "__del" && f.name != "bkt" &&
+        !delRefs.contains(f.name)).toSeq
+    val allFields = tableFields ++ dropExtras
+    // legacy-layout guard, BEFORE any staging I/O: a table published
+    // when doubles/decimals were long-cast into zone bounds would
+    // otherwise fail inside buildZoneMap AFTER the staging write,
+    // stranding an orphan — refuse at entry with the remedy instead
+    for (z <- spec.zones; f <- allFields.find(_.name == z))
+      try zoneBound(f.dataType)
+      catch { case e: RuntimeException => sys.error(
+        s"zone column '$z' of the live layout has unsupported type ${f.dataType.simpleString} " +
+          s"(a pre-r14 publish accepted it; bounds would truncate) — republish with " +
+          s"promoteBucketed and integral/string/date zone columns before $verb: ${e.getMessage}") }
+    val missing = tableFields.map(_.name).filterNot(c => drop.columns.contains(c))
+    if (missing.nonEmpty)
+      require(d.filter(!col("__del")).isEmpty,
+        s"drop upsert rows are missing table columns: ${missing.mkString(", ")} — " +
+          "a drop may ADD columns (older rows read as null) but must carry every existing one")
+    Drop(d, rows, if (keyAgg.isNullAt(2)) 0L else keyAgg.getLong(2),
+      keyAgg.getSeq[Int](3).sorted, allFields, missing)
+  }
+
+  /** Exact key accounting of the USER drop `d` against the RECONCILED
+    * pre-image of the touched buckets: their base keys (keys only,
+    * partition-pruned), folded through the pending `layers` oldest
+    * first — each layer's keys shadow everything beneath, its live
+    * upserts union back, so the newest layer wins. A layer is its rows
+    * (keys and `__del`) with the row bound that decides its broadcast
+    * hint; [[patch]] passes every delta layer, [[merge]] the layers'
+    * already-checkpointed net effect as one. A key an earlier patch
+    * inserted counts as an update, one it deleted counts as an insert.
+    * `hint` is the drop-key broadcast decision. Returns (updated,
+    * deleted) existing keys. */
+  private def preImageHits(spark: SparkSession, root: String, spec: BucketSpec,
+      allFields: Seq[StructField], touched: Seq[Int], layers: Seq[(DataFrame, Option[Long])],
+      d: DataFrame, hint: DataFrame => DataFrame): (Long, Long) = {
+    val keys = spec.keys
+    val byDir = touched.map(b => (spec.owner(b), b)).filter(_._1.nonEmpty).groupBy(_._1)
+    val keySchema = StructType(
+      (allFields.filter(f => keys.contains(f.name)) :+ StructField("bkt", IntegerType)).toArray)
+    val baseKeys = byDir.toSeq.sortBy(_._1).map { case (dir, entries) =>
+      spark.read.schema(keySchema).parquet(new File(root, dir).getPath)
+        .filter(col("bkt").isin(entries.map(_._2): _*))
+        .select(keys.map(col): _*)
+    }.reduceOption(_ unionByName _)
+    val preKeys: Option[DataFrame] = layers.foldLeft(baseKeys) { case (acc, (layer, rows)) =>
+      val lk = layer.select(keys.map(col): _*)
+      val hinted = if (rows.forall(_ <= DeltaBroadcastMaxRows)) broadcast(lk) else lk
+      val lup = layer.filter(!col("__del")).select(keys.map(col): _*)
+      Some(acc.map(_.join(hinted, keys, "left_anti").unionByName(lup)).getOrElse(lup))
     }
-    }
+    preKeys.map(_.join(hint(d.select((keys :+ "__del").map(col): _*)), keys, "inner")
+      .agg(
+        sum(when(col("__del"), 0L).otherwise(1L)).as("up"),
+        sum(when(col("__del"), 1L).otherwise(0L)).as("del"))
+      .collect().head).map(r => (Option(r.get(0)).fold(0L)(_ => r.getLong(0)),
+        Option(r.get(1)).fold(0L)(_ => r.getLong(1)))).getOrElse((0L, 0L))
   }
 
   /** MERGE-ON-READ publish — the O(drop) sibling of [[merge]]. A
@@ -1389,13 +1323,14 @@ object Versioned {
     * columns, missing-column refusal (delete-only drops excepted), the
     * same `maxChangedPerMille` fat-finger gate, exact key accounting
     * against the RECONCILED pre-image (a key inserted by an earlier
-    * layer counts as an update, not an insert), and the same claim →
-    * rename → manifest commit discipline (crash points `staged` /
-    * `claimed` / `renamed` / `chain`; a crash strands only an
-    * unreferenced staging directory or an orphan chain entry). Zone
-    * maps and key-Bloom sidecars ride along on the layer when the
-    * layout carries them, so [[readRange]] prunes and [[lookup]]
-    * probes delta layers the same way they do base directories. */
+    * layer counts as an update, not an insert), and the same
+    * [[CommitSlot.commit]] → manifest swap (fault points
+    * `versioned.staged` / `.commit` / `.claimed` / `.renamed` /
+    * `.chain`; a crash strands only an unreferenced staging directory
+    * or an orphan chain entry). Zone maps and key-Bloom sidecars ride
+    * along on the layer when the layout carries them, so [[readRange]]
+    * prunes and [[lookup]] probes delta layers the same way they do
+    * base directories. */
   def patch(
       drop: DataFrame,
       root: String,
@@ -1406,104 +1341,32 @@ object Versioned {
       maxBroadcastDropKeys: Long = 5000000L): PatchReport = {
     val spark = drop.sparkSession
     val startedMs = System.currentTimeMillis()
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — publish with promoteBucketed before patching"))
+    val (live, spec) = liveBucketed(root, "publish with promoteBucketed before patching")
     val keys = spec.keys
-    keys.foreach(k => require(drop.columns.contains(k),
-      s"merge key column '$k' not in ${drop.columns.mkString(", ")}"))
     require(spec.deltas.size < maxDeltaLayers,
       s"table under $root already carries ${spec.deltas.size} delta layers " +
         s"(maxDeltaLayers = $maxDeltaLayers) — every read reconciles each layer; " +
         "fold them first (foldDeltas / merge / maintain)")
 
     withReleasedCheckpoints { eager =>
-    val d = eager(drop
-      .withColumn("__del", coalesce(deleted.cast("boolean"), lit(false)))
-      .withColumn("bkt", bktCol(keys, spec.numBuckets)))
-    // ONE aggregation job answers size, key-uniqueness, the upsert
-    // count AND the touched-bucket set together (the merge fast-path
-    // discipline; the bucket id is a pure function of the key, so
-    // first(bkt) per key group is exact and the previous separate
-    // distinct-scan job for `touched` folds in, guide §1.2)
-    val keyAgg = d.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"),
-        sum(when(col("__del"), 0L).otherwise(1L)).as("__u"),
-        first(col("bkt")).as("__b"))
-      .agg(sum(col("__n")), count(lit(1)), sum(col("__u")),
-        collect_set(col("__b")))
-      .collect().head
-    val nDrop = if (keyAgg.isNullAt(0)) 0L else keyAgg.getLong(0)
-    val upsertRows = if (keyAgg.isNullAt(2)) 0L else keyAgg.getLong(2)
+    val Drop(d, nDrop, upsertRows, touched, allFields, _) =
+      prepareDrop(drop, root, spec, deleted, "patching", eager)
     require(nDrop > 0, "patch refuses an empty drop — nothing to publish")
-    require(nDrop == keyAgg.getLong(1),
-      s"drop has duplicate '${spec.key}' keys — upsert/delete order within a drop is undefined")
 
-    val touched = keyAgg.getSeq[Int](3).sorted
-
-    val tableFields = widenedFields(spark, root, spec)
-    // the same evolution/marker discipline as merge: added columns
-    // widen the table, CDC marker columns never do, missing columns
-    // refuse (delete-only drops excepted)
-    val delRefs: Set[String] =
-      drop.select(deleted.as("__p")).queryExecution.analyzed
-        .expressions.flatMap(_.references.map(_.name)).toSet
-    val dropExtras = d.schema.fields.filter(f =>
-      !tableFields.exists(_.name == f.name) && f.name != "__del" && f.name != "bkt" &&
-        !delRefs.contains(f.name)).toSeq
-    val allFields = tableFields ++ dropExtras
-    for (z <- spec.zones; f <- allFields.find(_.name == z))
-      try zoneBound(f.dataType)
-      catch { case e: RuntimeException => sys.error(
-        s"zone column '$z' of the live layout has unsupported type ${f.dataType.simpleString} " +
-          s"— republish with promoteBucketed and integral/string/date zone columns " +
-          s"before patching: ${e.getMessage}") }
-    val dataCols: Seq[String] = allFields.map(_.name)
-    val missing = tableFields.map(_.name).filterNot(c => drop.columns.contains(c))
-    if (missing.nonEmpty)
-      require(d.filter(!col("__del")).isEmpty,
-        s"drop upsert rows are missing table columns: ${missing.mkString(", ")} — " +
-          "a drop may ADD columns (older rows read as null) but must carry every existing one")
-
-    // exact accounting against the RECONCILED pre-image of the touched
-    // buckets (base anti-joined by every pending layer's keys, each
-    // layer's live upserts unioned back — keys only, partition-pruned,
-    // delta scans pruned to the touched buckets)
     def dkHint(df: DataFrame): DataFrame =
       if (nDrop <= maxBroadcastDropKeys) broadcast(df) else df
-    val byDir = touched.map(b => (spec.owner(b), b)).filter(_._1.nonEmpty).groupBy(_._1)
-    val keySchema = StructType(
-      (allFields.filter(f => keys.contains(f.name)) :+ StructField("bkt", IntegerType)).toArray)
-    val baseKeys = byDir.toSeq.sortBy(_._1).map { case (dir, entries) =>
-      spark.read.schema(keySchema).parquet(new File(root, dir).getPath)
-        .filter(col("bkt").isin(entries.map(_._2): _*))
-        .select(keys.map(col): _*)
-    }.reduceOption(_ unionByName _)
-    val layerSchema = deltaReadSchema(allFields)
-    val preKeys: Option[DataFrame] =
-      spec.deltas.zipWithIndex.foldLeft(baseKeys) { case (acc, (dir, i)) =>
-        val layer = spark.read.schema(layerSchema).parquet(new File(root, dir).getPath)
-          .filter(col("bkt").isin(touched: _*))
-        val lk = layer.select(keys.map(col): _*)
-        val hinted =
-          if (spec.deltaRows.lift(i).forall(_ <= DeltaBroadcastMaxRows)) broadcast(lk) else lk
-        val lup = layer.filter(!col("__del")).select(keys.map(col): _*)
-        Some(acc.map(_.join(hinted, keys, "left_anti").unionByName(lup)).getOrElse(lup))
-      }
-    val dKeys = d.select((keys :+ "__del").map(col): _*)
-    val hits = preKeys.map(_.join(dkHint(dKeys), keys, "inner")
-      .agg(
-        sum(when(col("__del"), 0L).otherwise(1L)).as("up"),
-        sum(when(col("__del"), 1L).otherwise(0L)).as("del"))
-      .collect().head).map(r => (Option(r.get(0)).fold(0L)(_ => r.getLong(0)),
-        Option(r.get(1)).fold(0L)(_ => r.getLong(1)))).getOrElse((0L, 0L))
-    val (upserted, deletedN) = hits
+    // every pending layer's rows, delta scans pruned to the touched buckets
+    val layers = spec.deltas.zipWithIndex.map { case (dir, i) =>
+      (spark.read.schema(deltaReadSchema(allFields)).parquet(new File(root, dir).getPath)
+        .filter(col("bkt").isin(touched: _*)), spec.deltaRows.lift(i))
+    }
+    val (upserted, deletedN) =
+      preImageHits(spark, root, spec, allFields, touched, layers, d, dkHint)
     val inserted = upsertRows - upserted
     val newTotal = spec.rows + inserted - deletedN
 
     val version = live.version + 1
-    val dirName = f"v$version%05d"
-    val staging = new File(root, s"_staging_${dirName}_${System.nanoTime()}")
+    val (dirName, staging) = stagingFor(root, version)
     // the layer IS the drop: data columns (null-filled for delete-only
     // drops), the __del marker, the bucket routing — O(drop) I/O, no
     // survivor read, no bucket rewrite. Clustered by bucket before the
@@ -1523,41 +1386,19 @@ object Versioned {
       .write.mode(SaveMode.Overwrite).partitionBy("bkt").parquet(staging.getPath)
     if (spec.zones.nonEmpty) buildZoneMap(spark, staging.getPath, spec.zones)
     if (spec.bloomBits > 0) buildKeyBloom(spark, staging.getPath, keys, spec.bloomBits)
-    maybeCrash("staged")
+    CommitSlot.at("versioned.staged")
 
-    val viol: Seq[(String, Long)] =
-      if (checks.isEmpty) Seq.empty
-      else Validate.violations(
-        spark.read.parquet(staging.getPath).filter(!col("__del")).drop("bkt", "__del"),
-        checks).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val firstViolation = viol.find(_._2 > 0)
-    val gateReason = maxChangedPerMille.flatMap { pm =>
-      val movedKeys = upserted + deletedN
-      if (spec.rows > 0 && movedKeys * 1000L > pm * spec.rows)
-        Some(s"merge gate: $movedKeys of ${spec.rows} live keys changed/removed (> $pm per mille)")
-      else None
-    }
-    val reason = firstViolation
-      .map { case (rule, n) => s"validation: rule '$rule' has $n violations" }
-      .orElse(gateReason)
-
-    reason match {
-      case Some(_) =>
-        rmTree(staging)
-        PatchReport(patched = false, version, dirName, upserted, inserted, deletedN,
-          spec.deltas.size, viol, reason)
-      case None =>
-        val claim = claimAndRename(root, Some(live), staging, dirName, startedMs)
-        maybeCrash("renamed")
-        writeManifest(root, Manifest(version, dirName, Some(live.path),
-          Some(spec.copy(rows = newTotal,
-            schemaB64 = Some(encodeSchema(allFields)),
-            deltas = spec.deltas :+ dirName,
-            deltaRows = spec.deltaRows :+ nDrop))))
-        claim.release()
-        PatchReport(patched = true, version, dirName, upserted, inserted, deletedN,
-          spec.deltas.size + 1, viol, None)
-    }
+    val (viol, reason) = audit(checks,
+      spark.read.parquet(staging.getPath).filter(!col("__del")).drop("bkt", "__del"),
+      changedGate(maxChangedPerMille, upserted + deletedN, spec.rows))
+    val committed = settle(root, Some(live), staging, dirName, startedMs, reason)(
+      Manifest(version, dirName, Some(live.path),
+        Some(spec.copy(rows = newTotal,
+          schemaB64 = Some(encodeSchema(allFields)),
+          deltas = spec.deltas :+ dirName,
+          deltaRows = spec.deltaRows :+ nDrop))))
+    PatchReport(committed, version, dirName, upserted, inserted, deletedN,
+      spec.deltas.size + (if (committed) 1 else 0), viol, reason)
     }
   }
 
@@ -1576,20 +1417,11 @@ object Versioned {
       backoffMs: Long = 500L,
       maxDeltaLayers: Int = 8,
       refuseKeyConflicts: Boolean = false): PatchReport = {
-    require(attempts >= 1)
     val firstBase = currentManifest(root).map(_.version)
-    var last: ConcurrentWriteException = null
-    for (attempt <- 1 to attempts) {
-      if (refuseKeyConflicts && attempt > 1)
-        firstBase.foreach(checkKeyConflict(drop, root, _))
-      try return patch(drop, root, deleted, checks, maxChangedPerMille, maxDeltaLayers)
-      catch {
-        case e: ConcurrentWriteException =>
-          last = e
-          if (attempt < attempts) Thread.sleep(backoffMs * attempt)
-      }
+    CommitSlot.retrying(attempts, backoffMs) { attempt =>
+      if (refuseKeyConflicts && attempt > 1) firstBase.foreach(checkKeyConflict(drop, root, _))
+      patch(drop, root, deleted, checks, maxChangedPerMille, maxDeltaLayers)
     }
-    throw last
   }
 
   /** Fold every pending [[patch]] layer back into the base: ONE
@@ -1603,9 +1435,7 @@ object Versioned {
     * pending. */
   def foldDeltas(spark: SparkSession, root: String,
       checks: Seq[Validate.Check] = Seq.empty): MergeReport = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — only bucketed tables carry delta layers"))
+    val (live, spec) = liveBucketed(root, "only bucketed tables carry delta layers")
     if (spec.deltas.isEmpty)
       MergeReport(merged = false, live.version, live.path, 0L, 0L, 0L, Nil, Nil,
         Some("no delta layers to fold"))
@@ -1642,26 +1472,16 @@ object Versioned {
       maxBroadcastDropKeys: Long = 5000000L,
       refuseKeyConflicts: Boolean = false,
       zoneCluster: Boolean = false): MergeReport = {
-    require(attempts >= 1)
     // the drop is presumed derived against the CURRENT live version;
     // every replay re-checks against this base, not the previous
     // attempt's (a winner that commits between a loser's refusal and
     // its retry must still be detected — the refusal itself may have
     // fired while the winner merely HELD the claim, pointer unmoved)
     val firstBase = currentManifest(root).map(_.version)
-    var last: ConcurrentWriteException = null
-    for (attempt <- 1 to attempts) {
-      if (refuseKeyConflicts && attempt > 1)
-        firstBase.foreach(checkKeyConflict(drop, root, _))
-      try return merge(drop, root, deleted, checks, maxChangedPerMille,
-        maxBroadcastDropKeys, zoneCluster)
-      catch {
-        case e: ConcurrentWriteException =>
-          last = e
-          if (attempt < attempts) Thread.sleep(backoffMs * attempt)
-      }
+    CommitSlot.retrying(attempts, backoffMs) { attempt =>
+      if (refuseKeyConflicts && attempt > 1) firstBase.foreach(checkKeyConflict(drop, root, _))
+      merge(drop, root, deleted, checks, maxChangedPerMille, maxBroadcastDropKeys, zoneCluster)
     }
-    throw last
   }
 
   /** Two racing writers whose drops disagree on the SAME key resolved
@@ -1727,9 +1547,7 @@ object Versioned {
     * through the same fold the writers evaluate and the scan still
     * touches exactly ONE bucket partition of ONE owning directory. */
   def lookup(spark: SparkSession, root: String, keyValues: Seq[Any]): DataFrame = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — lookup needs the bucket layout"))
+    val (_, spec) = liveBucketed(root, "lookup needs the bucket layout")
     val keys = spec.keys
     require(keyValues.length == keys.length,
       s"lookup needs ${keys.length} key value(s) for layout key '${spec.key}', " +
@@ -1831,9 +1649,7 @@ object Versioned {
     * merges, exactly a table format's compaction pass. */
   def compact(spark: SparkSession, root: String,
       checks: Seq[Validate.Check] = Seq.empty): PromoteReport = {
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — compact consolidates bucket stores"))
+    val (_, spec) = liveBucketed(root, "compact consolidates bucket stores")
     promoteBucketed(read(spark, root), root, spec.key, spec.numBuckets, checks,
       zoneCols = spec.zones, keyBloomBits = spec.bloomBits,
       zoneCluster = spec.zones.nonEmpty)
@@ -1859,9 +1675,7 @@ object Versioned {
   def rebucket(spark: SparkSession, root: String, newBuckets: Int,
       checks: Seq[Validate.Check] = Seq.empty): PromoteReport = {
     require(newBuckets > 0)
-    val live = currentManifest(root).getOrElse(sys.error(s"no live version under $root"))
-    val spec = live.buckets.getOrElse(sys.error(
-      s"live version under $root is not bucketed — rebucket evolves bucket layouts"))
+    val (_, spec) = liveBucketed(root, "rebucket evolves bucket layouts")
     promoteBucketed(read(spark, root), root, spec.key, newBuckets, checks,
       zoneCols = spec.zones, keyBloomBits = spec.bloomBits,
       zoneCluster = spec.zones.nonEmpty)

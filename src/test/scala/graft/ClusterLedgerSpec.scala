@@ -155,10 +155,10 @@ class ClusterLedgerSpec extends SparkSpecBase {
   test("an append that lost the race to another writer refuses instead of orphaning it") {
     val path = tmp()
     ClusterLedger.append(path, Seq((1L, 2L), (3L, 4L)).toDF("a", "b"), "a", "b", numBuckets = 8)
-    // two overlapped appends resolve the same committed state before
-    // either swaps the manifest; the second committer must refuse
-    // loudly — renaming its owner map over the winner's would orphan
-    // the winner's buckets
+    // two overlapped appends resolve the same committed state and meet
+    // at the commit point before either swaps the manifest; the second
+    // committer must refuse loudly — renaming its owner map over the
+    // winner's would orphan the winner's buckets
     val d1 = Seq((5L, 6L)).toDF("a", "b")
     val d2 = Seq((7L, 8L)).toDF("a", "b")
     import java.util.concurrent.Executors
@@ -168,11 +168,16 @@ class ClusterLedgerSpec extends SparkSpecBase {
         def call() = try Right(ClusterLedger.append(path, d, "a", "b", numBuckets = 8))
         catch { case t: Throwable => Left(t) }
       })
-    val f1 = attempt(d1)
-    Thread.sleep(200)
-    val f2 = attempt(d2)
-    val results = Seq(f1.get(), f2.get())
+    val meeting = Seams.meet("ledger.commit")(
+      ClusterLedger.readManifest(path).map(_.appends))
+    val results = try {
+      val f1 = attempt(d1)
+      val f2 = attempt(d2)
+      Seq(f1.get(), f2.get())
+    } finally Seams.disarm()
     pool.shutdown()
+    assert(meeting.probes === Seq(Some(1), Some(1)),
+      "both writers resolved append 1 before either committed")
     assert(results.count(_.isRight) === 1 && results.count(_.isLeft) === 1,
       s"exactly one append commits, one refuses: $results")
     results.collect { case Left(t) => t }.foreach(t =>
@@ -186,6 +191,23 @@ class ClusterLedgerSpec extends SparkSpecBase {
       Seq((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L)).toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toSet
     assert(got === full)
+  }
+
+  test("lookup equals the filtered labeling for long and string ids, with zero jobs to build") {
+    for ((ids, probes) <- Seq(
+        (Seq((1L, 2L), (3L, 4L), (9L, 9L)).toDF("a", "b"), Seq[Any](1L, 2L, 4L, 9L, 77L)),
+        (Seq(("x", "y"), ("p", "q"), ("solo", "solo")).toDF("a", "b"),
+          Seq[Any]("x", "y", "q", "solo", "absent")))) {
+      val path = tmp()
+      ClusterLedger.append(path, ids, "a", "b", numBuckets = 4)
+      val labels = ClusterLedger.labels(spark, path)
+      for (k <- probes) {
+        val (frame, jobs) = JobCount(spark)(ClusterLedger.lookup(spark, path, k))
+        assert(jobs === 0, s"building lookup($k) ran $jobs jobs")
+        assert(frame.collect().toSet === labels.filter(col("id") === lit(k)).collect().toSet,
+          s"lookup($k)")
+      }
+    }
   }
 
   test("appendRetry: racing writers ALL converge to connectedComponents of the union") {

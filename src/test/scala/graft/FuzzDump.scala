@@ -949,11 +949,11 @@ object FuzzDump {
           require(graft.sources.Versioned.compact(spark, root).promoted)
         val usePatch = rnd.nextInt(2) == 0
         if (usePatch && i == crashAt) {
-          graft.sources.Versioned.crashPoint = Some(point)
+          Seams.crashAt(s"versioned.$point")
           val killed =
             try { graft.sources.Versioned.patch(d, root, deleted = col("del")); None }
             catch { case t: Throwable => Some(t) }
-            finally graft.sources.Versioned.crashPoint = None
+            finally Seams.disarm()
           require(killed.exists(_.getMessage.contains("simulated crash")),
             s"seed $seed: expected a simulated patch crash at '$point', got $killed")
           require(graft.sources.Versioned.read(spark, root).count() >= 0)
@@ -1011,11 +1011,11 @@ object FuzzDump {
       require(graft.sources.Versioned.promoteBucketed(base, root, "id", nb).promoted)
       Seq(d1, d2, d3).zipWithIndex.foreach { case (d, i) =>
         if (i == crashAt) {
-          graft.sources.Versioned.crashPoint = Some(point)
+          Seams.crashAt(s"versioned.$point")
           val killed =
             try { graft.sources.Versioned.merge(d, root, deleted = col("del")); None }
             catch { case t: Throwable => Some(t) }
-            finally graft.sources.Versioned.crashPoint = None
+            finally Seams.disarm()
           require(killed.exists(_.getMessage.contains("simulated crash")),
             s"seed $seed: expected a simulated crash at '$point', got $killed")
           // a reader between crash and retry must still see a
@@ -1084,12 +1084,11 @@ object FuzzDump {
         val compactAt = rnd.nextInt(nDrops + 1) // 0 = right after create
         def maybeCompact(point: Int): Unit = if (point == compactAt) {
           if (rnd.nextInt(3) == 0) {
-            graft.sources.TableCompact.crashPoint =
-              Some(if (rnd.nextBoolean()) "staged" else "swapped")
+            Seams.crashAt(if (rnd.nextBoolean()) "compact.staged" else "compact.swapped")
             val killed =
               try { graft.text.SearchIndex.compact(spark, table); None }
               catch { case t: Throwable => Some(t) }
-              finally graft.sources.TableCompact.crashPoint = None
+              finally Seams.disarm()
             require(killed.exists(_.getMessage.contains("simulated crash")),
               s"seed $seed: expected a simulated compact crash, got $killed")
           }

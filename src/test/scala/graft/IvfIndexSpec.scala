@@ -199,11 +199,11 @@ class IvfIndexSpec extends SparkSpecBase {
         .collect().toSet
       val centsBefore = IvfIndex.centroids(spark, "graft_ivfcr.idx").collect().toSet
       // simulated crash: next-gen tables written, pointer NOT swapped
-      IvfIndex.failBeforeSwap = true
+      Seams.crashAt("ivf.before-swap")
       val e = intercept[RuntimeException](
         IvfIndex.rebalance(spark, "graft_ivfcr.idx", overfullFactor = 2))
       assert(e.getMessage.contains("simulated crash"))
-      IvfIndex.failBeforeSwap = false
+      Seams.disarm()
       // readers still see the OLD generation's quantizer, bit-equal —
       // the old SaveMode.Overwrite drop-then-recreate would have lost
       // the centroid table here, leaving the index unreadable
@@ -218,7 +218,7 @@ class IvfIndexSpec extends SparkSpecBase {
       assert(IvfIndex.probe(spark, "graft_ivfcr.idx", probeQ, k = 2, nprobe = 2)
         .collect().nonEmpty)
     } finally {
-      IvfIndex.failBeforeSwap = false
+      Seams.disarm()
       spark.sql("DROP DATABASE IF EXISTS graft_ivfcr CASCADE")
     }
   }

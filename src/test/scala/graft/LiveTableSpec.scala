@@ -65,9 +65,9 @@ class LiveTableSpec extends SparkSpecBase {
       assert(LiveTable.consumedDrops(spark, LiveTable.resolve(spark, t))
         === Set("base", "d0"))
       // a crash before the swap: live pointer unmoved, orphan staged
-      TableCompact.crashPoint = Some("staged")
+      Seams.crashAt("compact.staged")
       try intercept[RuntimeException](TableCompact.compact(spark, t, Seq("id"), Seq("id")))
-      finally TableCompact.crashPoint = None
+      finally Seams.disarm()
       assert(LiveTable.liveGen(spark, t) === Some(2))
       assert(spark.catalog.tableExists(s"$db.idx__g00003"), "orphan staged generation")
       assert(TableCompact.heal(spark, t) === "dropped-stale-staging")
@@ -130,14 +130,13 @@ class LiveTableSpec extends SparkSpecBase {
       // mid-staging, an ingest retry RE-PUBLISHES d1 with corrected
       // rows — same partition NAME, fresh part files; a name-only
       // re-check would commit and silently drop the correction
-      TableCompact.midStageHook = () => {
-        TableCompact.midStageHook = () => ()
+      Seams.onceAt("compact.staged") {
         Warehouse.insertPartitionOverwrite(
           Seq((5L, "d1"), (6L, "d1")).toDF("id", "drop_id"), s"$db.idx__g00001")
       }
       val e = try intercept[graft.sources.ConcurrentWriteException](
         TableCompact.compact(spark, t, Seq("id"), Seq("id")))
-      finally TableCompact.midStageHook = () => ()
+      finally Seams.disarm()
       assert(e.getMessage.contains("concurrent append"), e.getMessage)
       assert(e.getMessage.contains("d1"), e.getMessage)
       // the live view is untouched, the correction intact; the retry
@@ -160,9 +159,9 @@ class LiveTableSpec extends SparkSpecBase {
       // the upgrade's one-time window: a crash between DROP TABLE and
       // CREATE VIEW leaves the name missing (loud) with the staged
       // generation complete — heal commits it
-      TableCompact.crashPoint = Some("swapped")
+      Seams.crashAt("compact.swapped")
       try intercept[RuntimeException](TableCompact.compact(spark, t, Seq("id"), Seq("id")))
-      finally TableCompact.crashPoint = None
+      finally Seams.disarm()
       assert(!spark.catalog.tableExists(t), "the documented one-time legacy window")
       assert(TableCompact.heal(spark, t) === "completed-swap")
       assert(LiveTable.resolve(spark, t) === s"$db.old__g00001")

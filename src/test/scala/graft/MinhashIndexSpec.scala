@@ -103,11 +103,11 @@ class MinhashIndexSpec extends SparkSpecBase {
       // a kill right after the atomic view swap IS a commit: the live
       // name never vanishes (the r14 DROP+RENAME window is gone) and
       // probes read the consolidated generation
-      graft.sources.TableCompact.crashPoint = Some("swapped")
+      Seams.crashAt("compact.swapped")
       try {
         val e = intercept[RuntimeException](MinhashIndex.compact(spark, table))
         assert(e.getMessage.contains("simulated crash"), e.getMessage)
-      } finally graft.sources.TableCompact.crashPoint = None
+      } finally Seams.disarm()
       assert(spark.catalog.tableExists(table), "zero-downtime: the live name never vanishes")
       assert(phys.endsWith("__g00002"), s"the swap committed: $phys")
       assert(TableCompact.heal(spark, table) === "noop", "a post-swap crash IS a commit")
@@ -131,9 +131,9 @@ class MinhashIndexSpec extends SparkSpecBase {
         nBuckets = 4, dropId = "late")
       val liveBefore = phys
       val withLate = spark.table(table).count()
-      graft.sources.TableCompact.crashPoint = Some("staged")
+      Seams.crashAt("compact.staged")
       try intercept[RuntimeException](MinhashIndex.compact(spark, table))
-      finally graft.sources.TableCompact.crashPoint = None
+      finally Seams.disarm()
       assert(spark.catalog.tableExists(table))
       assert(phys === liveBefore, "a pre-swap crash must not move the live pointer")
       assert(spark.catalog.tableExists(s"${table}__g00003"), "staged orphan")

@@ -245,11 +245,11 @@ class PatchSpec extends SparkSpecBase {
       val root = freshRoot()
       assert(Versioned.promoteBucketed(baseDocs(16), root, "doc_id", 4).promoted)
       val preCrash = sortedRows(Versioned.read(spark, root))
-      Versioned.crashPoint = Some(point)
+      Seams.crashAt(s"versioned.$point")
       val killed =
         try { Versioned.patch(d, root, deleted = col("del")); None }
         catch { case t: Throwable => Some(t) }
-        finally Versioned.crashPoint = None
+        finally Seams.disarm()
       assert(killed.exists(_.getMessage.contains("simulated crash")), s"point $point")
       // a reader between crash and retry sees the intact pre-crash version
       assert(sortedRows(Versioned.read(spark, root)) === preCrash, s"point $point")
@@ -340,11 +340,16 @@ class PatchSpec extends SparkSpecBase {
           refuseKeyConflicts = true).patched)
         catch { case t: Throwable => Left(t) }
       })
-    val f1 = attempt(dA)
-    Thread.sleep(300)
-    val f2 = attempt(dB)
-    val results = Seq(f1.get(), f2.get())
+    val meeting = Seams.meet("versioned.commit")(
+      Versioned.currentManifest(root).map(_.version))
+    val results = try {
+      val f1 = attempt(dA)
+      val f2 = attempt(dB)
+      Seq(f1.get(), f2.get())
+    } finally Seams.disarm()
     pool.shutdown()
+    assert(meeting.probes === Seq(Some(1), Some(1)),
+      "both writers resolved v1 before either committed")
     assert(results.count(_ == Right(true)) === 1 &&
       results.count(_.isLeft) === 1, s"one commits, one refuses: $results")
     results.collect { case Left(t) => t }.foreach { t =>

@@ -19,6 +19,9 @@ class PromoteSpec extends SparkSpecBase {
   private def freshRoot(): String =
     Files.createTempDirectory("graft_promote").toString + "/corpus"
 
+  private def liveVersion(root: String): Option[Int] =
+    Versioned.currentManifest(root).map(_.version)
+
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
   private val checks = Seq(
@@ -309,10 +312,10 @@ class PromoteSpec extends SparkSpecBase {
     val root = freshRoot()
     assert(Versioned.promoteBucketed(baseDocs(10), root, "doc_id", 4, checks).promoted)
     // two real merges on disjoint keys, overlapped: both resolve the
-    // SAME live version before either commits (a merge stages for
-    // seconds; the stagger only de-flakes submission order), so
-    // whichever commits second must refuse loudly — silently renaming
-    // its manifest over the winner's would orphan the winner's data.
+    // SAME live version and meet at the commit point before either
+    // commits, so whichever commits second must refuse loudly —
+    // silently renaming its manifest over the winner's would orphan
+    // the winner's data.
     val d1 = Seq((1L, "d1 vA", false)).toDF("doc_id", "text", "del")
     val d2 = Seq((2L, "d2 vB", false)).toDF("doc_id", "text", "del")
     import java.util.concurrent.Executors
@@ -322,11 +325,15 @@ class PromoteSpec extends SparkSpecBase {
         def call() = try Right(Versioned.merge(d, root, col("del")).merged)
         catch { case t: Throwable => Left(t) }
       })
-    val f1 = attempt(d1)
-    Thread.sleep(300)
-    val f2 = attempt(d2)
-    val results = Seq(f1.get(), f2.get())
+    val meeting = Seams.meet("versioned.commit")(liveVersion(root))
+    val results = try {
+      val f1 = attempt(d1)
+      val f2 = attempt(d2)
+      Seq(f1.get(), f2.get())
+    } finally Seams.disarm()
     pool.shutdown()
+    assert(meeting.probes === Seq(Some(1), Some(1)),
+      "both writers resolved v1 before either committed")
     val committed = results.count(_ == Right(true))
     val refused = results.collect { case Left(t) => t }
     assert(committed === 1 && refused.size === 1,
@@ -403,11 +410,11 @@ class PromoteSpec extends SparkSpecBase {
       val root = freshRoot()
       assert(Versioned.promoteBucketed(baseDocs(12), root, "doc_id", 4, checks).promoted)
       val drop = Seq((1L, "d1 v2", false), (13L, "d13", false)).toDF("doc_id", "text", "del")
-      Versioned.crashPoint = Some(point)
+      Seams.crashAt(s"versioned.$point")
       try {
         val e = intercept[RuntimeException](Versioned.merge(drop, root, deleted = col("del")))
         assert(e.getMessage.contains("simulated crash"), s"$point: ${e.getMessage}")
-      } finally Versioned.crashPoint = None
+      } finally Seams.disarm()
       // readers stay on the fully-consistent old version
       assert(Versioned.currentManifest(root).map(_.version) === Some(1), point)
       assert(Versioned.read(spark, root).count() === 12, point)
@@ -482,11 +489,15 @@ class PromoteSpec extends SparkSpecBase {
           refuseKeyConflicts = true).merged)
         catch { case t: Throwable => Left(t) }
       })
-    val f1 = attempt(dA)
-    Thread.sleep(300)
-    val f2 = attempt(dB)
-    val results = Seq(f1.get(), f2.get())
+    val meeting = Seams.meet("versioned.commit")(liveVersion(root))
+    val results = try {
+      val f1 = attempt(dA)
+      val f2 = attempt(dB)
+      Seq(f1.get(), f2.get())
+    } finally Seams.disarm()
     pool.shutdown()
+    assert(meeting.probes === Seq(Some(1), Some(1)),
+      "both writers resolved v1 before either committed")
     val committed = results.count(_ == Right(true))
     val refused = results.collect { case Left(t) => t }
     assert(committed === 1 && refused.size === 1,
@@ -868,10 +879,14 @@ class PromoteSpec extends SparkSpecBase {
           refuseKeyConflicts = true).merged)
         catch { case t: Throwable => Left(t) }
       })
-    val f1 = attempt(dA)
-    Thread.sleep(300)
-    val f2 = attempt(dB)
-    val results = Seq(f1.get(), f2.get())
+    val meeting = Seams.meet("versioned.commit")(liveVersion(root))
+    val results = try {
+      val f1 = attempt(dA)
+      val f2 = attempt(dB)
+      Seq(f1.get(), f2.get())
+    } finally Seams.disarm()
+    assert(meeting.probes === Seq(Some(1), Some(1)),
+      "both writers resolved v1 before either committed")
     val committed = results.count(_ == Right(true))
     val refused = results.collect { case Left(t) => t }
     assert(committed === 1 && refused.size === 1,
@@ -883,11 +898,15 @@ class PromoteSpec extends SparkSpecBase {
     // commit — the gate must not widen to per-component conflicts
     val dC = Seq(("web", 2L, "w2 v2", false)).toDF("source", "doc_id", "text", "del")
     val dD = Seq(("pdf", 1L, "p1 v2", false)).toDF("source", "doc_id", "text", "del")
-    val f3 = attempt(dC)
-    Thread.sleep(300)
-    val f4 = attempt(dD)
-    val results2 = Seq(f3.get(), f4.get())
+    val meeting2 = Seams.meet("versioned.commit")(liveVersion(root))
+    val results2 = try {
+      val f3 = attempt(dC)
+      val f4 = attempt(dD)
+      Seq(f3.get(), f4.get())
+    } finally Seams.disarm()
     pool.shutdown()
+    assert(meeting2.probes === Seq(Some(2), Some(2)),
+      "both writers resolved v2 before either committed")
     assert(results2.forall(_ == Right(true)),
       s"disjoint tuples must both commit: $results2")
     val m = Versioned.read(spark, root)
@@ -1104,12 +1123,12 @@ class PromoteSpec extends SparkSpecBase {
   test("an orphan chain entry from a chain-point crash is invisible to as-of resolution") {
     val root = freshRoot()
     assert(Versioned.promote(docs(1L -> "a"), root, checks).promoted)
-    Versioned.crashPoint = Some("chain")
+    Seams.crashAt("versioned.chain")
     try {
       val e = intercept[RuntimeException](
         Versioned.promote(docs(1L -> "a", 2L -> "b"), root, checks))
       assert(e.getMessage.contains("simulated crash"))
-    } finally Versioned.crashPoint = None
+    } finally Seams.disarm()
     // the crash landed AFTER the v2 chain-entry write but BEFORE the
     // live-pointer swap: a stamped entry exists for a version no
     // reader ever resolved
@@ -1130,9 +1149,9 @@ class PromoteSpec extends SparkSpecBase {
     // case: an orphan _v00001.json with NO live manifest at all —
     // as-of must resolve NOTHING, exactly like read()
     val fresh = freshRoot()
-    Versioned.crashPoint = Some("chain")
+    Seams.crashAt("versioned.chain")
     try intercept[RuntimeException](Versioned.promote(docs(1L -> "a"), fresh, checks))
-    finally Versioned.crashPoint = None
+    finally Seams.disarm()
     assert(new File(fresh, "_v00001.json").exists())
     assert(Versioned.currentManifest(fresh) === None)
     assert(Versioned.versionAsOf(fresh, System.currentTimeMillis() + 1000) === None)
