@@ -28,20 +28,26 @@ object Bench {
     }
 
     // two timed passes, min per query: steady-state cost with GC /
-    // JIT-tier noise (measured ±40% run-to-run on single passes) out
-    def timedPass(): Map[String, Double] = names.map { name =>
+    // JIT-tier noise (measured ±40% run-to-run on single passes) out.
+    // A query that throws in either pass has no timing: the time to an
+    // exception is not its cost. It is named on stderr and in "failed",
+    // and left out of queries, total and n_queries
+    def timedPass(): Map[String, Option[Double]] = names.map { name =>
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => -1L }
+      val ok =
+        try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
       val dt = (System.nanoTime() - t0) / 1e9
       // release between queries (untimed: block cleanup is harness
       // hygiene, not operator cost — and it is asynchronous anyway)
       graft.operators.Checkpoints.releaseAll()
-      name -> dt
+      name -> Option.when(ok)(dt)
     }.toMap
     val p1 = timedPass()
     val p2 = timedPass()
-    val results = names.map(n => n -> math.min(p1(n), p2(n)))
+    val results = names.flatMap(n => for (a <- p1(n); b <- p2(n)) yield n -> math.min(a, b))
+    val failed = names.filterNot(results.toMap.contains)
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // the driver's BENCH artifact keeps only a ~2000-char tail of
@@ -55,7 +61,7 @@ object Bench {
       val p = java.nio.file.Paths.get(out)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p,
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}""")
     } catch { case e: Throwable => System.err.println(s"[bench] full dump failed: $e") }
     // locale-pinned: default-locale "%.3f" prints "1,234" under
     // comma-decimal locales — invalid JSON, parsed:null at the driver
@@ -71,7 +77,7 @@ object Bench {
     val top = results.sortBy(-_._2).take(40).sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$top,"sf":"$sfDir","n_queries":${results.size},"full":"$out"}"""
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$top,"failed":$failed,"sf":"$sfDir","n_queries":${results.size},"full":"$out"}"""
     spark.stop()
     // print AFTER spark.stop(): shutdown chatter lands above the line,
     // keeping it the last (and tail-closest) stdout line of the run

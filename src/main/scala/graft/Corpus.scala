@@ -366,13 +366,9 @@ final case class Corpus(df: DataFrame, text: Column, id: Column,
     * stages for the combined screen; the drop ledger attributes each
     * removal to the stage that caught it. */
   def decontaminateSemantic(bench: DataFrame, benchText: Column, benchId: Column,
-      dim: Int = 64, tau: Double = 0.8): Corpus = {
-    val flagged = Decontam.semanticContamination(
-        df, text, id, bench, benchText, benchId, dim, tau)
-      .select(col("doc_id").as("__sem_flagged")).distinct()
-    keep(df.join(flagged, id === col("__sem_flagged"), "left_anti"),
+      dim: Int = 64, tau: Double = 0.8): Corpus =
+    keep(Decontam.decontaminateSemantic(df, text, id, bench, benchText, benchId, dim, tau),
       "decontaminate_semantic")
-  }
 
   /** Screen THIS corpus (as the new drop) against an existing corpus:
     * keep only rows that are not LSH near-dups of it. Each side is

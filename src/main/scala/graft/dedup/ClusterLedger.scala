@@ -57,9 +57,9 @@ import graft.sources.CommitSlot.rmTree
   *    exactly that corruption); a crashed FIRST append leaves no
   *    manifest and therefore no contract to violate;
   *  - an empty drop (no non-null pairs) is a no-op that writes
-  *    nothing — in particular an empty FIRST micro-batch from
-  *    [[graft.streaming.EventStreams.clusterStream]] does not create
-  *    an empty unreadable table.
+  *    nothing — in particular an empty FIRST micro-batch of a stream
+  *    appended per [[graft.streaming.EventStreams.eachBatch]] does not
+  *    create an empty unreadable table.
   *
   * Scale shape: the only corpus-sized artifact is the label table
   * itself (near-dup-doc-count rows, tiny next to the corpus). An
@@ -126,6 +126,13 @@ object ClusterLedger {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** One append directory as (id, cluster_id, bkt). The recorded
+    * label schema plans the scan with no footer-read job; only a
+    * manifest written before the schema was recorded infers it. */
+  private def readAppend(spark: SparkSession, path: String, m: Manifest, idx: Int): DataFrame =
+    m.labelSchema.fold(spark.read)(t => spark.read.schema(t.add("bkt", IntegerType)))
+      .parquet(appendDir(path, idx).getPath)
+
   /** Assemble the current labeling from the owner map: one
     * partition-pruned scan per distinct owning directory (≤
     * min(appends, numBuckets) of them), unioned. */
@@ -133,7 +140,7 @@ object ClusterLedger {
     val byDir = m.owner.zipWithIndex.filter(_._1 > 0).groupBy(_._1)
     val parts = byDir.toSeq.sortBy(_._1).map { case (idx, entries) =>
       val bkts = entries.map(_._2)
-      spark.read.parquet(appendDir(path, idx).getPath)
+      readAppend(spark, path, m, idx)
         .filter(col("bkt").isin(bkts: _*))
         .select(col("id"), col("cluster_id"), col("bkt").cast("int").as("bkt"))
     }
@@ -353,10 +360,8 @@ object ClusterLedger {
       case Some(schema) if ownerIdx == 0 => // bucket never written: id unseen
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       case None if ownerIdx == 0 => labels(spark, path).filter(lit(false))
-      case recorded =>
-        // the recorded schema plans the scan with no footer-read job
-        recorded.fold(spark.read)(t => spark.read.schema(t.add("bkt", IntegerType)))
-          .parquet(appendDir(path, ownerIdx).getPath)
+      case _ =>
+        readAppend(spark, path, m, ownerIdx)
           .filter(col("bkt") === bkt && col("id") === lit(idValue))
           .select("id", "cluster_id")
     }

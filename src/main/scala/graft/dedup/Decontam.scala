@@ -261,4 +261,17 @@ object Decontam {
       .select(col("doc_id").as("__contaminated_id")).distinct()
     corpus.join(flagged, id === col("__contaminated_id"), "left_anti")
   }
+
+  /** [[decontaminate]] under the semantic screen: drop every document
+    * [[semanticContamination]] flags against any benchmark document —
+    * the paraphrase leakage the n-gram screen cannot see. The same
+    * body serves a whole corpus and one streaming micro-batch. */
+  def decontaminateSemantic(
+      corpus: DataFrame, text: Column, id: Column,
+      bench: DataFrame, benchText: Column, benchId: Column,
+      dim: Int, tau: Double): DataFrame = {
+    val flagged = semanticContamination(corpus, text, id, bench, benchText, benchId, dim, tau)
+      .select(col("doc_id").as("__sem_flagged")).distinct()
+    corpus.join(flagged, id === col("__sem_flagged"), "left_anti")
+  }
 }

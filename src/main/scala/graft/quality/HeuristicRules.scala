@@ -238,7 +238,7 @@ object HeuristicRules {
     * (doc_id, pass_gopher, pass_c4, pass_repetition). Pure scan —
     * zero shuffles, stateless — so the SAME code path runs over a
     * batch frame or a streaming micro-batch
-    * ([[graft.streaming.EventStreams.ruleScreenedStream]]). */
+    * ([[graft.streaming.EventStreams.eachBatch]]). */
   def ruleVerdicts(df: DataFrame, text: Column, id: Column,
       minWords: Int = 50, maxWords: Int = 100000): DataFrame =
     df.select(id.as("doc_id"),

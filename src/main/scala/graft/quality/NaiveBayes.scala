@@ -130,8 +130,10 @@ object NaiveBayes {
   }
 
   /** Inference against a trained model — the new-drop / streaming
-    * form ([[graft.streaming.EventStreams.nbScoredStream]] runs it
-    * per micro-batch): (doc_id, pred_label, score). One broadcast
+    * form (run it per micro-batch with
+    * [[graft.streaming.EventStreams.eachBatch]] and join the verdicts
+    * back with [[graft.streaming.EventStreams.withScores]]):
+    * (doc_id, pred_label, score). One broadcast
     * join + one per-doc aggregate; the doc text never shuffles. */
   def scoreAgainst(test: DataFrame, testText: Column, testId: Column,
       model: DataFrame, buckets: Int = 256): DataFrame =

@@ -43,11 +43,7 @@ object BloomLedger {
   /** Idempotent per-drop append (dynamic partition overwrite on
     * drop_id — a retried ingestion rewrites its own partition). */
   def append(path: String, summary: DataFrame): Unit =
-    summary.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("drop_id")
-      .parquet(path)
+    graft.sources.PartitionedFiles.overwritePartitions(summary, path, Seq("drop_id"))
 
   /** Element-wise OR of every drop's register → ONE (num_bits,
     * num_hashes, words) row. Declarative: registers explode to

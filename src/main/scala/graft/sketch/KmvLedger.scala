@@ -39,11 +39,7 @@ object KmvLedger {
   /** Idempotent per-drop append (dynamic partition overwrite on
     * drop_id — a retried ingestion rewrites its own partition). */
   def append(path: String, summary: DataFrame): Unit =
-    summary.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("drop_id")
-      .parquet(path)
+    graft.sources.PartitionedFiles.overwritePartitions(summary, path, Seq("drop_id"))
 
   /** Fold every drop's sketch into ONE (k, sketch) row: explode the
     * retained hashes and re-run the SAME aggregator — by the

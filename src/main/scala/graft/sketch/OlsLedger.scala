@@ -43,11 +43,7 @@ object OlsLedger {
 
   /** Idempotent per-drop append (dynamic partition overwrite). */
   def append(path: String, summary: DataFrame): Unit =
-    summary.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("drop_id")
-      .parquet(path)
+    graft.sources.PartitionedFiles.overwritePartitions(summary, path, Seq("drop_id"))
 
   /** The corpus-wide trend from summaries alone: sums add, then the
     * same closed form as the batch operator — slope = Sxy/Sxx with

@@ -553,6 +553,42 @@ object Sketches {
   def prioritySample(df: DataFrame, key: Column, weight: Column, k: Int): DataFrame =
     sampleFromCandidates(priorityCandidates(df, key, weight, k), k)
 
+  /** Fold one drop into a persisted running sample — the streaming
+    * form of [[prioritySample]] (call it per micro-batch). The ledger
+    * at `ledgerPath` holds the top-(k+1) candidates seen so far; the
+    * drop reduces to its own top-(k+1), merges with the ledger by key
+    * (the larger weight wins — priorities are per-key deterministic,
+    * so a re-delivered row collapses instead of occupying two slots),
+    * and re-ranks. The fold is order-independent AND replay-idempotent:
+    * re-folding a drop the ledger already absorbed leaves it
+    * bit-identical, since top-(k+1)(ledger ∪ drop) = ledger. The pool
+    * is ≤ 2(k+1) rows, and the result is materialized before the
+    * overwrite because it is derived from the file being replaced.
+    *
+    * The current sample is `sampleFromCandidates(spark.read.parquet(
+    * ledgerPath), k)`: bit-equal to [[prioritySample]] over everything
+    * folded so far PROVIDED keys are unique across the stream. The
+    * ledger merge collapses duplicate keys to max(w) — that is what
+    * makes a replay idempotent — while the batch operator keeps
+    * same-key rows as independent candidates occupying separate
+    * top-(k+1) slots. Streams whose rows are observations of a keyed
+    * entity satisfy this; for multiset semantics make the key unique
+    * per row upstream (e.g. append an event id). */
+  def foldPriorityCandidates(ledgerPath: String, batch: DataFrame, key: Column,
+      weight: Column, k: Int): Unit = {
+    val spark = batch.sparkSession
+    val batchCands = priorityCandidates(batch, key, weight, k).select("key", "w")
+    val pool =
+      if (new java.io.File(ledgerPath).exists())
+        spark.read.parquet(ledgerPath).select("key", "w").unionByName(batchCands)
+      else batchCands
+    val merged = priorityCandidates(
+      pool.groupBy("key").agg(max(col("w")).as("w")), col("key"), col("w"), k)
+    val rows = merged.collect().toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), merged.schema)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(ledgerPath)
+  }
+
   /** Per-GROUP priority sampling: exactly [[prioritySample]]'s
     * integer priorities (same md5 draw, same (w·2^28) div u math, so
     * per-group results are bit-identical to running the global

@@ -45,16 +45,12 @@ object StatsLedger {
   /** Append a drop's summary to the ledger table, IDEMPOTENT per
     * drop id: the write is a dynamic partition overwrite on drop_id,
     * so retrying a failed ingestion (or replaying a crashed streaming
-    * micro-batch — [[graft.streaming.EventStreams.statsLedgerStream]]
-    * uses the same write shape) rewrites exactly that drop's
-    * partition instead of appending a duplicate summary. Distinct
-    * drops never touch each other's partitions. */
+    * micro-batch that appends under `s"batch-$id"` — the
+    * [[graft.streaming.EventStreams.eachBatch]] contract) rewrites
+    * exactly that drop's partition instead of appending a duplicate
+    * summary. Distinct drops never touch each other's partitions. */
   def append(path: String, summary: DataFrame): Unit =
-    summary.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("drop_id")
-      .parquet(path)
+    graft.sources.PartitionedFiles.overwritePartitions(summary, path, Seq("drop_id"))
 
   /** Whole-corpus rollup from summaries alone: additive stats sum,
     * sketches merge. Works on any union of [[dropSummary]] frames —

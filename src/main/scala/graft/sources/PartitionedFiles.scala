@@ -116,6 +116,20 @@ object PartitionedFiles {
   def writeParquetPartitionedBy(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
 
+  /** Idempotent partitioned write: a DYNAMIC partition overwrite
+    * rewrites exactly the `partitionCols` values present in `df` and
+    * leaves every other partition under `path` untouched, so repeating
+    * the same write (a retried ingestion, a replayed micro-batch)
+    * replaces its own partitions instead of appending duplicates. The
+    * mode is a per-writer option — no session-global conf mutation.
+    * [[writeParquetPartitionedBy]] is the static form: it replaces the
+    * whole table. */
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
+
   /** Read a hive-partitioned parquet tree; partition columns come back
     * typed via partition discovery. Filter on them BEFORE anything
     * else so Catalyst turns the predicate into partition pruning. */

@@ -4,10 +4,12 @@ import java.io.File
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, StructField, StructType}
 
 import graft.operators.TableDiff
 import graft.quality.Validate
+import graft.streaming.EventStreams
 
 /** A publish/append lost the single-writer race: the store's live
   * pointer moved (or another writer claimed the commit slot) while
@@ -310,28 +312,22 @@ object Versioned {
     * Offsets ride the file source's checkpoint, so a restarted stream
     * resumes after the last version it processed and a replayed batch
     * re-presents the same rows with the same batchId — make the sink
-    * idempotent on (version, key), the usual foreachBatch contract.
+    * idempotent on (version, key), the
+    * [[graft.streaming.EventStreams.eachBatch]] contract.
     * Consume within the vacuum retention window (a diff against a
     * vacuumed version fails loudly, like any time travel). */
   def startChangeFeed(spark: SparkSession, root: String, checkpoint: String,
       key: Column, content: Column, keyName: String = "key",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    changeFeedStream(spark, root).writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val vs = batch.collect().map(_.getString(0)).flatMap {
-          case VersionRe(v) => Some(v.toInt)
-          case _ => None
-        }.sorted
+      trigger: Trigger = Trigger.AvailableNow())(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    EventStreams.eachBatch(changeFeedStream(spark, root), checkpoint, trigger = trigger) {
+      (batch, batchId) =>
         // versions whose DATA was vacuumed are skipped (their diffs
         // are unrecoverable pre-retention history); a readable version
         // whose PREDECESSOR is unreadable emits as an INITIAL SNAPSHOT
         // (every row `added`) — the Delta-style pattern that lets a
         // consumer start on a table whose early history was vacuumed
-        val usable = vs.filter(v => versionReadable(root, v))
+        val usable = feedVersions(batch).filter(v => versionReadable(root, v))
         if (usable.nonEmpty) {
           val diffs = usable.map { v =>
             val d =
@@ -346,8 +342,11 @@ object Versioned {
           }
           sink(diffs.reduce(_ unionByName _), batchId)
         }
-      }
-      .start()
+    }
+
+  /** The versions one change-feed micro-batch carries, ascending. */
+  private def feedVersions(batch: DataFrame): Seq[Int] =
+    batch.collect().toSeq.map(_.getString(0)).collect { case VersionRe(v) => v.toInt }.sorted
 
   /** REPLICATE `srcRoot` into `dstRoot` by tailing the source's
     * change feed — the composition the feed exists for: a downstream
@@ -370,21 +369,10 @@ object Versioned {
     * same parent → same rows), so a crash between apply and
     * checkpoint-advance cannot double-apply or tear. */
   def replicateStream(spark: SparkSession, srcRoot: String, dstRoot: String,
-      checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changeFeedStream(spark, srcRoot).writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val vs = batch.collect().map(_.getString(0)).flatMap {
-          case VersionRe(v) => Some(v.toInt)
-          case _ => None
-        }.sorted
-        vs.foreach(v => applyVersion(spark, srcRoot, dstRoot, v))
-      }
-      .start()
+      checkpoint: String, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    EventStreams.eachBatch(changeFeedStream(spark, srcRoot), checkpoint, trigger = trigger) {
+      (batch, _) => feedVersions(batch).foreach(v => applyVersion(spark, srcRoot, dstRoot, v))
+    }
 
   /** Is version v's DATA still readable (published and not
     * vacuumed)? Bucketed versions need every owner directory. */

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Per-user open-session accumulator for streaming sessionization.
   * Top-level (not nested/private) so Spark's state encoder can codegen
@@ -118,223 +118,75 @@ object EventStreams {
       .option("path", outputDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     q.runId.toString
   }
 
+  /** The one micro-batch primitive: run `body(batch, batchId)` on
+    * every micro-batch of `stream`, with source offsets and the batch
+    * commit log kept in `checkpointDir`. Every foreachBatch in graft
+    * goes through here — [[upsertToParquet]], [[mergeStream]], the
+    * change feeds of [[graft.sources.Versioned]] — and so does any
+    * "run a batch operator per trigger" pipeline: call the batch
+    * operator inside `body` (a scorer, a screen, a ledger append), so
+    * stream and batch results share one code path.
+    *
+    * Exactly-once contract (Structured Streaming): batch `id` is
+    * committed only after `body` returns. A throwing body fails the
+    * query with that error; a restart on the same checkpoint
+    * re-presents the SAME rows under the SAME id. Output is therefore
+    * exactly-once iff `body` is idempotent per id — for example a
+    * dynamic partition overwrite keyed by `s"batch-$id"`
+    * ([[graft.sources.PartitionedFiles.overwritePartitions]], the
+    * per-drop ledger appends), a semilattice fold
+    * ([[graft.dedup.ClusterLedger.append]],
+    * [[graft.sketch.Sketches.foldPriorityCandidates]]), or a merge of
+    * the same drop ([[graft.sources.Versioned.merge]]). A body that
+    * hands rows to a non-idempotent sink is at-least-once there.
+    *
+    * `mode` matters only above an aggregate (`Update` re-emits the
+    * changed groups); `trigger` defaults to back-to-back micro-batches,
+    * and `AvailableNow` drains what is there and stops. */
+  def eachBatch(stream: DataFrame, checkpointDir: String,
+      mode: OutputMode = OutputMode.Append(),
+      trigger: Trigger = Trigger.ProcessingTime(0L))(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(body)
+      .start()
+
+  /** Join a per-id score frame back onto the batch it was computed
+    * from: every batch column plus the score columns. The score side's
+    * id is renamed to a reserved name before the join, because
+    * dropping a bare "doc_id" would also drop a batch column of that
+    * name (drop-by-name removes every match). */
+  def withScores(batch: DataFrame, idCol: String, scores: DataFrame,
+      scoresId: String): DataFrame = {
+    val s = scores.withColumnRenamed(scoresId, "__scores_id")
+    batch.join(s, batch(idCol) === col("__scores_id")).drop("__scores_id")
+  }
+
   /** Stream → warehouse upsert: write a streaming aggregate to a
-    * partitioned parquet table in update mode via foreachBatch +
-    * DYNAMIC partition overwrite — each micro-batch rewrites exactly
-    * the partitions it touches (group re-aggregations replace stale
-    * rows), leaving the rest of the table untouched and batch-
-    * queryable throughout. The standard pattern when the sink must be
-    * plain parquet rather than a transactional table format. */
+    * partitioned parquet table in update mode, one dynamic partition
+    * overwrite per micro-batch — each batch rewrites exactly the
+    * partitions it touches (group re-aggregations replace stale rows),
+    * leaving the rest of the table untouched and batch-queryable
+    * throughout. The standard pattern when the sink must be plain
+    * parquet rather than a transactional table format. */
   def upsertToParquet(
       aggregated: DataFrame,
       path: String,
       checkpointDir: String,
       partitionCol: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    aggregated.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          // per-writer option — no session-global conf mutation
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCol)
-          .parquet(path)
-      }
-      .start()
-
-  /** Streaming corpus accounting: the streaming counterpart of
-    * [[graft.sketch.StatsLedger]] — every micro-batch of ingested
-    * documents appends its own per-group summary (counts + token sums
-    * + HLL register blobs) to the persisted ledger, with
-    * `drop_id = "batch-<id>"` from the CHECKPOINTED batch id. The
-    * write is a dynamic partition overwrite on drop_id, so a crash-
-    * replayed batch rewrites exactly its own ledger partition instead
-    * of appending a duplicate — the rollup
-    * ([[graft.sketch.StatsLedger.corpusStats]]) stays exactly-once
-    * without a transactional table format. Same batch-owned-state
-    * philosophy as [[novelDocsStream]]: the ledger is a plain parquet
-    * table the batch side reads with zero coordination, and corpus-
-    * lifetime distinct counts stay answerable without rescanning
-    * anything but summary rows. */
-  def statsLedgerStream(
-      docs: DataFrame,
-      groupCol: String,
-      keyCol: String,
-      tokens: org.apache.spark.sql.Column,
-      ledgerPath: String,
-      checkpointDir: String,
-      p: Int = 12
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // StatsLedger.append is a dynamic partition overwrite on
-        // drop_id — a crash-replayed batch rewrites its own ledger
-        // partition, keeping the rollup exactly-once
-        graft.sketch.StatsLedger.append(ledgerPath,
-          graft.sketch.StatsLedger
-            .dropSummary(batch, s"batch-$bid", col(groupCol), col(keyCol), tokens, p))
-      }
-      .start()
-
-  /** Streaming trend monitor (§2.7/38aa): each micro-batch appends
-    * its per-group EXACT integer regression sums to an
-    * [[graft.sketch.OlsLedger]] with drop_id = the CHECKPOINTED batch
-    * id (dynamic partition overwrite — a crash-replayed batch
-    * rewrites its own partition, so the additive sums stay
-    * exactly-once on plain parquet); `OlsLedger.trend` answers "is
-    * this stream's value drifting per key" from the ledger alone,
-    * bit-equal on slope and the Sxy/Sxx numerators to running the
-    * batch OLS over everything streamed. */
-  def olsTrendStream(
-      rows: DataFrame,
-      groupCol: String,
-      xCol: String,
-      yCol: String,
-      refX: Long,
-      ledgerPath: String,
-      checkpointDir: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        graft.sketch.OlsLedger.append(ledgerPath,
-          graft.sketch.OlsLedger.dropSummary(
-            batch.toDF(), s"batch-$bid", col(groupCol), col(xCol), col(yCol), refX))
-      }
-      .start()
-
-  /** Streaming priority sample (§2.7/38z): a fixed-size weighted
-    * sample maintained ACROSS the whole stream — the streaming form
-    * of [[graft.sketch.Sketches.prioritySample]]. The persisted
-    * ledger holds the top-(k+1) priority candidates seen so far;
-    * each micro-batch reduces to its own top-(k+1)
-    * ([[graft.sketch.Sketches.priorityCandidates]]), merges with the
-    * ledger by key (the larger weight wins — priorities are per-key
-    * deterministic, so a re-delivered row collapses instead of
-    * occupying two slots), and re-ranks. Mergeability makes the
-    * update order-independent AND replay-idempotent: a crash-retried
-    * batch merges rows the ledger already absorbed, and
-    * top-(k+1)(merged ∪ batch) = merged. The candidate pool is
-    * ≤ 2(k+1) rows, so the merge is driver-trivial; it materializes
-    * (k+1 rows) before the overwrite because the new ledger is
-    * derived from the file being replaced.
-    *
-    * Read the current sample with [[currentPrioritySample]] — τ and
-    * the Horvitz-Thompson estimates finalize over the stored
-    * candidates exactly as the batch operator does. */
-  def prioritySampleStream(
-      rows: DataFrame,
-      keyCol: String,
-      weightCol: String,
-      k: Int,
-      ledgerPath: String,
-      checkpointDir: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val batchCands = graft.sketch.Sketches
-          .priorityCandidates(batch.toDF(), col(keyCol), col(weightCol), k)
-        val pool =
-          if (new java.io.File(ledgerPath).exists())
-            spark.read.parquet(ledgerPath).select("key", "w").unionByName(
-              batchCands.select("key", "w"))
-          else batchCands.select("key", "w")
-        val merged = graft.sketch.Sketches.priorityCandidates(
-          pool.groupBy("key").agg(max(col("w")).as("w")), col("key"), col("w"), k)
-        // ≤ k+1 rows: materialize, then overwrite the file being read
-        val rowsOut = merged.collect().toSeq
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rowsOut, 1), merged.schema)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(ledgerPath)
-      }
-      .start()
-
-  /** The current sample of a [[prioritySampleStream]] ledger:
-    * (key, w, pri, tau, est), bit-equal to the batch operator over
-    * everything streamed so far PROVIDED keys are unique across the
-    * stream: the ledger merge collapses duplicate keys to max(w) —
-    * that is what makes a crash-replayed batch idempotent — while the
-    * batch operator keeps same-key rows as independent candidates
-    * occupying separate top-(k+1) slots. Streams whose rows are
-    * observations of a keyed entity (the intended use) satisfy this;
-    * for multiset semantics make the key unique per row upstream
-    * (e.g. append an event id). */
-  def currentPrioritySample(spark: org.apache.spark.sql.SparkSession,
-      ledgerPath: String, k: Int): DataFrame =
-    graft.sketch.Sketches.sampleFromCandidates(spark.read.parquet(ledgerPath), k)
-
-  /** Streaming semantic-decontamination screen: each micro-batch of
-    * documents is embedded in-row (signed hashed BoW — narrow, zero
-    * shuffles) and scored against the STATIC benchmark side; rows
-    * with any bench pair at cosine ≥ tau are dropped before the sink.
-    * The foreachBatch form of [[graft.dedup.Decontam.semanticContamination]]
-    * on the batch-owned-model pattern (the benchmark table is state
-    * owned by the batch pipeline, exactly like novelDocsStream's
-    * corpus); catches the paraphrase leakage the n-gram screen form
-    * (38u-style rule screens) cannot. Exactly-once to the sink from
-    * the checkpointed batch ids. `bench` must carry the same text/id
-    * column names as the stream. */
-  def semanticScreenStream(
-      docs: DataFrame,
-      bench: DataFrame,
-      textCol: String,
-      idCol: String,
-      dim: Int,
-      tau: Double,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-        val flagged = graft.dedup.Decontam.semanticContamination(
-            b, col(textCol), col(idCol), bench, col(textCol), col(idCol), dim, tau)
-          .select(col("doc_id").as("__flagged_id")).distinct()
-        sink(b.join(flagged, col(idCol) === col("__flagged_id"), "left_anti"))
-      }
-      .start()
-
-  /** Streaming incremental clustering: every micro-batch of near-dup
-    * pairs (e.g. the output of a band-index probe on a crawl drop) is
-    * merged into the persisted [[graft.dedup.ClusterLedger]] — the
-    * foreachBatch form of the batch append, so cluster labels stay
-    * current as drops arrive without ever recomputing components
-    * corpus-wide. Exactly-once semantics come for free from the
-    * ledger's own algebra rather than the checkpoint alone: min-label
-    * merging is a semilattice fold, so a crash-replayed batch merges
-    * edges the ledger already absorbed and changes nothing
-    * (StreamingSpec pins batch-parity and replay idempotence). */
-  def clusterStream(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      ledgerPath: String,
-      checkpointDir: String,
-      numBuckets: Int = 64
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    pairs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.dedup.ClusterLedger.append(ledgerPath, batch.toDF(), aCol, bCol, numBuckets)
-        ()
-      }
-      .start()
+  ): StreamingQuery =
+    eachBatch(aggregated, checkpointDir, OutputMode.Update()) { (batch, _) =>
+      graft.sources.PartitionedFiles.overwritePartitions(batch, path, Seq(partitionCol))
+    }
 
   /** Streaming key-level MERGE publish (38ae) — the CDC-apply tail of
     * the warehouse story: each micro-batch is a drop applied to the
@@ -342,320 +194,27 @@ object EventStreams {
     * (upsert by key; rows where `deletedCol` is true delete), so a
     * change stream keeps a 100 TB corpus current at drop cost while
     * every reader stays pinned to a consistent published version.
-    * Exactly-once follows from merge semantics plus Structured
-    * Streaming's replay discipline: only the LAST uncommitted batch
-    * is ever re-run, and re-merging the SAME drop is idempotent — the
-    * survivor anti-join ∪ identical upserts reproduces the identical
-    * table, the replay just publishes a version whose content equals
-    * its parent's — so a crash between the merge's atomic manifest
-    * swap and the checkpoint advance can neither tear nor
-    * double-apply a drop. Batches must be key-unique (merge refuses
-    * otherwise); empty batches publish nothing. */
+    * Exactly-once follows from merge semantics plus the [[eachBatch]]
+    * replay discipline: only the LAST uncommitted batch is ever re-run,
+    * and re-merging the SAME drop is idempotent — the survivor
+    * anti-join ∪ identical upserts reproduces the identical table, the
+    * replay just publishes a version whose content equals its
+    * parent's — so a crash between the merge's atomic manifest swap
+    * and the checkpoint advance can neither tear nor double-apply a
+    * drop. Batches must be key-unique (a refused merge fails the
+    * query); empty batches publish nothing. */
   def mergeStream(
       drops: DataFrame,
       root: String,
       deletedCol: String,
       checkpointDir: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    drops.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val r = graft.sources.Versioned.merge(
-            batch.toDF(), root, org.apache.spark.sql.functions.col(deletedCol))
-          require(r.merged, s"streaming merge refused: ${r.reason.getOrElse("")}")
-        }
-        ()
+  ): StreamingQuery =
+    eachBatch(drops, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val r = graft.sources.Versioned.merge(batch, root, col(deletedCol))
+        require(r.merged, s"streaming merge refused: ${r.reason.getOrElse("")}")
       }
-      .start()
-
-  /** Streaming novelty screen: the streaming counterpart of
-    * `Dedup.minhashNovel` — every micro-batch of incoming documents is
-    * screened against the STATIC corpus by MinHash-LSH band collision
-    * and only the novel rows reach the sink. Runs through foreachBatch
-    * so each trigger executes the exact batch operator (banding both
-    * sides, probing corpus band keys); there is NO state store — the
-    * corpus table is the state, owned and refreshed by the batch
-    * pipeline, which is the operationally sane place for a
-    * multi-terabyte dedup index to live. Exactly-once to the sink
-    * comes from the checkpointed batch ids as usual. */
-  def novelDocsStream(
-      docs: DataFrame,
-      corpus: DataFrame,
-      textCol: String,
-      idCol: String,
-      checkpointDir: String,
-      shingleN: Int = 3,
-      numBands: Int = 4,
-      rowsPerBand: Int = 2
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.dedup.Dedup.minhashNovel(
-          corpus, batch, col(textCol), col(idCol), shingleN, numBands, rowsPerBand))
-      }
-      .start()
-
-  /** Streaming unigram-LM quality scoring: every micro-batch of
-    * incoming documents is scored against a STATIC reference LM — the
-    * (token, cnt) frequency table of the standing corpus
-    * ([[graft.text.TextAnalysis.tokenFrequencies]]), trained and
-    * refreshed by the batch pipeline. Same no-state-store philosophy
-    * as [[novelDocsStream]]: a multi-terabyte corpus distribution is
-    * batch-owned state, not stream state; each trigger runs the exact
-    * batch scorer ([[graft.text.TextAnalysis.lmScoreAgainst]] — new
-    * tokens count as frequency 0, maximally rare). Sink rows carry
-    * every batch column plus n_tokens / n_rare / mean_freq. */
-  def lmScoredStream(
-      docs: DataFrame,
-      referenceFreq: DataFrame,
-      textCol: String,
-      idCol: String,
-      rareMax: Long,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // reserved join name: dropping a bare "doc_id" would also drop
-        // a batch column of that name (drop-by-name removes all)
-        val scores = graft.text.TextAnalysis.lmScoreAgainst(
-            batch, col(textCol), col(idCol), referenceFreq, rareMax)
-          .withColumnRenamed("doc_id", "__lm_doc_id")
-        sink(batch.join(scores, batch(idCol) === col("__lm_doc_id")).drop("__lm_doc_id"))
-      }
-      .start()
-
-  /** Streaming bigram-LM quality scoring — [[lmScoredStream]] one
-    * model order up: each micro-batch is scored against a STATIC
-    * reference bigram table
-    * ([[graft.text.TextAnalysis.bigramFrequencies]], trained on the
-    * standing corpus by the batch pipeline); unseen bigrams count as
-    * frequency 0, maximally rare. Catches the incoming shuffled /
-    * template-stitched docs whose unigram distribution looks fine.
-    * Docs with fewer than 2 tokens carry no bigram evidence and are
-    * absent from the sink rows. */
-  def bigramScoredStream(
-      docs: DataFrame,
-      referenceFreq: DataFrame,
-      textCol: String,
-      idCol: String,
-      rareMax: Long,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scores = graft.text.TextAnalysis.bigramLmScoreAgainst(
-            batch, col(textCol), col(idCol), referenceFreq, rareMax)
-          .withColumnRenamed("doc_id", "__bg_doc_id")
-        sink(batch.join(scores, batch(idCol) === col("__bg_doc_id")).drop("__bg_doc_id"))
-      }
-      .start()
-
-  /** Streaming Naive-Bayes classification: each micro-batch of
-    * incoming documents is scored against a STATIC trained
-    * [[graft.quality.NaiveBayes.model]] frame (fit on the standing
-    * corpus by the batch pipeline — the batch-owned-model philosophy
-    * of [[lmScoredStream]]/[[classifiedStream]]). Runs the exact
-    * batch scorer ([[graft.quality.NaiveBayes.scoreAgainst]]), so
-    * stream and batch verdicts are bit-identical; sink rows carry
-    * every batch column plus pred_label / score. */
-  /** Streaming DSIR scoring (38s): each micro-batch of incoming
-    * documents gets its integer importance weight against a STATIC
-    * [[graft.quality.Dsir.logRatios]] grid — the trained half is
-    * batch-owned (train once on (target, standing corpus), refresh on
-    * the batch cadence), the stream pays one broadcast join + one
-    * per-doc sum per trigger. Bit-equal to the batch scorer by
-    * construction (same code path), spec-gated. Selection policy
-    * (threshold, top-k within a window) is the caller's: sink rows
-    * carry every batch column plus `iw`. */
-  def dsirScoredStream(
-      docs: DataFrame,
-      ratios: DataFrame,
-      textCol: String,
-      idCol: String,
-      checkpointDir: String,
-      buckets: Int = 512
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val w = graft.quality.Dsir
-          .importanceWeights(batch, col(textCol), col(idCol), ratios, buckets)
-          .withColumnRenamed("doc_id", "__dsir_doc_id")
-        sink(batch.join(w, batch(idCol) === col("__dsir_doc_id")).drop("__dsir_doc_id"))
-      }
-      .start()
-
-  /** Streaming heuristic-rule screen (38u): every incoming document
-    * gets its Gopher / C4 / repetition verdicts
-    * ([[graft.quality.HeuristicRules.ruleVerdicts]]) — completely
-    * STATELESS (all three batteries are in-row scan predicates), so
-    * the stream needs no state store, no watermark, and no model
-    * refresh; per-batch results are bit-equal to the batch operator
-    * by construction (same code path). The crawl-frontier shape:
-    * screen documents the moment they arrive, before anything
-    * corpus-sized (dedup, DSIR) touches them. */
-  def ruleScreenedStream(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      checkpointDir: String,
-      minWords: Int = 50,
-      maxWords: Int = 100000
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.quality.HeuristicRules.ruleVerdicts(
-          batch, col(textCol), col(idCol), minWords, maxWords))
-      }
-      .start()
-
-  /** Streaming phrase screen (38v): each micro-batch of documents is
-    * searched for a STATIC phrase set ([[graft.text.Search
-    * .phraseOccurrences]] — the batch-owned-model pattern: the phrase
-    * list is the query, refreshed on batch cadence). Sink rows are
-    * (phrase, doc_id, n_occurrences) per trigger — the
-    * frontier-time attribution / targeted-decontamination probe,
-    * bit-equal to the batch operator by shared code path. */
-  def phraseFlaggedStream(
-      docs: DataFrame,
-      phrases: DataFrame,
-      textCol: String,
-      idCol: String,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.text.Search.phraseOccurrences(
-          batch, col(textCol), col(idCol), phrases, col("phrase"), col("phrase")))
-      }
-      .start()
-
-  /** Streaming Bloom-ledger screen (38t): every micro-batch is
-    * flagged against the STATIC merged register of the standing
-    * corpus ([[graft.sketch.BloomLedger.merged]]) — zero corpus
-    * access per trigger, `might_seen = false` rows are CERTAINLY
-    * novel (the no-false-negative guarantee is per-batch identical
-    * to the batch operator, same code path). The register is
-    * batch-owned like every other model here; a pipeline that must
-    * also fold the stream's OWN keys into the register appends
-    * per-batch [[graft.sketch.BloomLedger.dropSummary]] rows keyed by
-    * batch id (the [[statsLedgerStream]] idempotent-append shape). */
-  def bloomScreenedStream(
-      docs: DataFrame,
-      mergedBloom: DataFrame,
-      keyCol: String,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.sketch.BloomLedger.screen(batch, col(keyCol), mergedBloom))
-      }
-      .start()
-
-  /** Streaming KMV overlap monitor (38w): each micro-batch is
-    * sketched (one aggregate) and its full set-algebra report vs the
-    * STATIC merged history register ([[graft.sketch.KmvLedger
-    * .merged]]) lands on the sink — "what fraction of this trigger
-    * is already-seen mass", per trigger, with zero corpus access;
-    * bit-equal to [[graft.sketch.KmvLedger.overlapVsHistory]] by
-    * shared code path. The register is batch-owned like every other
-    * model here; folding the stream's OWN drops into the ledger is
-    * the [[statsLedgerStream]] idempotent-append shape with
-    * [[graft.sketch.KmvLedger.dropSummary]] rows keyed by batch id. */
-  def kmvOverlapStream(
-      docs: DataFrame,
-      mergedSketch: DataFrame,
-      textCol: String,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.sketch.KmvLedger.overlapVsHistory(batch, col(textCol), mergedSketch))
-      }
-      .start()
-
-  /** Streaming distribution-drift monitor (38x): each micro-batch's
-    * bucket profile is compared against the batch-owned STATIC
-    * reference profile ([[graft.operators.TableDiff
-    * .driftAgainstProfile]] — build the (bucket, n_ref) summary once,
-    * never rescan the reference). Sink rows are the full per-bucket
-    * drift report per trigger — "is this crawl slice shaped like the
-    * corpus we trained the gates on", at frontier time; bit-equal to
-    * the batch operator by shared code path. */
-  def driftMonitorStream(
-      docs: DataFrame,
-      refProfile: DataFrame,
-      bucket: DataFrame => org.apache.spark.sql.Column,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        sink(graft.operators.TableDiff.driftAgainstProfile(
-          refProfile, batch, bucket(batch)))
-      }
-      .start()
-
-  def nbScoredStream(
-      docs: DataFrame,
-      model: DataFrame,
-      textCol: String,
-      idCol: String,
-      checkpointDir: String,
-      buckets: Int = 256
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scores = graft.quality.NaiveBayes
-          .scoreAgainst(batch, col(textCol), col(idCol), model, buckets)
-          .withColumnRenamed("doc_id", "__nb_doc_id")
-        sink(batch.join(scores, batch(idCol) === col("__nb_doc_id")).drop("__nb_doc_id"))
-      }
-      .start()
-
-  /** Streaming nearest-centroid classification: each micro-batch of
-    * incoming embedding vectors is scored against a STATIC
-    * [[graft.similarity.Similarity.labelCentroids]] frame (trained on
-    * the standing corpus by the batch pipeline — same batch-owned-
-    * model philosophy as [[lmScoredStream]]). Runs the exact batch
-    * scorer ([[graft.similarity.Similarity.classifyAgainst]], no
-    * self-exclusion: incoming vectors are outside the training set),
-    * so stream and batch verdicts are bit-identical. Sink rows carry
-    * every batch column plus pred_label / best_cos. */
-  def classifiedStream(
-      vectors: DataFrame,
-      centroids: DataFrame,
-      checkpointDir: String
-  )(sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scores = graft.similarity.Similarity.classifyAgainst(batch, centroids)
-          .withColumnRenamed("vec_id", "__cc_vec_id")
-        sink(batch.join(scores, batch("vec_id") === col("__cc_vec_id")).drop("__cc_vec_id"))
-      }
-      .start()
+    }
 
   /** Windowed per-source token counts — the streaming half of
     * temperature mixture monitoring: a watermarked tumbling-window

@@ -210,6 +210,26 @@ class ClusterLedgerSpec extends SparkSpecBase {
     }
   }
 
+  test("labels reads every owning directory with the recorded schema: zero jobs, rows equal the inferred read") {
+    val path = tmp()
+    ClusterLedger.append(path, Seq((1L, 2L), (3L, 4L)).toDF("a", "b"), "a", "b", numBuckets = 8)
+    ClusterLedger.append(path, Seq((5L, 6L), (7L, 8L)).toDF("a", "b"), "a", "b", numBuckets = 8)
+    assert(ClusterLedger.readManifest(path).get.owner.filter(_ > 0).distinct.size === 2,
+      "the two appends must own different directories")
+    val (frame, jobs) = JobCount(spark)(ClusterLedger.labels(spark, path))
+    assert(jobs === 0, s"building labels ran $jobs jobs")
+    val recorded = frame.as[(Long, Long)].collect().toSet
+    assert(recorded === Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L),
+      (5L, 5L), (6L, 5L), (7L, 7L), (8L, 7L)))
+    // the same files under a manifest written before the schema was
+    // recorded: labels falls back to footer inference
+    val mf = new java.io.File(path, "_cluster_manifest.json").toPath
+    val legacy = java.nio.file.Files.readString(mf).replaceAll(""",\s*"schema"\s*:\s*"[^"]*"""", "")
+    java.nio.file.Files.writeString(mf, legacy)
+    assert(ClusterLedger.readManifest(path).get.labelSchema.isEmpty)
+    assert(ClusterLedger.labels(spark, path).as[(Long, Long)].collect().toSet === recorded)
+  }
+
   test("appendRetry: racing writers ALL converge to connectedComponents of the union") {
     val path = tmp()
     ClusterLedger.append(path, Seq((1L, 2L)).toDF("a", "b"), "a", "b", numBuckets = 8)

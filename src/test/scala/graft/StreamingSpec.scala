@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.CoreOps._
 import graft.operators.Relational._
@@ -225,8 +225,8 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     val ckpt = java.nio.file.Files.createTempDirectory("novel_ckpt").toString
-    val q = EventStreams.novelDocsStream(
-      mem.toDF().toDF("doc_id", "text"), corpus, "text", "doc_id", ckpt) { novel =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val novel = graft.dedup.Dedup.minhashNovel(corpus, batch, col("text"), col("doc_id"))
       got.synchronized { got ++= novel.select("doc_id").as[Long].collect() }
     }
     // batch 1: one exact dup of the corpus + one novel doc
@@ -253,9 +253,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int, Int)]
     val ckpt = java.nio.file.Files.createTempDirectory("rules_ckpt").toString
-    val q = EventStreams.ruleScreenedStream(
-      mem.toDF().toDF("doc_id", "text"), "text", "doc_id", ckpt,
-      minWords = 5, maxWords = 500) { v =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val v = graft.quality.HeuristicRules.ruleVerdicts(
+        batch, col("text"), col("doc_id"), minWords = 5, maxWords = 500)
       got.synchronized {
         got ++= v.select("doc_id", "pass_gopher", "pass_c4", "pass_repetition")
           .as[(Long, Int, Int, Int)].collect()
@@ -284,8 +284,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("phrase_ckpt").toString
-    val q = EventStreams.phraseFlaggedStream(
-      mem.toDF().toDF("doc_id", "text"), phrases, "text", "doc_id", ckpt) { hits =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val hits = graft.text.Search.phraseOccurrences(
+        batch, col("text"), col("doc_id"), phrases, col("phrase"), col("phrase"))
       got.synchronized {
         got ++= hits.select("phrase", "doc_id", "n_occurrences")
           .as[(String, Long, Long)].collect()
@@ -315,8 +316,8 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[String]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("kmv_stream_ckpt").toString
-    val q = EventStreams.kmvOverlapStream(
-      mem.toDF().toDF("text"), merged, "text", ckpt) { rep =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("text"), ckpt) { (batch, _) =>
+      val rep = KmvLedger.overlapVsHistory(batch, col("text"), merged)
       got.synchronized {
         got ++= rep.select("common", "jacc_pm", "est_history")
           .as[(Long, Long, Long)].collect()
@@ -344,8 +345,8 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[Long]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("drift_ckpt").toString
-    val q = EventStreams.driftMonitorStream(
-      mem.toDF().toDF("b"), profile, df => df("b"), ckpt) { rep =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("b"), ckpt) { (batch, _) =>
+      val rep = TableDiff.driftAgainstProfile(profile, batch, batch("b"))
       got.synchronized {
         got ++= rep.select("bucket", "n_new", "share_new_pm", "drift")
           .as[(Long, Long, Long, Long)].collect()
@@ -371,9 +372,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
     val ckpt = java.nio.file.Files.createTempDirectory("lm_ckpt").toString
-    val q = EventStreams.lmScoredStream(
-      mem.toDF().toDF("doc_id", "text"), refFreq, "text", "doc_id",
-      rareMax = 1L, checkpointDir = ckpt) { scored =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val scored = EventStreams.withScores(batch, "doc_id", graft.text.TextAnalysis
+        .lmScoreAgainst(batch, col("text"), col("doc_id"), refFreq, rareMax = 1L), "doc_id")
       got.synchronized {
         got ++= scored.select(col("doc_id"), col("n_tokens"), col("n_rare"), col("mean_freq"))
           .as[(Long, Long, Long, Double)].collect()
@@ -408,9 +409,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
     val ckpt = java.nio.file.Files.createTempDirectory("bg_ckpt").toString
-    val q = EventStreams.bigramScoredStream(
-      mem.toDF().toDF("doc_id", "text"), refFreq, "text", "doc_id",
-      rareMax = 1L, checkpointDir = ckpt) { scored =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val scored = EventStreams.withScores(batch, "doc_id", graft.text.TextAnalysis
+        .bigramLmScoreAgainst(batch, col("text"), col("doc_id"), refFreq, rareMax = 1L), "doc_id")
       got.synchronized {
         got ++= scored.select(col("doc_id"), col("n_bigrams"), col("n_rare"), col("mean_freq"))
           .as[(Long, Long, Long, Double)].collect()
@@ -453,7 +454,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val ckpt = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     val stream = Similarity.prepareQuantized(
       mem.toDF().toDF("vec_id", "embedding"), col("embedding"), col("vec_id"))
-    val q = EventStreams.classifiedStream(stream, centroids, ckpt) { scored =>
+    val q = EventStreams.eachBatch(stream, ckpt) { (batch, _) =>
+      val scored = EventStreams.withScores(
+        batch, "vec_id", Similarity.classifyAgainst(batch, centroids), "vec_id")
       got.synchronized {
         got ++= scored.select(col("vec_id"), col("pred_label"), col("best_cos"))
           .as[(Long, Int, Double)].collect()
@@ -489,8 +492,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("nb_ckpt").toString
-    val q = EventStreams.nbScoredStream(
-      mem.toDF().toDF("doc_id", "text"), model, "text", "doc_id", ckpt) { scored =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val scored = EventStreams.withScores(batch, "doc_id",
+        NaiveBayes.scoreAgainst(batch, col("text"), col("doc_id"), model), "doc_id")
       got.synchronized {
         got ++= scored.select(col("doc_id"), col("pred_label"), col("score"))
           .as[(Long, String, Long)].collect()
@@ -523,8 +527,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("dsir_ckpt").toString
-    val q = EventStreams.dsirScoredStream(
-      mem.toDF().toDF("doc_id", "text"), ratios, "text", "doc_id", ckpt, buckets = 64) { w =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val w = EventStreams.withScores(batch, "doc_id",
+        Dsir.importanceWeights(batch, col("text"), col("doc_id"), ratios, 64), "doc_id")
       got.synchronized { got ++= w.select(col("doc_id"), col("iw")).as[(Long, Long)].collect() }
     }
     mem.addData((10L, "alpha beta gamma"), (11L, "epsilon zeta qqq"))
@@ -552,8 +557,8 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
     val ckpt = java.nio.file.Files.createTempDirectory("bloom_ckpt").toString
-    val q = EventStreams.bloomScreenedStream(
-      mem.toDF().toDF("doc_id", "text"), merged, "text", ckpt) { s =>
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val s = BloomLedger.screen(batch, col("text"), merged)
       got.synchronized {
         got ++= s.select(col("doc_id"), col("might_seen")).as[(Long, Boolean)].collect()
       }
@@ -973,6 +978,46 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     assert(all.toSet === Set((1L, 20L), (2L, 40L), (3L, 60L), (4L, 80L), (5L, 100L)))
   }
 
+  test("eachBatch: a throwing body fails the query; a restart re-delivers that batch id with the same rows") {
+    // the exactly-once contract every micro-batch body relies on: a
+    // batch is committed only after its body returns, so a failure
+    // surfaces to the caller and the restart on the same checkpoint
+    // re-presents the identical batch
+    val root = java.nio.file.Files.createTempDirectory("graft_eachbatch").toString
+    val in = s"$root/in"; val ckpt = s"$root/ckpt"
+    new java.io.File(in).mkdirs()
+    def addFile(name: String, ids: Seq[Long], mtime: Long): Unit = {
+      val p = java.nio.file.Paths.get(in, name)
+      java.nio.file.Files.writeString(p, ids.map(i => s"""{"id":$i}""").mkString("\n"))
+      java.nio.file.Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime.fromMillis(mtime))
+    }
+    // distinct mtimes + maxFilesPerTrigger=1 pin batch 0 = a, batch 1 = b
+    addFile("a.json", Seq(1L, 2L), 1700000000000L)
+    addFile("b.json", Seq(3L, 4L), 1700000060000L)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
+    def run(): Unit = {
+      val stream = spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).json(in)
+      EventStreams.eachBatch(stream, ckpt, trigger = Trigger.AvailableNow()) { (batch, id) =>
+        val firstDelivery = seen.synchronized {
+          seen += id -> batch.as[Long].collect().toSet
+          seen.count(_._1 == id) == 1
+        }
+        if (id == 1L && firstDelivery) sys.error("injected body failure")
+      }.awaitTermination()
+    }
+    def mentionsFailure(t: Throwable): Boolean =
+      t != null && (Option(t.getMessage).exists(_.contains("injected body failure")) ||
+        mentionsFailure(t.getCause))
+    val err = intercept[Exception](run())
+    assert(mentionsFailure(err), s"the body's error must surface, got: $err")
+    assert(seen.toList === List(0L -> Set(1L, 2L), 1L -> Set(3L, 4L)))
+    run()
+    // batch 0 was committed and is not replayed; batch 1 comes back
+    // under the same id with the same rows
+    assert(seen.toList === List(0L -> Set(1L, 2L), 1L -> Set(3L, 4L), 1L -> Set(3L, 4L)))
+  }
+
   test("upsertToParquet: restart recovers aggregation state from the checkpoint") {
     // stop between micro-batches, land data while the query is down,
     // restart against the same checkpoint: the streaming aggregate's
@@ -1018,9 +1063,10 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, String, Long)] // (doc_id, grp, toks)
     val tmp = java.nio.file.Files.createTempDirectory("ledger_stream").toString
     val (path, ckpt) = (s"$tmp/ledger", s"$tmp/ckpt")
-    val q = EventStreams.statsLedgerStream(
-      mem.toDF().toDF("doc_id", "grp", "toks"),
-      "grp", "doc_id", col("toks"), path, ckpt)
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "grp", "toks"), ckpt) { (batch, id) =>
+      StatsLedger.append(path, StatsLedger.dropSummary(
+        batch, s"batch-$id", col("grp"), col("doc_id"), col("toks")))
+    }
     val b1 = (0L until 2000L).map(i => (i, (i % 2).toString, 5L))
     val b2 = (1000L until 4000L).map(i => (i, (i % 2).toString, 5L)) // overlaps b1
     mem.addData(b1: _*); q.processAllAvailable()
@@ -1060,8 +1106,10 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val tmp = java.nio.file.Files.createTempDirectory("ols_stream").toString
     val (path, ckpt) = (s"$tmp/ledger", s"$tmp/ckpt")
     val refX = 1000L
-    val q = EventStreams.olsTrendStream(
-      mem.toDF().toDF("grp", "x", "y"), "grp", "x", "y", refX, path, ckpt)
+    val q = EventStreams.eachBatch(mem.toDF().toDF("grp", "x", "y"), ckpt) { (batch, id) =>
+      OlsLedger.append(path, OlsLedger.dropSummary(
+        batch, s"batch-$id", col("grp"), col("x"), col("y"), refX))
+    }
     val rnd = new scala.util.Random(53)
     val b1 = (0 until 300).map(_ =>
       (s"g${rnd.nextInt(3)}", 1000L + rnd.nextInt(200), rnd.nextInt(500).toLong))
@@ -1101,8 +1149,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val tmp = java.nio.file.Files.createTempDirectory("prio_stream").toString
     val (path, ckpt) = (s"$tmp/sample", s"$tmp/ckpt")
     val k = 5
-    val q = EventStreams.prioritySampleStream(
-      mem.toDF().toDF("key", "w"), "key", "w", k, path, ckpt)
+    val q = EventStreams.eachBatch(mem.toDF().toDF("key", "w"), ckpt) { (batch, _) =>
+      Sketches.foldPriorityCandidates(path, batch, col("key"), col("w"), k)
+    }
     val rnd = new scala.util.Random(41)
     val b1 = (0L until 300L).map(i => (i, 1L + rnd.nextInt(1000000).toLong))
     val b2 = (300L until 700L).map(i => (i, 1L + rnd.nextInt(1000000).toLong))
@@ -1110,7 +1159,7 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     mem.addData(b2: _*); q.processAllAvailable()
     q.stop()
 
-    val streamed = EventStreams.currentPrioritySample(spark, path, k)
+    val streamed = Sketches.sampleFromCandidates(spark.read.parquet(path), k)
       .orderBy("key").as[(Long, Long, Long, Long, Long)].collect().toSeq
     val direct = Sketches.prioritySample(
         (b1 ++ b2).toDF("key", "w"), col("key"), col("w"), k)
@@ -1118,18 +1167,13 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     assert(streamed === direct)
     assert(streamed.size === k)
 
-    // crash-replay: merging a batch the ledger already absorbed must
+    // crash-replay: folding a batch the ledger already absorbed must
     // leave the candidate set bit-identical
-    val before = spark.read.parquet(path).orderBy("key")
+    def ledger() = spark.read.parquet(path).orderBy("key")
       .as[(Long, Long, Long)].collect().toSeq
-    val again = Sketches.priorityCandidates(
-      spark.read.parquet(path).select("key", "w")
-        .unionByName(Sketches.priorityCandidates(
-          b2.toDF("key", "w"), col("key"), col("w"), k).select("key", "w"))
-        .groupBy("key").agg(max(col("w")).as("w")),
-      col("key"), col("w"), k)
-      .orderBy("key").as[(Long, Long, Long)].collect().toSeq
-    assert(again === before)
+    val before = ledger()
+    Sketches.foldPriorityCandidates(path, b2.toDF("key", "w"), col("key"), col("w"), k)
+    assert(ledger() === before)
   }
 
   test("semanticScreenStream drops the paraphrase the gram screens cannot see, batch-parity") {
@@ -1138,10 +1182,10 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
       .toDF("doc_id", "text")
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = EventStreams.semanticScreenStream(
-      mem.toDF().toDF("doc_id", "text"), bench, "text", "doc_id",
-      dim = 64, tau = 0.99,
-      checkpointDir = java.nio.file.Files.createTempDirectory("semscr").toString) { out =>
+    val ckpt = java.nio.file.Files.createTempDirectory("semscr").toString
+    val q = EventStreams.eachBatch(mem.toDF().toDF("doc_id", "text"), ckpt) { (batch, _) =>
+      val out = graft.dedup.Decontam.decontaminateSemantic(batch, col("text"), col("doc_id"),
+        bench, col("text"), col("doc_id"), dim = 64, tau = 0.99)
       got.synchronized { got ++= out.select("doc_id").as[Long].collect() }
     }
     val rows = Seq(
@@ -1164,8 +1208,9 @@ class StreamingSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterEach 
     val mem = MemoryStream[(Long, Long)] // near-dup pairs (a, b)
     val tmp = java.nio.file.Files.createTempDirectory("cluster_stream").toString
     val (path, ckpt) = (s"$tmp/ledger", s"$tmp/ckpt")
-    val q = EventStreams.clusterStream(
-      mem.toDF().toDF("a", "b"), "a", "b", path, ckpt, numBuckets = 8)
+    val q = EventStreams.eachBatch(mem.toDF().toDF("a", "b"), ckpt) { (batch, _) =>
+      graft.dedup.ClusterLedger.append(path, batch, "a", "b", numBuckets = 8)
+    }
     val b1 = Seq((1L, 2L), (3L, 4L), (10L, 10L))
     val b2 = Seq((2L, 3L), (5L, 6L), (4L, 20L)) // bridges {1,2}+{3,4}, adds {5,6}, attaches 20
     mem.addData(b1: _*); q.processAllAvailable()
